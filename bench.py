@@ -26,17 +26,16 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from project_bigdata_spark.plans.catalog import load_all  # noqa: E402
-from project_bigdata_spark.session import get_spark  # noqa: E402
+from project_bigdata_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 RUNS = int(os.environ.get("SPARK_GRAFT_RUNS", "3"))
 
 
 def main() -> None:
     specs = load_all()
     headliners = [s for s in specs.values() if s.headline]
-    spark = get_spark(app_name="bench", cpus=CPUS)
+    spark = get_spark(app_name="bench")
 
     # warm-up: touch every input file once (parquet footer + JVM JIT)
     for s in headliners:
@@ -83,7 +82,7 @@ def main() -> None:
                 "raw_runs": raw,
                 "loadavg_before": [round(x, 2) for x in load_before],
                 "loadavg_after": [round(x, 2) for x in load_after],
-                "cpus": CPUS,
+                "cpus": DEFAULT_CPUS,
             }
         )
     )

@@ -47,12 +47,3 @@ def pairs_to_map(pairs: Column) -> Column:
     hour with two readings of one type.)
     """
     return F.map_from_entries(pairs)
-
-
-def array_lookup(keys: Column, values: Column, key: str) -> Column:
-    """F6: value of ``key`` in parallel arrays, NULL if absent.
-
-    Replaces the reference's Python index loop (data_loader.py:177-194)
-    with ``element_at(map_from_arrays(...))`` — a codegen'd expression.
-    """
-    return F.element_at(F.map_from_arrays(keys, values), F.lit(key))

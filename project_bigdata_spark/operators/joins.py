@@ -21,7 +21,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -33,13 +33,6 @@ def dim_enrich(fact: DataFrame, dim: DataFrame, on: str | list[str]) -> DataFram
     normalized in storage and is broadcast at query time.
     """
     return fact.join(F.broadcast(dim), on=on, how="inner")
-
-
-def equi_join(
-    left: DataFrame, right: DataFrame, on: str | list[str] | Column, how: str = "inner"
-) -> DataFrame:
-    """Plain equi-join, physical strategy left to Catalyst/AQE."""
-    return left.join(right, on=on, how=how)
 
 
 def semi_join(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFrame:

@@ -21,7 +21,6 @@ through the Python worker without materializing a partition.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -47,16 +46,6 @@ def to_media_table(
             "byte_len"
         ),
     )
-
-
-def _fake_decode(payload: bytes) -> tuple[int, int, float]:
-    """Deterministic stand-in for a real decoder: md5-derived dimensions
-    and luminance. Replace via ``_real_decode`` when media libs exist."""
-    h = hashlib.md5(payload).hexdigest()
-    width = 64 + int(h[0:2], 16) % 192
-    height = 64 + int(h[2:4], 16) % 192
-    mean_luma = int(h[4:8], 16) / 65535.0
-    return width, height, mean_luma
 
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"

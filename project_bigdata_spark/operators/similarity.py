@@ -74,25 +74,6 @@ def cosine(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force exact top-k: broadcast the single query row, score the
-    corpus in one narrow pass, take per-partition top-k + k-row merge."""
-    q = F.broadcast(
-        query.select(as_double(F.col(vec_col)).alias("_qvec"))
-    )
-    scored = corpus.crossJoin(q).select(
-        F.col(id_col),
-        cosine(as_double(F.col(vec_col)), F.col("_qvec")).alias("cosine"),
-    )
-    return scored.orderBy(F.desc("cosine"), id_col).limit(k)
-
-
 def lsh_bucket(vec: Column, n_planes: int = N_PLANES, dim: int = DIM) -> Column:
     """Random-sign hyperplane bucket id: one bit per plane (sign of the
     ±1-weighted sum), packed into a string like '10110010'."""

@@ -12,6 +12,15 @@ extensions) is registered here as a :class:`QuerySpec`:
 the ``headline`` subset; ``tests/test_oracle_parity.py`` replays the
 driver's compare locally at sf0.001.
 
+Order: each round's attestation checks only the first 50 ``queries()``
+entries against DuckDB, so catalog order is the attestation schedule.
+:func:`load_all` orders entries least recently green first, ties broken by
+name, reading each entry's latest green round from the committed
+``CORRECTNESS_r<N>.json`` reports next to ``__spark_entry__.py`` (an entry
+never green ranks as round 0, so it comes first; with no reports the order
+is alphabetical). Each committed report therefore moves the window on to
+the next-stalest entries, and a red row never counts as attested.
+
 Output-normalization convention (keeps the order-insensitive value-hash
 compare engine-neutral): every final projection rounds doubles, casts
 integral aggregates to BIGINT, renders timestamps as strings, and joins
@@ -20,9 +29,12 @@ arrays to strings — on BOTH sides, from shared helpers below.
 
 from __future__ import annotations
 
+import functools
 import importlib
-from collections.abc import Callable
+import json
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,6 +52,8 @@ class QuerySpec:
 
 
 QUERIES: dict[str, QuerySpec] = {}
+
+_REPO_ROOT = Path(__file__).resolve().parents[2]
 
 _QUERY_MODULES = [
     "project_bigdata_spark.plans.medallion_queries",
@@ -94,438 +108,45 @@ def query(
     return wrap
 
 
-# The driver attests only the first 50 ``queries()`` entries per round, so
-# catalog order is the attestation schedule. Rounds 1-7 attested all 320
-# then-registered entries across seven disjoint windows (CORRECTNESS_r01
-# ∪ ... ∪ r07), all green at latest status.
-# tests/test_sql_catalog.py enforces freshness: while entries without a
-# GREEN driver row exist, the window must be spent on them (a RED row
-# counts as needing attestation, so re-attesting repaired entries
-# satisfies the invariant rather than violating it).
-_ATTESTATION_PRIORITY = [
-    # ==== ROUND-12 WINDOW (positions 1-50), per the round-11 verdict
-    # ask #9: continue the oldest-first freshness rotation. No entry's
-    # declared results change in round 12 (optimization round — plans
-    # only), so the window is pure rotation: ALL 27 remaining r3-vintage
-    # entries (latest green row = CORRECTNESS_r03), then the first 23
-    # (alphabetical) of the 41 r4-vintage entries. r3 count -> 0,
-    # r4 tail -> 18. ====
-    # -- r3-vintage rotation probes (ALL 27 remaining) -------------------
-    "lag_lead_features",
-    "length_bucket_stats",
-    "minhash_error_eval",
-    "multi_granularity_rollup",
-    "pii_redact",
-    "pq_encode",
-    "pq_search",
-    "quality_quantile_filter",
-    "random_projection",
-    "range_join_events",
-    "repeated_ngram_spans",
-    "repetition_scores",
-    "segment_dedup",
-    "session_window_native",
-    "sessionize_events",
-    "snapshot_diff",
-    "stratified_fixed_n",
-    "text_normalize",
-    "tfidf_top_terms",
-    "time_range_rolling",
-    "token_packing",
-    "top_ngrams",
-    "unigram_logprob",
-    "value_hour_correlation",
-    "vocab_coverage",
-    "weighted_sample",
-    "zorder_events",
-    # -- r4-vintage rotation probes (alphabetical first 23 of 41) --------
-    "assoc_rules",
-    "audio_segments",
-    "cdc_state",
-    "centroid_classifier_eval",
-    "concurrency_curve",
-    "copurchase_affinity",
-    "countmin_audit",
-    "distinct_rollup_two_level",
-    "drift_psi",
-    "embedding_drift",
-    "epoch_shuffle",
-    "equi_depth_histogram",
-    "ewma_features",
-    "funnel_depth",
-    "global_ids",
-    "hard_negative_mining",
-    "hybrid_rrf_search",
-    "image_resize_grid",
-    "ivfpq_search",
-    "jsonl_roundtrip",
-    "key_skew_profile",
-    "mahalanobis_outliers",
-    "markov_steady_state",
-    # -- behind the window: prior rounds' order preserved --------------
-    "observe_layer_counts",
-    "line_quality_stats",
-    "line_dedup_apply",
-    "line_gate_filter",
-    "pii_redaction_apply",
-    "minhash_near_dups",
-    "minhash_signatures",
-    "multimodal_decode",
-    "q11_important_parts",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q20_bulk_suppliers",
-    "q21_sole_returner",
-    "q22_idle_customers",
-    "q2_min_cost_supplier",
-    "q7_nation_pair_revenue",
-    "q8_market_share",
-    "q9_nation_profit",
-    "quality_scores",
-    "ranking_suite",
-    "rolling_features",
-    "rollup_order_stats",
-    "set_ops",
-    "text_to_embedding",
-    "time_features",
-    "time_split_counts",
-    "token_stats",
-    "approx_distinct_audit",
-    "asof_tolerance_join",
-    "bigram_logprob",
-    "bloom_dedup_prefilter",
-    "bm25_retrieval",
-    "boilerplate_ngrams",
-    "bpe_pair_counts",
-    "contamination_check",
-    "corpus_composition",
-    "corpus_mix",
-    "dedup_apply",
-    "diversity_sample",
-    "embedding_quantize",
-    "feature_hashing",
-    "feature_scaling",
-    "frame_sample",
-    "hash_split",
-    "incremental_dedup",
-    "inverted_index",
-    "knn_batch",
-    "knn_quantized",
-    "stream_stream_full_outer_attested",
-    "udtf_trigram_spans",
-    "gbm_depth2_trees",
-    "aqi_recommendation_rollup",
-    "stream_stream_outer_attested",
-    "connected_components_minlabel",
-    "neyman_allocation",
-    "cohens_d_effect",
-    "q12_shipmode_priority",
-    "q14_promo_share",
-    "q18_large_orders",
-    "q19_bracketed_revenue",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_region_revenue",
-    "q6_forecast_revenue",
-    "scalar_misc",
-    "semi_join_customers",
-    "stratified_sample",
-    "time_bucketed_counts",
-    "top3_per_group",
-    "top_k_latest",
-    "union_distinct_keys",
-    "value_histogram",
-    "value_outliers",
-    "weekly_retention",
-    "ann_lsh_buckets",
-    "ann_lsh_query",
-    "asof_join_events",
-    "chunk_embed_search",
-    "cube_lineitem_flags",
-    "curation_pipeline",
-    "dedup_bow_fingerprint",
-    "dedup_clusters",
-    "dedup_exact",
-    "doc_chunks",
-    "doc_fingerprints",
-    "embedding_norms",
-    "feature_frame",
-    "gap_fill_ffill",
-    "gap_fill_hourly",
-    "ivf_assign",
-    "ivf_search",
-    "knn_brute_force",
-    "label_encode",
-    "lang_id_confusion",
-    "url_canonicalize",
-    "domain_share_stats",
-    "domain_blocklist_filter",
-    "url_exact_dedup",
-    "repetition_dedup_apply",
-    "kruskal_wallis_value",
-    "cramers_v_effect",
-    "brown_forsythe_variance",
-    "isotonic_calibration",
-    "compression_codec_roundtrip",
-    "textrank_keywords",
-    "wilcoxon_signed_rank",
-    "fleiss_kappa_gates",
-    "label_cosine_matrix",
-    "kfold_assignment",
-    "jensen_shannon_sources",
-    "randomization_test_diff",
-    "nelson_aalen_hazard",
-    "log_rank_test",
-    "benjamini_hochberg_pairs",
-    "ams_f2_audit",
-    "block_jackknife_variance",
-    "streaming_availablenow_attested",
-    "err_eval",
-    "mcnemar_filter_agreement",
-    "cochran_q_gates",
-    "lagged_crosscorr",
-    "embedding_isotropy",
-    "deterministic_sample",
-    "distinct_entities",
-    "dq_check_suite",
-    "dq_conditional_counts",
-    "dq_referential_integrity",
-    "entity_activity_profile",
-    "event_transitions",
-    "event_type_distribution",
-    "funnel_conversion",
-    "gold_unpivot",
-    "iso_parsing",
-    "latest_per_entity",
-    "layer_stats",
-    "null_fill",
-    "orders_lag_lead",
-    "orders_running_total",
-    "pivot_type_avg",
-    "q10_top_customers",
-    "dsir_resample",
-    "bpe_train_merges",
-    "anchor_substring_spans",
-    "contamination_audit",
-    "leakage_safe_split",
-    "gopher_quality_gates",
-    "tokenizer_fertility",
-    "mrr_map_eval",
-    "query_likelihood_retrieval",
-    "ridge_normal_equations",
-    "logistic_gd_classifier",
-    "gbm_residual_stumps",
-    "word_burstiness",
-    "soft_dedup_weights",
-    "ccnet_perplexity_buckets",
-    "hits_hubs_authorities",
-    "clustering_ari_eval",
-    "gmm_em_1d",
-    "wasserstein_drift",
-    "mann_whitney_u",
-    "doremi_domain_weights",
-    "char_entropy_compression",
-    "corpus_self_bleu",
-    "hll_intersection",
-    "kneser_ney_bigram",
-    "svm_hinge_gd",
-    "item_cooccurrence_recs",
-    "interarrival_fit",
-    "user_sequence_anomaly",
-    "markov_backtest",
-    "brier_decomposition",
-    "rbo_rankings",
-    "wilson_proportion_ci",
-    "hod_uniformity_test",
-    "cluster_quality_indices",
-    "yule_k_richness",
-    "rec_coverage_audit",
-    "ngram_jaccard_block",
-    "embedding_near_dups",
-    "blocking_quality_audit",
-    "simhash_hamming_pairs",
-    "simhash_fingerprints",
-    "anti_join_customers",
-    "dataset_profile_5v",
-    "date_range_filter",
-    "kendall_tau_hourly",
-    "pacf_profile",
-    "friedman_daily_types",
-    "overdispersion_test",
-    "ndcg_eval",
-    "precision_recall_at_k",
-    "roc_curve_points",
-    "calibration_bins",
-    "jaccard_link_prediction",
-    "k_core_decomposition",
-    "naive_bayes_eval",
-    "matryoshka_truncation_audit",
-    "shingle_granularity_curve",
-    "csv_malformed_audit",
-    "mutual_information_profile",
-    "zipf_slope_fit",
-    "hll_distinct_audit",
-    "chao1_vocab_richness",
-    "heaps_law_fit",
-    "luhn_pii_audit",
-    "readability_scores",
-    "temperature_mix_allocation",
-    "ann_recall_audit",
-    "event_order_inversions",
-    "gumbel_topk_sample",
-    "winnowing_fingerprints",
-    "tfidf_cosine_pairs",
-    "kcenter_maximin_init",
-    "fellegi_sunter_linkage",
-    "semantic_dedup",
-    "edit_distance_linkage",
-    "recursive_reachability",
-    "knn_classifier_eval",
-    "poisson_bootstrap_ci",
-    "ngram_novelty",
-    "wordpiece_apply",
-    "bronze_ingest",
-    "silver_clean",
-    "gold_hourly",
-    "gold_cohort_stats",
-    "aqi_pm25",
-    "aqi_full_pipeline",
-    "aqi_category_rollup",
-    "q1_pricing_summary",
-    "broadcast_dim_join",
-    "exact_percentiles",
-    "temperature_mix",
-    "period_over_period",
-    "conversion_ci",
-    "gini_concentration",
-    "approx_stats",
-    "label_propagation",
-    "adamic_adar_links",
-    "degree_assortativity",
-    "modularity_lpa",
-    "quality_auc",
-    "uncertainty_sampling",
-    "benford_audit",
-    "cusum_drift",
-    "domain_kl_divergence",
-    "minhash_containment",
-    "margin_bitext_mining",
-    "kmeans_lloyd",
-    "hilbert_layout",
-    "pca_power_iteration",
-    "golden_record_survivorship",
-    "holt_forecast",
-    "theil_sen_trend",
-    "mann_kendall_test",
-    "sequential_patterns",
-    "word_pmi",
-    "entropy_rate",
-    "runs_test",
-    "acf_lags",
-    "spearman_hourly",
-    "changepoint_best_split",
-    "anova_oneway",
-    "stl_profile",
-    "xcorr_lags",
-    "kaplan_meier",
-    "retention_cohorts",
-    "harmonic_regression",
-    "trimmed_stats",
-    "hill_tail_index",
-    "decision_stump",
-    "conformal_intervals",
-    "median_polish",
-    "forecast_backtest",
-    "ljung_box_test",
-    "stratified_ate",
-    "diff_in_diff",
-    "cuped_adjustment",
-    "raking_ipf",
-    "power_analysis",
-    "csv_roundtrip",
-    "partitioned_parquet_roundtrip",
-    "streaming_hourly_attested",
-    "streaming_sliding_attested",
-    "stream_static_join_attested",
-    "state_merge_audit",
-    "hopping_window_counts",
-    "streaming_dedup_attested",
-    "stream_stream_join_attested",
-    "custom_state_stream_attested",
-    "streaming_multibatch_attested",
-    "streaming_upsert_sink_attested",
-    "bucketed_join_roundtrip",
-    "partition_upsert_roundtrip",
-    "orc_roundtrip",
-    "schema_evolution_roundtrip",
-    "dynamic_partition_pruning_roundtrip",
-    "python_sink_roundtrip",
-    "triangle_count",
-    "pagerank_parts",
-    "variant_shred",
-    "sql_udf_pipeline",
-    "lateral_topk_orders",
-    "xml_pack_unpack",
-    "listagg_profile",
-    "try_arithmetic_audit",
-    "weighted_median_delay",
-    "ohlc_bars",
-    "interval_overlap_join",
-    "ks_drift_by_type",
-    "audience_overlap",
-    "grouping_sets_profile",
-    "pareto_frontier_suppliers",
-    "quantile_normalize",
-    "mmr_rerank",
-    "corr_matrix_lineitem",
-    "scd2_point_in_time_join",
-    "time_weighted_avg",
-    "loo_target_encode",
-    "json_pack_unpack",
-    "higher_moments",
-    "chi_square_independence",
-    "welch_ttest",
-    "trend_fit",
-    "mad_outliers",
-    "approx_quantile_audit",
-    "unigram_entropy",
-    "dup_cluster_histogram",
-    "exact_percentile_bands",
-    "streaming_session_attested",
-    "scd2_customer",
-    "salted_hourly_agg",
-    "salted_join_attested",
-    "prf_expanded_search",
-    "ship_delay_sla",
-    "segment_dedup_apply",
-    "python_source_stats",
-    "source_reputation",
-    "training_prep_audit",
-    "woe_iv_encoding",
-    "shard_manifest",
-    "rfm_segments",
-    "session_paths",
-    "seasonal_anomaly",
-    "touch_attribution",
-    "time_to_conversion",
-    "rolling_distinct_24h",
-]
+def is_green(row: dict) -> bool:
+    """A CORRECTNESS report row passed: the value hash matched, or an entry
+    without an oracle returned rows (the rows-only check)."""
+    return row.get("hash_match") is True or (
+        row.get("err") == "no_oracle" and bool(row.get("spark_rows"))
+    )
+
+
+def last_green_rounds(reports: Iterable[Path]) -> dict[str, int]:
+    """Entry name -> the latest round whose ``CORRECTNESS_r<N>.json`` report
+    has it green. Names never green are absent."""
+    last: dict[str, int] = {}
+    for path in reports:
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, row in json.loads(path.read_text()).items():
+            if is_green(row):
+                last[name] = max(last.get(name, 0), rnd)
+    return last
+
+
+def attestation_order(names: Iterable[str], last_green: dict[str, int]) -> list[str]:
+    """Least recently green first (never green counts as round 0), ties
+    broken by name."""
+    return sorted(names, key=lambda n: (last_green.get(n, 0), n))
+
+
+@functools.cache
+def _committed_last_green() -> dict[str, int]:
+    return last_green_rounds(sorted(_REPO_ROOT.glob("CORRECTNESS_r[0-9]*.json")))
 
 
 def load_all() -> dict[str, QuerySpec]:
-    """Import every query module (idempotent) and return the registry,
-    ordered so never-attested entries fill the driver's 50-query window."""
+    """Import every query module (idempotent) and return the registry in
+    attestation order (see the module docstring). A module that fails to
+    import raises: a swallowed error would drop its whole query family
+    from the driver contract."""
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # module not built yet (incremental rounds)
-    ordered = {
-        name: QUERIES[name] for name in _ATTESTATION_PRIORITY if name in QUERIES
+        importlib.import_module(mod)
+    return {
+        name: QUERIES[name]
+        for name in attestation_order(QUERIES, _committed_last_green())
     }
-    for name, spec in QUERIES.items():
-        if name not in ordered:
-            ordered[name] = spec
-    return ordered

@@ -33,7 +33,9 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Local-mode core count: SPARK_GRAFT_CPUS, else the cores this process may
+# run on. Every entry point (bench, tests, tools) uses it unless told otherwise.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(

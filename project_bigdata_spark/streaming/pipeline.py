@@ -151,19 +151,6 @@ def foreach_batch_fanout(
     )
 
 
-def await_all(
-    spark_or_queries, timeout_secs: int | None = None
-) -> None:  # pragma: no cover - trivial lifecycle wrapper
-    """T6: block on all active streaming queries — the engine's form of
-    the reference's one-thread-per-query awaitTermination loop
-    (stream_processor.py:262-281)."""
-    if isinstance(spark_or_queries, list):
-        for q in spark_or_queries:
-            q.awaitTermination(timeout_secs)
-    else:
-        spark_or_queries.streams.awaitAnyTermination(timeout_secs)
-
-
 def session_stream(
     parsed: DataFrame, gap: str = "15 minutes", watermark: str = "1 hour"
 ) -> DataFrame:

@@ -29,10 +29,8 @@ def spark(tmp_path_factory):
     from project_bigdata_spark.session import get_spark
 
     wh = str(tmp_path_factory.mktemp("warehouse"))
-    # Modest thread count for the test session; CI boxes vary.
     s = get_spark(
         app_name="project_bigdata_spark-tests",
-        cpus=8,
         extra_conf={"spark.sql.warehouse.dir": wh},
     )
     yield s

@@ -3,9 +3,14 @@ reference runs as spark.sql over the registered views."""
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pytest
 
 from project_bigdata_spark.plans import sql_catalog as SC
+
+REPO_ROOT = Path(__file__).resolve().parent.parent
 
 
 @pytest.fixture(scope="module")
@@ -65,49 +70,58 @@ def test_country_stats_shape_sql(spark, views):
     assert len(rows) == 10
 
 
-def test_attestation_window_leads_with_priority_list():
-    """Catalog order IS the driver's attestation schedule: the window
-    must start with exactly the registered names of the priority list,
-    in order — an accidental reorder silently burns attestation slots."""
+def test_attestation_order_replays_r12_window():
+    """The derived order, fed the reports of rounds 1-11, reproduces the
+    window attested in round 12, name for name and in order."""
     from project_bigdata_spark.plans.catalog import (
-        _ATTESTATION_PRIORITY,
-        QUERIES,
+        attestation_order,
+        last_green_rounds,
         load_all,
     )
 
-    names = list(load_all())
-    expected = [n for n in _ATTESTATION_PRIORITY if n in QUERIES]
-    assert names[: len(expected)] == expected
-    # and every priority name actually exists (no dead entries)
-    missing = [n for n in _ATTESTATION_PRIORITY if n not in QUERIES]
-    assert not missing, f"priority list references unknown queries: {missing}"
+    before = [REPO_ROOT / f"CORRECTNESS_r{i:02d}.json" for i in range(1, 12)]
+    order = attestation_order(load_all(), last_green_rounds(before))
+    r12 = json.loads((REPO_ROOT / "CORRECTNESS_r12.json").read_text())
+    assert order[:50] == list(r12)
+
+
+def test_attestation_order_rule():
+    """Never green (round 0) first, then least recently green; ties by
+    name; a red row does not count as green."""
+    from project_bigdata_spark.plans.catalog import attestation_order, is_green
+
+    last = {"a": 5, "b": 3, "c": 3}
+    assert attestation_order(["a", "b", "c", "d"], last) == ["d", "b", "c", "a"]
+    assert attestation_order(["b", "a"], {}) == ["a", "b"]
+    assert is_green({"hash_match": True})
+    assert is_green({"hash_match": None, "err": "no_oracle", "spark_rows": 3})
+    assert not is_green({"hash_match": False, "spark_rows": 3})
+    assert not is_green({"hash_match": None, "err": "no_oracle", "spark_rows": 0})
+
+
+def test_load_all_raises_on_missing_module(monkeypatch):
+    """A query module that fails to import must not silently drop its
+    family from the driver contract."""
+    from project_bigdata_spark.plans import catalog
+
+    monkeypatch.setattr(
+        catalog,
+        "_QUERY_MODULES",
+        [*catalog._QUERY_MODULES, "project_bigdata_spark.plans.no_such_queries"],
+    )
+    with pytest.raises(ModuleNotFoundError):
+        catalog.load_all()
 
 
 def test_attestation_window_is_fresh():
-    """Window-freshness invariant (round-3 verdict ask #3, refined by
-    round-4 ask #3): while any catalog entry lacks a GREEN driver
-    CORRECTNESS row, the driver's 50-slot window (the first 50 of
-    load_all()) must be spent on those names. "Green" = hash_match true,
-    or a rows-only pass for the documented oracle-less entries — a RED
-    row (hash mismatch) counts as NEEDING attestation, so re-attesting
-    repaired entries satisfies the invariant rather than violating it.
-    Parses the committed CORRECTNESS_r0*.json files, so the invariant
-    tightens automatically every round."""
-    import glob
-    import json
-    import os
+    """While any catalog entry lacks a GREEN CORRECTNESS row, the 50-slot
+    attestation window (the first 50 of load_all()) must be spent on
+    those names. A RED row (hash mismatch) counts as needing attestation,
+    so re-attesting repaired entries satisfies the invariant. Reads the
+    committed CORRECTNESS_r*.json reports, so it tightens every round."""
+    from project_bigdata_spark.plans.catalog import last_green_rounds, load_all
 
-    from project_bigdata_spark.plans.catalog import load_all
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        with open(path) as f:
-            for name, row in json.load(f).items():
-                if row.get("hash_match") is True:
-                    green.add(name)
-                elif row.get("err") == "no_oracle" and row.get("spark_rows"):
-                    green.add(name)  # rows-only check for oracle-less ops
+    green = set(last_green_rounds(REPO_ROOT.glob("CORRECTNESS_r[0-9]*.json")))
     names = list(load_all())
     needing = [n for n in names if n not in green]
     if not needing:
@@ -116,11 +130,11 @@ def test_attestation_window_is_fresh():
     fresh = [n for n in window if n not in green]
     want = min(len(needing), 50)
     # >=45 (not ==50) tolerates a handful of deliberate re-attestations,
-    # never a stale list.
+    # never a stale order.
     assert len(fresh) >= min(want, 45), (
         f"attestation window wastes {len(window) - len(fresh)} of 50 slots "
         f"on already-green entries while {len(needing)} entries have no "
-        f"green driver row; reorder _ATTESTATION_PRIORITY in plans/catalog.py"
+        f"green CORRECTNESS row; see attestation_order in plans/catalog.py"
     )
 
 

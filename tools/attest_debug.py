@@ -60,7 +60,7 @@ def main() -> int:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    spark = get_spark(app_name="attest-debug", cpus=8)
+    spark = get_spark(app_name="attest-debug")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")

@@ -86,7 +86,6 @@ def run_variant(which: str) -> None:
     # is still settable; 30M generated rows need more than the 1g default
     spark = get_spark(
         app_name=f"bench-bloom-{which}",
-        cpus=32,
         extra_conf={"spark.driver.memory": "8g"},
     )
     corpus, new = frames(spark)

@@ -14,7 +14,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from project_bigdata_spark.plans.catalog import load_all  # noqa: E402
-from project_bigdata_spark.session import get_spark  # noqa: E402
+from project_bigdata_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 SFS = ["sf0.001", "sf0.01", "sf0.1"]
 BASE = "/root/testdata"
@@ -301,7 +301,7 @@ EXTRA = [
 
 
 def main() -> None:
-    spark = get_spark(app_name="bench-scaling", cpus=32)
+    spark = get_spark(app_name="bench-scaling")
     registry = load_all()
     specs = [s for s in registry.values() if s.headline]
     specs += [registry[n] for n in EXTRA if n in registry]
@@ -329,7 +329,7 @@ def main() -> None:
     lines = [
         "# BENCH_SCALING — headline runtimes across scale factors",
         "",
-        "Generated by `python tools/bench_scaling.py` on local[32]. "
+        f"Generated by `python tools/bench_scaling.py` on local[{DEFAULT_CPUS}]. "
         "lineitem rows: 6k / 60k / 600k; events: 1k / 10k / 100k.",
         "",
         "| query | sf0.001 | sf0.01 | sf0.1 | x10 data slope (0.01→0.1) |",

@@ -46,7 +46,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from project_bigdata_spark.plans.catalog import load_all  # noqa: E402
-from project_bigdata_spark.session import get_spark  # noqa: E402
+from project_bigdata_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 DST = "/tmp/spark_graft_sf1"
@@ -361,7 +361,7 @@ def _write_organic_section(rows) -> None:
 
 
 def organic_main(keep: bool) -> None:
-    spark = get_spark(app_name="bench-sf1-organic", cpus=32)
+    spark = get_spark(app_name="bench-sf1-organic")
     t0 = time.time()
     synthesize(spark, DST_ORGANIC, organic_parts=True)
     print(f"synthesized organic sf1 -> {DST_ORGANIC} in "
@@ -406,7 +406,7 @@ def headliner_main(keep: bool) -> None:
     (loadavg before/after + best-of-2 raw cells)."""
     import os
 
-    spark = get_spark(app_name="bench-sf1-headliners", cpus=32)
+    spark = get_spark(app_name="bench-sf1-headliners")
     t0 = time.time()
     synthesize(spark)
     print(f"synthesized 10x sf0.1 -> {DST} in {time.time() - t0:.1f}s",
@@ -418,7 +418,7 @@ def headliner_main(keep: bool) -> None:
     la1 = os.getloadavg()
     receipts = (
         f"Receipts: loadavg before {la0[0]:.2f}/{la0[1]:.2f} after "
-        f"{la1[0]:.2f}/{la1[1]:.2f}; best-of-2 per cell on local[32]; "
+        f"{la1[0]:.2f}/{la1[1]:.2f}; best-of-2 per cell on local[{DEFAULT_CPUS}]; "
         "synthetic sf1 = 10x key-shifted sf0.1 (near-duplicate document "
         "copies)."
     )
@@ -449,7 +449,7 @@ def main() -> None:
     if "--headliners" in sys.argv:
         headliner_main(keep)
         return
-    spark = get_spark(app_name="bench-sf1", cpus=32)
+    spark = get_spark(app_name="bench-sf1")
     t0 = time.time()
     synthesize(spark)
     print(f"synthesized 10x sf0.1 -> {DST} in {time.time() - t0:.1f}s",

@@ -77,7 +77,7 @@ def synthesize(spark) -> None:
 def main() -> None:
     if not Path(SRC).exists():
         sys.exit(f"{SRC} missing — run tools/bench_sf1.py <q> --keep first")
-    spark = get_spark(app_name="bench-sf10", cpus=32)
+    spark = get_spark(app_name="bench-sf10")
     t0 = time.time()
     synthesize(spark)
     print(f"synthesized sf10 -> {DST} in {time.time() - t0:.1f}s",

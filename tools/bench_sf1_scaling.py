@@ -36,10 +36,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from project_bigdata_spark.operators import dedup as DD  # noqa: E402
 from project_bigdata_spark.plans.catalog import load_all  # noqa: E402
-from project_bigdata_spark.session import get_spark  # noqa: E402
+from project_bigdata_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 from tools.bench_sf1 import DST, SRC, synthesize  # noqa: E402
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 RUNS = int(os.environ.get("SPARK_GRAFT_RUNS", "3"))
 
 # the most expensive non-headline entries per the r11/r12 warm sweeps —
@@ -72,7 +71,7 @@ def gate_state(builder, spark, sf_dir: str) -> list[dict]:
 def main() -> None:
     keep = "--keep" in sys.argv
     reuse = "--reuse" in sys.argv and Path(DST).exists()
-    spark = get_spark(app_name=f"bench-sf1-scaling-c{CPUS}", cpus=CPUS)
+    spark = get_spark(app_name=f"bench-sf1-scaling-c{DEFAULT_CPUS}")
     synth_sec = None
     if not reuse:
         t0 = time.time()
@@ -110,7 +109,7 @@ def main() -> None:
                 "metric": "sf1_scaling_bench",
                 "sf": 1.0,
                 "synthetic": True,
-                "cpus": CPUS,
+                "cpus": DEFAULT_CPUS,
                 "runs": RUNS,
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",

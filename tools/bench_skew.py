@@ -101,7 +101,6 @@ def run_variant(which: str) -> None:
 
     spark = get_spark(
         app_name=f"bench-skew-{which}",
-        cpus=32,
         extra_conf={"spark.driver.memory": HEAP},
     )
     skewed = build_skewed(spark)

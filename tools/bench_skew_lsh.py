@@ -65,7 +65,7 @@ def run_variant(which: str) -> None:
     from project_bigdata_spark.operators import dedup as DD
     from project_bigdata_spark.session import get_spark
 
-    spark = get_spark(app_name=f"bench-skew-lsh-{which}", cpus=32)
+    spark = get_spark(app_name=f"bench-skew-lsh-{which}")
     corpus = build_corpus(spark)
     n_docs = corpus.count()
     sigs = DD.minhash_signatures(corpus, "doc_id", "text").persist()
@@ -78,6 +78,8 @@ def run_variant(which: str) -> None:
 
 
 def main() -> None:
+    from project_bigdata_spark.session import DEFAULT_CPUS
+
     results: dict[str, str] = {}
     n_docs = 0
     for which in VARIANTS:
@@ -117,7 +119,7 @@ def main() -> None:
         f"{int(HOT_FRAC * 100)}% given IDENTICAL text — every signature "
         "band lands in ONE bucket (boilerplate mirrors / template spam, "
         "the degenerate corpus the `max_bucket` guard exists for). "
-        "Candidate-pair build, one JVM per variant, local[32]:",
+        f"Candidate-pair build, one JVM per variant, local[{DEFAULT_CPUS}]:",
         "",
         "| variant | outcome | |",
         "|---|---|---|",

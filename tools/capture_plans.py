@@ -45,8 +45,13 @@ def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     specs = load_all()
-    targets = [s for s in specs.values() if (s.name in names if names else s.headline)]
-    spark = get_spark(app_name="capture_plans", cpus=8)
+    # Name order, not catalog order: expression ids are JVM-wide counters,
+    # so the dumps must not depend on the attestation order, which moves
+    # with every committed CORRECTNESS report.
+    targets = [
+        specs[n] for n in sorted(specs) if (n in names if names else specs[n].headline)
+    ]
+    spark = get_spark(app_name="capture_plans")
     plans_dir = os.environ.get("PLANS_DIR", "r12")
     out_dir = Path(__file__).resolve().parents[1] / "plans" / plans_dir
     out_dir.mkdir(parents=True, exist_ok=True)
@@ -54,9 +59,9 @@ def main() -> None:
     fragments: list[str] = []
     orig_ckpt = DataFrame.localCheckpoint
 
-    def recording_ckpt(self: DataFrame, eager: bool = True) -> DataFrame:
+    def recording_ckpt(self: DataFrame, *args, **kwargs) -> DataFrame:
         fragments.append(_fmt(self))
-        return orig_ckpt(self, eager)
+        return orig_ckpt(self, *args, **kwargs)
 
     DataFrame.localCheckpoint = recording_ckpt  # type: ignore[method-assign]
     try:

@@ -8,7 +8,7 @@ import __spark_entry__ as e
 from project_bigdata_spark.session import get_spark
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-spark = get_spark(app_name="verify-drive", cpus=8)
+spark = get_spark(app_name="verify-drive")
 
 t0 = time.time()
 df = e.entry(spark)

@@ -33,7 +33,7 @@ for a in sys.argv[1:]:
     if a.startswith("--runs="):
         RUNS = int(a.split("=")[1])
 
-spark = get_spark(app_name="exp_parallel", cpus=32)
+spark = get_spark(app_name="exp_parallel")
 spark.range(1000).write.format("noop").mode("overwrite").save()
 P = spark.sparkContext.defaultParallelism
 

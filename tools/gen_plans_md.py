@@ -90,7 +90,7 @@ NOTES = {
 
 
 def main() -> None:
-    spark = get_spark(app_name="plan-dump", cpus=8)
+    spark = get_spark(app_name="plan-dump")
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )

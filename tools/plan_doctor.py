@@ -347,14 +347,16 @@ SINGLE_PARTITION_OK = {
 
 
 def audit() -> int:
-    spark = get_spark(app_name="plan-doctor", cpus=8)
+    spark = get_spark(app_name="plan-doctor")
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
     specs = load_all()
     rows: list[tuple[str, str, str]] = []
     bad = 0
-    for name, spec in specs.items():
+    # name order: the audit must not reshuffle when the catalog's
+    # attestation order moves
+    for name, spec in sorted(specs.items()):
         if name in SIDE_EFFECTFUL:
             rows.append((name, "skipped", "side-effectful builder"))
             continue

@@ -20,7 +20,7 @@ SF_DIR = "/root/testdata/sf0.1"
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     runs = 5
-    cpus = 32
+    cpus: int | None = None
     conf: dict[str, str] = {}
     for a in sys.argv[1:]:
         if a.startswith("--runs="):

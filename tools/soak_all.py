@@ -37,7 +37,7 @@ def main() -> None:
     skip = set(re.findall(r'"([a-z0-9_]+)"', block[: block.index("}")]))
     probed = _listed("tools/bench_sf1.py", "QUERIES = [")
 
-    spark = get_spark(app_name="soak-all", cpus=32)
+    spark = get_spark(app_name="soak-all")
     reg = load_all()
     todo = [n for n in reg if n not in skip and n not in probed]
     print(f"soaking {len(todo)} entries", file=sys.stderr)
