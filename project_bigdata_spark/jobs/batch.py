@@ -1,17 +1,19 @@
 """Batch medallion job — the engine's ``spark-submit`` entry point.
 
 CLI parity with the reference's ``spark/batch_processor.py`` (§3.1:
-``--layer {bronze|silver|gold|all}``), minus its defects: one lineage per
-run (no per-layer re-reads unless layers are run separately), counts from
-``observe()`` not post-write recomputation, dynamic partition overwrite.
+``--layer {bronze|silver|gold|all}``), minus two of its defects: counts
+come from ``observe()``, not post-write recomputation, and partitioned
+writes use dynamic partition overwrite. Every layer reads its input from
+files, so ``--layer all`` runs three lineages, not one: it writes bronze
+from the input, re-reads the bronze files to write silver, then re-reads
+the silver files to write gold.
 
     python -m project_bigdata_spark.jobs.batch \
         --input /root/testdata/sf0.01/events.parquet \
         --output /tmp/medallion --layer all
 
-Each layer can also run independently against the previous layer's files
-(the reference's storage-coupled topology) — useful when layers run on
-different schedules.
+Each layer can therefore also run on its own against the previous
+layer's files — useful when layers run on different schedules.
 """
 
 from __future__ import annotations

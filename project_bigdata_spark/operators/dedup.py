@@ -32,6 +32,8 @@ Scale notes (100 TB corpus):
 
 from __future__ import annotations
 
+from collections import deque
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -43,13 +45,14 @@ SIG_PREFIX = 8  # hex chars per signature component (32 bits)
 HASH_GROUPS = NUM_HASHES // SLICES_PER_MD5  # md5 calls per shingle
 
 
-# Gate-state receipt (round-11 verdict ask #1): every fan_out /
-# fan_out_by_key call appends (helper, input_partitions, target, engaged)
-# here so a bench run can PROVE whether the scale gate engaged (single-split
-# local input -> repartition) or disengaged (multi-split input -> no-op, the
-# 100 TB behavior). Plain list, no behavior change; callers that care (the
-# sf1 scaling bench) clear and read it around a plan build.
-GATE_LOG: list[tuple[str, int, int, bool]] = []
+# Gate-state receipt: every fan_out / fan_out_by_key call appends (helper,
+# input_partitions, target, engaged) here so a bench run can PROVE whether
+# the scale gate engaged (single-split local input -> repartition) or
+# disengaged (multi-split input -> no-op, the 100 TB behavior). Callers that
+# care (the sf1 scaling bench) clear and read it around a plan build. Bounded
+# so a long-lived session keeps only the latest GATE_LOG_CAP decisions.
+GATE_LOG_CAP = 1024
+GATE_LOG: deque[tuple[str, int, int, bool]] = deque(maxlen=GATE_LOG_CAP)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

@@ -1,10 +1,20 @@
 """Source / sink registry.
 
+Invariant: the ten catalog tables are *declared* here (:data:`SCHEMAS`) and
+never inferred. :func:`load_table` hands Spark the declared schema, so a
+load lists no files, reads no footer and starts no Spark job; the parquet
+files must match the declaration, and ``tests/test_schema_sentinel.py``
+fails loudly, naming the column, when a footer drifts from it. The one
+footer read left is ``events.ts``'s time unit, on the driver (pyarrow, no
+JVM call), because no single declared type reads both TIMESTAMP(NANOS) and
+µs timestamps.
+
 Maps the reference's I/O surface (SURVEY.md §2.1) onto Spark built-ins:
 
-- S3/S4 parquet scans        -> :func:`load_table` (``spark.read.parquet``;
-  glob + parallel read are native, unlike the reference's per-file s3fs
-  loop at ``load_to_clickhouse.py:62-76``).
+- S3/S4 parquet scans        -> :func:`load_table` (declared schemas, as
+  the reference's ``spark/batch_processor.py:31-45``; glob + parallel read
+  are native, unlike its per-file s3fs loop at
+  ``load_to_clickhouse.py:62-76``).
 - S7 partitioned parquet sink -> :func:`write_partitioned_parquet` with
   *dynamic* partition overwrite (fixes the overwrite-the-world write at
   ``spark/batch_processor.py:125-129``).
@@ -21,21 +31,86 @@ Hive-style partition pruning from Catalyst for free; keep filters and
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import json
+from pathlib import Path
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+
+def _columns(*cols: tuple[str, DataType]) -> StructType:
+    return StructType([StructField(name, dtype) for name, dtype in cols])
+
+
+_INT, _LONG, _DOUBLE = IntegerType(), LongType(), DoubleType()
+_STR, _TS = StringType(), TimestampType()
+
+# Table name -> its columns, in file order. Built once per process as
+# StructTypes (no JVM call); every load hands Spark one of these.
+SCHEMAS: dict[str, StructType] = {
+    "region": _columns(("r_regionkey", _INT), ("r_name", _STR)),
+    "nation": _columns(
+        ("n_nationkey", _INT), ("n_name", _STR), ("n_regionkey", _INT)
+    ),
+    "customer": _columns(
+        ("c_custkey", _LONG), ("c_name", _STR), ("c_nationkey", _INT),
+        ("c_acctbal", _DOUBLE), ("c_mktsegment", _STR),
+    ),
+    "supplier": _columns(
+        ("s_suppkey", _LONG), ("s_name", _STR), ("s_nationkey", _INT),
+        ("s_acctbal", _DOUBLE),
+    ),
+    "part": _columns(
+        ("p_partkey", _LONG), ("p_name", _STR), ("p_brand", _STR),
+        ("p_type", _STR), ("p_size", _INT), ("p_retailprice", _DOUBLE),
+    ),
+    "orders": _columns(
+        ("o_orderkey", _LONG), ("o_custkey", _LONG), ("o_orderstatus", _STR),
+        ("o_totalprice", _DOUBLE), ("o_orderdate", _TS),
+        ("o_orderpriority", _STR),
+    ),
+    "lineitem": _columns(
+        ("l_orderkey", _LONG), ("l_partkey", _LONG), ("l_suppkey", _LONG),
+        ("l_linenumber", _INT), ("l_quantity", _DOUBLE),
+        ("l_extendedprice", _DOUBLE), ("l_discount", _DOUBLE),
+        ("l_tax", _DOUBLE), ("l_returnflag", _STR), ("l_linestatus", _STR),
+        ("l_shipdate", _TS),
+    ),
+    "events": _columns(
+        ("event_id", _LONG), ("ts", _TS), ("user_id", _LONG),
+        ("event_type", _STR), ("value", _DOUBLE), ("props", _STR),
+    ),
+    "documents": _columns(
+        ("doc_id", _LONG), ("text", _STR), ("lang", _STR), ("source", _STR),
+        ("n_chars", _LONG),
+    ),
+    "embeddings": _columns(
+        ("vec_id", _LONG), ("embedding", ArrayType(FloatType())),
+        ("label", _INT),
+    ),
+}
+
+TABLES = list(SCHEMAS)
+
+# events as read from a TIMESTAMP(NANOS) file: ``ts`` surfaces as the raw
+# long (``nanosAsLong``); a declared ``timestamp`` fails there at execution
+_EVENTS_NANOS = StructType([
+    StructField("ts", _LONG) if f.name == "ts" else f
+    for f in SCHEMAS["events"].fields
+])
 
 
 # Runtime-settable SQL confs the catalog depends on. The driver may hand
@@ -73,18 +148,53 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan for one of the registered tables (S3/S4).
+    """Parquet scan of one of the declared tables (S3/S4).
 
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS), which Spark reads
-    only as a raw long (``spark.sql.legacy.parquet.nanosAsLong``, asserted
-    here so ANY session works). Convert ns -> µs with integer ``div`` — a
-    double division would lose precision above 2^53 ns (~mid-1970s epoch).
+    Reads ``{sf_dir}/{name}.parquet`` with ``SCHEMAS[name]``; nothing is
+    inferred, so the call runs no Spark job. The file must match the
+    declaration (``tests/test_schema_sentinel.py`` checks every footer).
+
+    ``events.ts`` loads as ``timestamp`` whatever its parquet encoding. Its
+    unit comes from the footer, read on the driver: TIMESTAMP(NANOS) is
+    declared ``bigint`` (``spark.sql.legacy.parquet.nanosAsLong``, asserted
+    here so ANY session works) and converted ns -> µs with integer ``div``.
     """
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        df = normalize_event_ts(df)
+    path = f"{sf_dir}/{name}.parquet"
+    schema = declared_schema(path, name)
+    df = spark.read.schema(schema).parquet(path)
+    if schema is _EVENTS_NANOS:
+        df = df.withColumn("ts", _micros_from_nanos("ts"))
     return df
+
+
+def declared_schema(path: str, name: str) -> StructType:
+    """The schema :func:`load_table` reads table ``name`` at ``path`` with:
+    ``SCHEMAS[name]``, except ``ts bigint`` for an events file whose ``ts``
+    is TIMESTAMP(NANOS)."""
+    if name == "events" and _ts_is_nanos(path):
+        return _EVENTS_NANOS
+    return SCHEMAS[name]
+
+
+def _ts_is_nanos(path: str) -> bool:
+    """Whether the ``ts`` column of the parquet file (or of the first data
+    file of a Spark-written directory) at ``path`` is TIMESTAMP(NANOS).
+    Read from the parquet logical type, not the Arrow schema: pyarrow
+    reports INT96 timestamps as ns too, and Spark reads those as
+    ``timestamp``."""
+    p = Path(path)
+    if p.is_dir():
+        p = min(p.glob("*.parquet"))
+    schema = pq.read_metadata(p).schema
+    col = schema.column(schema.names.index("ts"))
+    unit = json.loads(col.logical_type.to_json()).get("timeUnit")
+    return col.physical_type == "INT64" and unit == "nanoseconds"
+
+
+def _micros_from_nanos(ts_col: str) -> Column:
+    # integer div: a double division loses precision above 2^53 ns
+    return F.timestamp_micros(F.expr(f"{ts_col} div 1000"))
 
 
 def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -99,9 +209,7 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """
     dtype = dict(df.dtypes).get(ts_col)
     if dtype == "bigint":
-        df = df.withColumn(
-            ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000"))
-        )
+        df = df.withColumn(ts_col, _micros_from_nanos(ts_col))
     elif dtype == "timestamp_ntz":
         df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return df

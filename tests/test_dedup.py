@@ -265,3 +265,18 @@ def test_simhash_hamming_hot_bucket_capped(spark):
     df = spark.createDataFrame(hot, ["doc_id", "text"])
     assert DD.simhash_hamming_pairs(df, max_bucket=10).count() == 0
     assert DD.simhash_hamming_pairs(df, max_bucket=12).count() == 66
+
+
+def test_gate_log_is_bounded(docs):
+    """A long-lived session calls the fan-out gates without end; the log
+    keeps only the latest GATE_LOG_CAP decisions."""
+    DD.GATE_LOG.clear()
+    try:
+        DD.GATE_LOG.extend([("filler", 0, 0, False)] * DD.GATE_LOG_CAP)
+        DD.fan_out(docs)
+        DD.fan_out_by_key(docs, "doc_id")
+        assert len(DD.GATE_LOG) == DD.GATE_LOG_CAP
+        helpers = [entry[0] for entry in list(DD.GATE_LOG)[-2:]]
+        assert helpers == ["fan_out", "fan_out_by_key"]
+    finally:
+        DD.GATE_LOG.clear()

@@ -12,13 +12,23 @@ DATATYPE_MISMATCH deep inside a query.
 A failure means: decide whether the new encoding needs a normalization
 branch in ``sources/registry.py`` (like ``normalize_event_ts``), then
 update the pin.
+
+``load_table`` reads with the schemas declared in ``registry.SCHEMAS``, so
+the post-load pins alone would pass by construction. The footer sweep
+below closes that gap: it compares every declared schema with the schema
+Spark infers from the parquet footers of every table in each testdata
+scale factor and in the degenerate fixture, and fails naming each column
+whose type changed or that was added, dropped or renamed.
 """
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from project_bigdata_spark.sources import TABLES, load_table
+from project_bigdata_spark.sources import registry as R
 
 EXPECTED = {
     "region": {"r_regionkey": "int", "r_name": "string"},
@@ -152,3 +162,92 @@ def test_embedding_dim_pinned(spark, sf_dir):
     df = load_table(spark, sf_dir, "embeddings")
     dims = [r[0] for r in df.select(F.size("embedding")).distinct().collect()]
     assert dims == [DIM], f"embedding dim drifted: {dims} != [{DIM}]"
+
+
+def schema_drift(declared, inferred) -> list[str]:
+    """One line per column on which two StructTypes disagree (type, or
+    present in one only); a pure reorder is reported as such."""
+    want = {f.name: f.dataType.simpleString() for f in declared.fields}
+    got = {f.name: f.dataType.simpleString() for f in inferred.fields}
+    drift = [
+        f"{c}: declared {want.get(c)}, file {got.get(c)}"
+        for c in sorted(want.keys() | got.keys())
+        if want.get(c) != got.get(c)
+    ]
+    if not drift and list(want) != list(got):
+        drift = [f"column order: declared {list(want)}, file {list(got)}"]
+    return drift
+
+
+def assert_footers_match_declared(spark, table_dir: str) -> None:
+    # infer under the confs load_table reads with (µs timestamps as
+    # TIMESTAMP, NANOS as bigint), whatever ran before on this session
+    R.ensure_runtime_confs(spark)
+    drift = {}
+    for table in TABLES:
+        path = f"{table_dir}/{table}.parquet"
+        inferred = spark.read.parquet(path).schema
+        lines = schema_drift(R.declared_schema(path, table), inferred)
+        if lines:
+            drift[table] = lines
+    assert not drift, (
+        f"{table_dir}: parquet footers drifted from registry.SCHEMAS: "
+        f"{drift} — load_table reads with the declared schema, so update "
+        "SCHEMAS (and the EXPECTED pins) to the new files"
+    )
+
+
+@pytest.fixture(scope="module")
+def degenerate_dir(tmp_path_factory):
+    from tools.degenerate_data import build_degenerate_dir
+
+    d = tmp_path_factory.mktemp("degenerate_sf")
+    build_degenerate_dir(str(d))
+    return str(d)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1", "degenerate"])
+def test_declared_schemas_match_footers(spark, sf, degenerate_dir):
+    assert_footers_match_declared(
+        spark, degenerate_dir if sf == "degenerate" else f"/root/testdata/{sf}"
+    )
+
+
+@pytest.mark.parametrize(
+    "mutation,column",
+    [
+        ("widen", "n_nationkey"),
+        ("add", "n_comment"),
+        ("drop", "n_name"),
+        ("rename", "n_regionkey"),
+    ],
+)
+def test_footer_drift_fails_naming_the_column(
+    spark, tmp_path, mutation, column
+):
+    """Each kind of drift in one table's file fails the sweep, and the
+    message names the column."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = Path("/root/testdata/sf0.001")
+    for table in TABLES:
+        shutil.copy(src / f"{table}.parquet", tmp_path / f"{table}.parquet")
+    nation = pq.read_table(src / "nation.parquet")
+    nation = {
+        "widen": lambda t: t.set_column(
+            0, "n_nationkey", t.column("n_nationkey").cast(pa.int64())
+        ),
+        "add": lambda t: t.append_column(
+            "n_comment", pa.array(["x"] * t.num_rows)
+        ),
+        "drop": lambda t: t.drop_columns(["n_name"]),
+        "rename": lambda t: t.rename_columns(
+            ["n_nationkey", "n_name", "n_region"]
+        ),
+    }[mutation](nation)
+    pq.write_table(nation, tmp_path / "nation.parquet")
+    with pytest.raises(AssertionError, match=rf"'{column}: declared"):
+        assert_footers_match_declared(spark, str(tmp_path))

@@ -303,3 +303,50 @@ def test_python_datasource_composes_with_engine_operators(spark):
     hours = {r.hour_ts for r in gold.select("hour_ts").distinct().collect()}
     assert len(hours) == 9
     assert gold.filter("n_events < 1").count() == 0
+
+
+def test_load_table_runs_no_spark_job(spark, tmp_path):
+    """Declared schemas: loading any table, and ``events`` in each of the
+    three ``ts`` encodings (and as a directory of part files), lists no
+    files and reads no footer in Spark, so no job starts. Schema inference
+    ran one job per call."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = pq.read_table("/root/testdata/sf0.001/events.parquet")
+    labels = {
+        "nanos": pa.timestamp("ns"),
+        "us_ntz": pa.timestamp("us"),
+        "us_utc": pa.timestamp("us", tz="UTC"),
+        "nanos_dir": pa.timestamp("ns"),
+    }
+    for label, ts_type in labels.items():
+        path = tmp_path / label / "events.parquet"
+        if label.endswith("_dir"):
+            path.mkdir(parents=True)
+            path = path / "part-00000.parquet"
+        else:
+            path.parent.mkdir()
+        table = src.set_column(1, "ts", src.column("ts").cast(ts_type))
+        pq.write_table(table, path, version="2.6")
+    sc = spark.sparkContext
+    group = "load_table_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        frames = [
+            R.load_table(spark, "/root/testdata/sf0.001", t) for t in R.TABLES
+        ] + [
+            R.load_table(spark, str(tmp_path / label), "events")
+            for label in labels
+        ]
+        # resolving each schema runs no job either
+        assert [dict(df.dtypes).get("ts") for df in frames[-4:]] == [
+            "timestamp"
+        ] * 4
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [], f"load_table started Spark jobs {jobs}"
+    # the directory's unit came from its part file's footer
+    nanos, nanos_dir = frames[-4], frames[-1]
+    assert nanos_dir.agg(F.max("ts")).first() == nanos.agg(F.max("ts")).first()
