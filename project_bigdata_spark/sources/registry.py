@@ -105,8 +105,10 @@ SCHEMAS: dict[str, StructType] = {
 
 TABLES = list(SCHEMAS)
 
-# events as read from a TIMESTAMP(NANOS) file: ``ts`` surfaces as the raw
-# long (``nanosAsLong``); a declared ``timestamp`` fails there at execution
+# events whose ``ts`` is an INT64 of nanoseconds: TIMESTAMP(NANOS), which
+# surfaces as the raw long (``nanosAsLong``), or a plain INT64 that Spark
+# wrote back from such a long. A declared ``timestamp`` fails on both at
+# execution.
 _EVENTS_NANOS = StructType([
     StructField("ts", _LONG) if f.name == "ts" else f
     for f in SCHEMAS["events"].fields
@@ -155,9 +157,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     declaration (``tests/test_schema_sentinel.py`` checks every footer).
 
     ``events.ts`` loads as ``timestamp`` whatever its parquet encoding. Its
-    unit comes from the footer, read on the driver: TIMESTAMP(NANOS) is
-    declared ``bigint`` (``spark.sql.legacy.parquet.nanosAsLong``, asserted
-    here so ANY session works) and converted ns -> µs with integer ``div``.
+    unit comes from the footer, read on the driver: an INT64 ``ts`` that is
+    not a MICROS or MILLIS timestamp (TIMESTAMP(NANOS), read as a long under
+    ``spark.sql.legacy.parquet.nanosAsLong``, asserted here so ANY session
+    works; or an unannotated INT64 of ns) is declared ``bigint`` and
+    converted ns -> µs with integer ``div``.
     """
     ensure_runtime_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
@@ -171,7 +175,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def declared_schema(path: str, name: str) -> StructType:
     """The schema :func:`load_table` reads table ``name`` at ``path`` with:
     ``SCHEMAS[name]``, except ``ts bigint`` for an events file whose ``ts``
-    is TIMESTAMP(NANOS)."""
+    holds nanoseconds."""
     if name == "events" and _ts_is_nanos(path):
         return _EVENTS_NANOS
     return SCHEMAS[name]
@@ -179,17 +183,21 @@ def declared_schema(path: str, name: str) -> StructType:
 
 def _ts_is_nanos(path: str) -> bool:
     """Whether the ``ts`` column of the parquet file (or of the first data
-    file of a Spark-written directory) at ``path`` is TIMESTAMP(NANOS).
-    Read from the parquet logical type, not the Arrow schema: pyarrow
-    reports INT96 timestamps as ns too, and Spark reads those as
-    ``timestamp``."""
+    file of a Spark-written directory) at ``path`` holds nanoseconds: an
+    INT64 that is not a MICROS or MILLIS timestamp. That is TIMESTAMP(NANOS)
+    and also a plain INT64, which is what Spark writes when it saves a NANOS
+    ``ts`` it read as a long. Read from the parquet types, not the Arrow
+    schema: pyarrow reports INT96 timestamps as ns too, and Spark reads
+    those as ``timestamp``."""
     p = Path(path)
     if p.is_dir():
         p = min(p.glob("*.parquet"))
     schema = pq.read_metadata(p).schema
     col = schema.column(schema.names.index("ts"))
     unit = json.loads(col.logical_type.to_json()).get("timeUnit")
-    return col.physical_type == "INT64" and unit == "nanoseconds"
+    return col.physical_type == "INT64" and unit not in (
+        "microseconds", "milliseconds"
+    )
 
 
 def _micros_from_nanos(ts_col: str) -> Column:

@@ -307,9 +307,9 @@ def test_python_datasource_composes_with_engine_operators(spark):
 
 def test_load_table_runs_no_spark_job(spark, tmp_path):
     """Declared schemas: loading any table, and ``events`` in each of the
-    three ``ts`` encodings (and as a directory of part files), lists no
-    files and reads no footer in Spark, so no job starts. Schema inference
-    ran one job per call."""
+    three ``ts`` encodings (and as a Spark-written directory of part
+    files), lists no files and reads no footer in Spark, so no job starts.
+    Schema inference ran one job per call."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -318,17 +318,20 @@ def test_load_table_runs_no_spark_job(spark, tmp_path):
         "nanos": pa.timestamp("ns"),
         "us_ntz": pa.timestamp("us"),
         "us_utc": pa.timestamp("us", tz="UTC"),
-        "nanos_dir": pa.timestamp("ns"),
     }
     for label, ts_type in labels.items():
         path = tmp_path / label / "events.parquet"
-        if label.endswith("_dir"):
-            path.mkdir(parents=True)
-            path = path / "part-00000.parquet"
-        else:
-            path.parent.mkdir()
+        path.parent.mkdir()
         table = src.set_column(1, "ts", src.column("ts").cast(ts_type))
         pq.write_table(table, path, version="2.6")
+    # a NANOS file read back through Spark (``ts`` as bigint) and written
+    # again: ``ts`` is a plain INT64 with no timestamp annotation
+    R.ensure_runtime_confs(spark)
+    nanos_file = str(tmp_path / "nanos" / "events.parquet")
+    spark.read.parquet(nanos_file).write.parquet(
+        str(tmp_path / "spark_dir" / "events.parquet")
+    )
+    labels = [*labels, "spark_dir"]
     sc = spark.sparkContext
     group = "load_table_job_count"
     sc.setJobGroup(group, group)
@@ -347,6 +350,10 @@ def test_load_table_runs_no_spark_job(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert jobs == [], f"load_table started Spark jobs {jobs}"
-    # the directory's unit came from its part file's footer
-    nanos, nanos_dir = frames[-4], frames[-1]
-    assert nanos_dir.agg(F.max("ts")).first() == nanos.agg(F.max("ts")).first()
+    # every encoding, the Spark-written directory included, loads the same
+    # instants as the testdata file
+    events = frames[R.TABLES.index("events")]
+    want = sorted(events.select("event_id", "ts").collect())
+    for label, df in zip(labels, frames[-4:]):
+        got = sorted(df.select("event_id", "ts").collect())
+        assert got == want, f"{label}: ts differs from the single-file load"
