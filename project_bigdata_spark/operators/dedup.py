@@ -49,7 +49,7 @@ HASH_GROUPS = NUM_HASHES // SLICES_PER_MD5  # md5 calls per shingle
 # input_partitions, target, engaged) here so a bench run can PROVE whether
 # the scale gate engaged (single-split local input -> repartition) or
 # disengaged (multi-split input -> no-op, the 100 TB behavior). Callers that
-# care (the sf1 scaling bench) clear and read it around a plan build. Bounded
+# care (bench.py) clear and read it around a plan build. Bounded
 # so a long-lived session keeps only the latest GATE_LOG_CAP decisions.
 GATE_LOG_CAP = 1024
 GATE_LOG: deque[tuple[str, int, int, bool]] = deque(maxlen=GATE_LOG_CAP)

@@ -35,13 +35,12 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from project_bigdata_spark.sources.registry import SCHEMAS
+
 EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
 BASE_TS = datetime(2024, 1, 1, tzinfo=timezone.utc)
 
-SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, "
-    "event_type string, value double, props string"
-)
+SCHEMA = SCHEMAS["events"]
 
 
 def _h32(event_id: int) -> int:
@@ -113,8 +112,9 @@ def register(spark) -> None:
     pickle (the cloudpickle default for importable classes) dies with
     ModuleNotFoundError whenever the driver wasn't launched from the
     repo root. By-value shipping makes the connector self-contained the
-    same way the engine's mapInPandas closures are; this module is
-    deliberately stdlib+pyspark-only so the by-value closure is small.
+    same way the engine's mapInPandas closures are; the classes reference
+    only stdlib, pyspark and the declared events ``StructType``, so the
+    by-value closure is small.
     """
     import sys
 

@@ -34,11 +34,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from project_bigdata_spark.operators import medallion as M
+from project_bigdata_spark.sources.registry import SCHEMAS
 
-EVENT_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
+EVENT_SCHEMA = SCHEMAS["events"]
 
 
 def parse_stream(raw: DataFrame) -> DataFrame:

@@ -21,7 +21,7 @@ amortizes over every batch screened against that snapshot (exactly like
 the persisted MinHash signature table in ``incremental_dedup``).
 
 One JVM per variant (subprocess) so JIT/shuffle-service state can't leak
-between them. Appends/replaces its own section in BENCH_SCALING.md.
+between them. Prints its BENCH_SCALING.md section to stdout.
 
 Usage: ``python tools/bench_bloom.py`` (parent), or
 ``python tools/bench_bloom.py <variant>``.
@@ -29,7 +29,6 @@ Usage: ``python tools/bench_bloom.py`` (parent), or
 
 from __future__ import annotations
 
-import re
 import subprocess
 import sys
 import time
@@ -44,7 +43,6 @@ NUM_SHARDS = 16
 NUM_BITS = 1 << 23  # 2^23 bits/shard x 16 shards = 16 MiB total, ~13 bits/key
 TIMEOUT_S = 600
 VARIANTS = ("join", "bloom")
-MARK = "## Bloom prefilter soak"
 
 
 def frames(spark):
@@ -119,6 +117,8 @@ def run_variant(which: str) -> None:
 
 
 def main() -> None:
+    from project_bigdata_spark.session import DEFAULT_CPUS
+
     results: dict[str, tuple[str, str]] = {}
     n_cand = 0
     for which in VARIANTS:
@@ -149,15 +149,16 @@ def main() -> None:
                 results[which] = (f"FAILED (exit {proc.returncode})", "—")
         except subprocess.TimeoutExpired:
             results[which] = (f"TIMEOUT ({TIMEOUT_S}s)", "—")
-        print(f"{which}: {results[which]}")
+        print(f"{which}: {results[which]}", file=sys.stderr)
 
     total_mib = NUM_SHARDS * NUM_BITS / 8 / (1 << 20)
     section_lines = [
-        MARK + " (`tools/bench_bloom.py`)",
+        "## Bloom prefilter soak (`tools/bench_bloom.py`)",
         "",
         f"{N_NEW // 10**6}M-key new batch screened against a "
         f"{N_CORPUS // 10**6}M-digest corpus, {DUP_PCT}% true duplicates "
-        "(the steady-state refresh mix). One JVM per variant, local[32]:",
+        "(the steady-state refresh mix). One JVM per variant, "
+        f"local[{DEFAULT_CPUS}]:",
         "",
         "| variant | screen per batch | corpus-side build (amortized) | |",
         "|---|---|---|---|",
@@ -184,17 +185,7 @@ def main() -> None:
         "corpus keys, raise `num_shards` so each bitmap row stays "
         "broadcastable.",
     ]
-    path = Path(__file__).resolve().parent.parent / "BENCH_SCALING.md"
-    text = path.read_text()
-    block = "\n".join(section_lines) + "\n"
-    if MARK in text:
-        text = re.sub(
-            re.escape(MARK) + r".*?(?=\n## |\Z)", block, text, flags=re.S
-        )
-    else:
-        text = text.rstrip() + "\n\n" + block
-    path.write_text(text)
-    print(f"updated {path}")
+    print("\n".join(section_lines))
 
 
 if __name__ == "__main__":

@@ -19,7 +19,7 @@ partial aggregation cannot shrink:
 Each variant runs in its own JVM with a fixed 1g heap — a deliberately
 bounded per-task budget standing in for a real executor's per-task
 share — so a reducer blow-up is observable as OOM instead of borrowing
-the whole 128 GiB box. Appends a section to BENCH_SCALING.md.
+the whole 128 GiB box. Prints its BENCH_SCALING.md section to stdout.
 
 Usage: ``python tools/bench_skew.py`` (parent; one subprocess per
 variant), or ``python tools/bench_skew.py <variant>``.
@@ -123,6 +123,8 @@ def run_variant(which: str) -> None:
 
 
 def main() -> None:
+    from project_bigdata_spark.session import DEFAULT_CPUS
+
     results: dict[str, str] = {}
     n_rows = 0
     for which in VARIANTS:
@@ -149,7 +151,7 @@ def main() -> None:
                 results[which] = f"FAILED (exit {proc.returncode})"
         except subprocess.TimeoutExpired:
             results[which] = "TIMEOUT (600s)"
-        print(f"{which}: {results[which]}")
+        print(f"{which}: {results[which]}", file=sys.stderr)
 
     rows = {
         "plain": "full hot-group pair list in one reducer task",
@@ -162,7 +164,6 @@ def main() -> None:
         "salted_cap": f"`salted_hourly_gold(salt_col, max_pairs={CAP})`",
     }
     section = [
-        "",
         "## Skew soak (`tools/bench_skew.py`)",
         "",
         f"sf0.1 events amplified x{AMPLIFY} ({n_rows:,} rows), "
@@ -171,7 +172,8 @@ def main() -> None:
         "defeats a ts-hashed salt; the operator salts on a row-unique "
         "column). The aggregate carries a collect_list payload, so partial "
         "aggregation cannot shrink the hot group. One JVM per variant, "
-        f"{HEAP} task-heap budget, best of 3 after warm-up, local[32]:",
+        f"{HEAP} task-heap budget, best of 3 after warm-up, "
+        f"local[{DEFAULT_CPUS}]:",
         "",
         "| variant | outcome | |",
         "|---|---|---|",
@@ -186,13 +188,7 @@ def main() -> None:
         "exact max/count. An uncapped hot key fails at SOME scale "
         "regardless of salting; the cap is the part that survives 100 TB.",
     ]
-    md = Path(__file__).resolve().parent.parent / "BENCH_SCALING.md"
-    text = md.read_text()
-    marker = "\n## Skew soak"
-    if marker in text:
-        text = text[: text.index(marker)]
-    md.write_text(text.rstrip() + "\n" + "\n".join(section) + "\n")
-    print("wrote skew section to BENCH_SCALING.md")
+    print("\n".join(section))
 
 
 if __name__ == "__main__":

@@ -15,9 +15,8 @@ builds candidate pairs two ways:
 
 One subprocess per variant with a hard timeout — at web scale the
 uncapped build is not "slower", it does not terminate; the soak makes
-that observable at 20k docs. Appends/replaces its own section in
-BENCH_SCALING.md (re-run after tools/bench_skew.py, which rewrites
-everything from its marker on).
+that observable at 20k docs. Prints its BENCH_SCALING.md section to
+stdout.
 
 Usage: ``python tools/bench_skew_lsh.py`` (parent), or
 ``python tools/bench_skew_lsh.py <variant>``.
@@ -103,7 +102,7 @@ def main() -> None:
                 results[which] = f"FAILED (exit {proc.returncode})"
         except subprocess.TimeoutExpired:
             results[which] = f"TIMEOUT ({TIMEOUT_S}s)"
-        print(f"{which}: {results[which]}")
+        print(f"{which}: {results[which]}", file=sys.stderr)
 
     hot = int(n_docs * HOT_FRAC) if n_docs else int(20_000 * HOT_FRAC)
     rows = {
@@ -112,7 +111,6 @@ def main() -> None:
         "the hot bucket before distinct",
     }
     section = [
-        "",
         "## LSH hot-bucket soak (`tools/bench_skew_lsh.py`)",
         "",
         f"sf0.1 documents amplified x{AMPLIFY} ({n_docs:,} docs), "
@@ -140,13 +138,7 @@ def main() -> None:
         "already-degenerate mass (route them through exact-hash dedup, "
         "which handles identical text for free).",
     ]
-    md = Path(__file__).resolve().parent.parent / "BENCH_SCALING.md"
-    text = md.read_text()
-    marker = "\n## LSH hot-bucket soak"
-    if marker in text:
-        text = text[: text.index(marker)]
-    md.write_text(text.rstrip() + "\n" + "\n".join(section) + "\n")
-    print("wrote LSH soak section to BENCH_SCALING.md")
+    print("\n".join(section))
 
 
 if __name__ == "__main__":

@@ -6,6 +6,7 @@ sys.path.insert(0, "/root/repo")
 import duckdb
 import __spark_entry__ as e
 from project_bigdata_spark.session import get_spark
+from project_bigdata_spark.sources import TABLES
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 spark = get_spark(app_name="verify-drive")
@@ -17,7 +18,7 @@ print(f"entry(): {len(rows)} rows, schema={df.columns}, {time.time()-t0:.1f}s")
 assert len(rows) >= 0
 
 con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
+for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
 
 def canon(v):
