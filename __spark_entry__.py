@@ -35,7 +35,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for every SQL-expressible catalog entry."""
-    return {
-        name: spec.oracle for name, spec in load_all().items() if spec.oracle is not None
-    }
+    """DuckDB-equivalent SQL for every catalog entry."""
+    return {name: spec.oracle for name, spec in load_all().items()}

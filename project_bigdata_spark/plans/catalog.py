@@ -5,12 +5,12 @@ extensions) is registered here as a :class:`QuerySpec`:
 
 - ``builder(spark, sf_dir) -> DataFrame`` — the Spark-first implementation;
 - ``oracle`` — an equivalent DuckDB SQL string over the same parquet tables
-  (views pre-registered by the driver), or ``None`` for ops that are not
-  SQL-expressible (the driver then records a weaker rows-only check).
+  (views pre-registered by the driver). Every entry has one: :func:`query`
+  rejects a missing or empty oracle.
 
 ``__spark_entry__.py`` re-exports this registry verbatim; ``bench.py`` runs
 the ``headline`` subset; ``tests/test_oracle_parity.py`` replays the
-driver's compare locally at sf0.001.
+driver's compare (``tools/parity.py``) locally at sf0.001.
 
 Order: each round's attestation checks only the first 50 ``queries()``
 entries against DuckDB, so catalog order is the attestation schedule.
@@ -45,7 +45,7 @@ Builder = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     builder: Builder
-    oracle: str | None
+    oracle: str
     doc: str = ""
     headline: bool = False
     survey_ids: tuple[str, ...] = field(default_factory=tuple)
@@ -85,12 +85,14 @@ _QUERY_MODULES = [
 
 def query(
     name: str,
-    oracle: str | None,
+    oracle: str,
     doc: str = "",
     headline: bool = False,
     survey_ids: tuple[str, ...] = (),
 ) -> Callable[[Builder], Builder]:
     """Decorator registering a catalog query."""
+    if not oracle:  # an entry the driver cannot attest
+        raise ValueError(f"catalog query {name!r} has no DuckDB oracle")
 
     def wrap(fn: Builder) -> Builder:
         if name in QUERIES:  # a silent overwrite would hide an operator
@@ -110,7 +112,8 @@ def query(
 
 def is_green(row: dict) -> bool:
     """A CORRECTNESS report row passed: the value hash matched, or an entry
-    without an oracle returned rows (the rows-only check)."""
+    without an oracle returned rows (the rows-only check older reports
+    hold; every entry has an oracle now)."""
     return row.get("hash_match") is True or (
         row.get("err") == "no_oracle" and bool(row.get("spark_rows"))
     )

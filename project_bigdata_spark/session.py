@@ -37,6 +37,32 @@ from pyspark.sql import SparkSession
 # run on. Every entry point (bench, tests, tools) uses it unless told otherwise.
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
+# Runtime-settable SQL confs the catalog depends on. get_spark builds with
+# them; sources.registry.ensure_runtime_confs re-asserts them on any session
+# (all are runtime-scoped SQLConf entries, safe to set on a live session).
+RUNTIME_CONFS = {
+    # TIMESTAMP(NANOS) parquet (events.ts) is unreadable otherwise; the
+    # source registry converts those longs to TimestampType (µs) explicitly
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # µs-no-tz parquet must load as TIMESTAMP, not TIMESTAMP_NTZ: the
+    # session tz is pinned UTC (below) so the instant is identical, and
+    # every unix_micros()/window call site requires TIMESTAMP
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # event-time determinism + oracle comparability
+    "spark.sql.session.timeZone": "UTC",
+    # map_from_entries over sorted (k,v) pairs: last wins = the max value
+    # per key (gold's type_values semantics)
+    "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+    # adaptive execution: runtime re-planning (coalesce/skew) on any session
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # partitioned overwrites replace only touched partitions; in STATIC
+    # mode upsert_partitioned would silently drop every untouched
+    # partition on a caller-provided bare session
+    "spark.sql.sources.partitionOverwriteMode": "dynamic",
+}
+
 
 def get_spark(
     app_name: str = "project_bigdata_spark",
@@ -60,24 +86,10 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        # --- adaptive execution: runtime re-planning ---
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # --- shuffle sizing: 2x cores initial, AQE coalesces down ---
         .config("spark.sql.shuffle.partitions", str(2 * cpus))
-        # --- partitioned-write hygiene: only rewrite touched partitions ---
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # --- deterministic event-time semantics + oracle comparability ---
-        .config("spark.sql.session.timeZone", "UTC")
-        # --- map_from_entries over sorted (k,v) pairs: last wins = the
-        #     max value per key (gold's type_values semantics) ---
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         # --- Arrow for any pandas-UDF path ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # --- parquet TIMESTAMP(NANOS) columns surface as long; the source
-        #     registry converts them to TimestampType (µs) explicitly ---
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # --- quiet, non-interactive ---
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
@@ -89,7 +101,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in {**RUNTIME_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -50,6 +50,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from project_bigdata_spark.session import RUNTIME_CONFS
+
 
 def _columns(*cols: tuple[str, DataType]) -> StructType:
     return StructType([StructField(name, dtype) for name, dtype in cols])
@@ -115,33 +117,10 @@ _EVENTS_NANOS = StructType([
 ])
 
 
-# Runtime-settable SQL confs the catalog depends on. The driver may hand
-# us a VANILLA SparkSession (it owns the session, not our factory), so
-# every entry point re-asserts these — all are runtime-scoped SQLConf
-# entries, safe to set on a live session, idempotent.
-RUNTIME_CONFS = {
-    # TIMESTAMP(NANOS) parquet (events.ts) is unreadable otherwise
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # µs-no-tz parquet must load as TIMESTAMP, not TIMESTAMP_NTZ: the
-    # session tz is pinned UTC (below) so the instant is identical, and
-    # every unix_micros()/window call site requires TIMESTAMP
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    # event-time determinism + oracle comparability
-    "spark.sql.session.timeZone": "UTC",
-    # sorted-pairs map build: last wins = max value per key
-    "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
-    # runtime re-planning (coalesce/skew) on any session
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # partitioned overwrites replace only touched partitions; in STATIC
-    # mode upsert_partitioned would silently drop every untouched
-    # partition on a caller-provided vanilla session
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
-}
-
-
 def ensure_runtime_confs(spark: SparkSession) -> None:
+    """Assert :data:`RUNTIME_CONFS` on ``spark``. The driver may hand over a
+    bare SparkSession (it owns the session, not ``get_spark``), so every
+    entry point calls this; the confs are runtime-scoped and idempotent."""
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)

@@ -45,13 +45,6 @@ def sf_dir(request) -> str:
 def duck(sf_dir):
     """DuckDB connection with the driver's table views pre-registered over
     the active ``sf_dir`` (one connection per grid entry)."""
-    import duckdb
+    from tools import parity
 
-    con = duckdb.connect()
-    from project_bigdata_spark.sources import TABLES
-
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con
+    return parity.connect(sf_dir)

@@ -12,11 +12,10 @@ r9; Neyman/Cohen's d r10) by making the whole class regression-tested.
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from project_bigdata_spark.plans.catalog import load_all
+from tools import parity
 
 SWEEP_MODULES = (
     "stats_queries",
@@ -30,8 +29,7 @@ def sweep_specs():
     return [
         s
         for s in load_all().values()
-        if s.oracle is not None
-        and s.builder.__module__.rsplit(".", 1)[-1] in SWEEP_MODULES
+        if s.builder.__module__.rsplit(".", 1)[-1] in SWEEP_MODULES
     ]
 
 
@@ -46,57 +44,9 @@ def deg_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def deg_duck(deg_dir):
-    import duckdb
-
-    from project_bigdata_spark.sources import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{deg_dir}/{t}.parquet'"
-        )
-    return con
-
-
-def _canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return repr(v)
-    if isinstance(v, bool):
-        return str(int(v))
-    return str(v)
+    return parity.connect(deg_dir)
 
 
 @pytest.mark.parametrize("spec", sweep_specs(), ids=lambda s: s.name)
 def test_degenerate_parity(spec, spark, deg_dir, deg_duck):
-    sdf = spec.builder(spark, deg_dir)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    spark_cols = sdf.columns
-
-    rel = deg_duck.execute(spec.oracle)
-    duck_cols = [d[0] for d in rel.description]
-    duck_rows = [tuple(r) for r in rel.fetchall()]
-
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{spec.name}: column mismatch {spark_cols} vs {duck_cols}"
-    )
-    idx = [duck_cols.index(c) for c in spark_cols]
-    duck_rows = [tuple(r[i] for i in idx) for r in duck_rows]
-
-    assert len(spark_rows) == len(duck_rows), (
-        f"{spec.name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    ms_s = sorted("|".join(_canon(v) for v in r) for r in spark_rows)
-    ms_d = sorted("|".join(_canon(v) for v in r) for r in duck_rows)
-    if ms_s != ms_d:
-        diff_s = [r for r in ms_s if r not in set(ms_d)][:5]
-        diff_d = [r for r in ms_d if r not in set(ms_s)][:5]
-        raise AssertionError(
-            f"{spec.name}: degenerate-data divergence\n"
-            f" spark-only: {diff_s}\n duck-only: {diff_d}"
-        )
+    parity.check(spec.name, spec.builder(spark, deg_dir), deg_duck, spec.oracle)

@@ -22,13 +22,13 @@ true pairs, never vacuous.
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
 import pytest
 
 from project_bigdata_spark.plans.catalog import load_all
+from tools import parity
 
 # honor the conftest env convention (SPARK_GRAFT_TEST_SF_GRID lists the
 # fixture roots; the sf0.01 member is the replication seed here) and
@@ -54,20 +54,6 @@ ADAPTIVE_N = 2048          # 8 * 2^8: smallest corpus where k > N_PLANES
 CODEBOOK_N = 2048          # smallest corpus where n//256 > 8
 
 
-def _canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return repr(v)
-    if isinstance(v, bool):
-        return str(int(v))
-    return str(v)
-
-
 @pytest.fixture(scope="module")
 def guard_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("guard_sf")
@@ -90,11 +76,7 @@ def guard_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def guard_duck(guard_dir):
-    con = duckdb.connect()
-    for t in ("documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{guard_dir}/{t}.parquet'"
-        )
+    con = parity.connect(guard_dir)
     yield con
     con.close()
 
@@ -185,30 +167,9 @@ def _branch_checks(name: str, cols: list[str], rows: list[tuple]) -> None:
 def test_guard_active_parity(name, spark, guard_dir, guard_duck):
     spec = load_all()[name]
     sdf = spec.builder(spark, guard_dir)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    spark_rows = parity.check(name, sdf, guard_duck, spec.oracle)
     assert len(spark_rows) > 0, f"{name}: guard-active output is empty"
-    _branch_checks(name, spark_cols, spark_rows)
-
-    rel = guard_duck.execute(spec.oracle)
-    duck_cols = [d[0] for d in rel.description]
-    duck_rows = [tuple(r) for r in rel.fetchall()]
-
-    assert sorted(spark_cols) == sorted(duck_cols)
-    idx = [duck_cols.index(c) for c in spark_cols]
-    duck_rows = [tuple(r[i] for i in idx) for r in duck_rows]
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: guard-active row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    ms_s = sorted("|".join(_canon(v) for v in r) for r in spark_rows)
-    ms_d = sorted("|".join(_canon(v) for v in r) for r in duck_rows)
-    if ms_s != ms_d:
-        only_s = [r for r in ms_s if r not in set(ms_d)][:5]
-        only_d = [r for r in ms_d if r not in set(ms_s)][:5]
-        raise AssertionError(
-            f"{name}: guard-active value mismatch\n spark-only: {only_s}\n"
-            f" duck-only: {only_d}"
-        )
+    _branch_checks(name, sdf.columns, spark_rows)
 
 
 # ---------------------------------------------------------------------------
@@ -254,7 +215,9 @@ def test_reordered_duplicates_pair_through_band_key(
     spec = load_all()["ngram_jaccard_block"]
     sdf = spec.builder(spark, reorder_dir)
     spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    # the mirrored oracle agrees value-for-value
+    con = parity.connect(reorder_dir)
+    spark_rows = parity.check(spec.name, sdf, con, spec.oracle)
     assert len(spark_rows) > 0
 
     ia, ib = spark_cols.index("id_a"), spark_cols.index("id_b")
@@ -276,11 +239,6 @@ def test_reordered_duplicates_pair_through_band_key(
     # prove the OLD prefix key would have missed them: the paired docs
     # disagree on their first 8 lowered chars, and their (lang, source)
     # block is dense (sub-blocking active)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"'{reorder_dir}/documents.parquet'"
-    )
     miss = con.execute(
         """WITH p AS (SELECT d1.doc_id AS ida, d2.doc_id AS idb,
                  substring(lower(d1.text), 1, 8) AS pa,
@@ -291,23 +249,11 @@ def test_reordered_duplicates_pair_through_band_key(
            AND d1.doc_id < 20000000)
           SELECT count(*) FROM p WHERE pa <> pb"""
     ).fetchone()[0]
+    con.close()
     assert miss == 255, (
         "fixture defect: rotated copies must differ from originals in "
         "their first 8 lowered chars for the prefix-key-miss proof"
     )
-
-    # and the mirrored oracle agrees value-for-value
-    rel = con.execute(spec.oracle)
-    duck_cols = [c[0] for c in rel.description]
-    duck_rows = [tuple(r) for r in rel.fetchall()]
-    con.close()
-    assert sorted(spark_cols) == sorted(duck_cols)
-    idx = [duck_cols.index(c) for c in spark_cols]
-    duck_rows = [tuple(r[i] for i in idx) for r in duck_rows]
-    assert len(spark_rows) == len(duck_rows)
-    ms_s = sorted("|".join(_canon(v) for v in r) for r in spark_rows)
-    ms_d = sorted("|".join(_canon(v) for v in r) for r in duck_rows)
-    assert ms_s == ms_d
 
 
 @pytest.fixture(scope="module")
@@ -340,7 +286,9 @@ def test_embedding_near_dups_pair_cap_binds_and_preserves_correctness(
     spec = load_all()["embedding_near_dups"]
     sdf = spec.builder(spark, cap_dir)
     spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    # capped oracle: value-identical to Spark
+    con = parity.connect(cap_dir)
+    spark_rows = parity.check(spec.name, sdf, con, spec.oracle)
     assert len(spark_rows) > 0
 
     ia = spark_cols.index("id_a")
@@ -350,23 +298,6 @@ def test_embedding_near_dups_pair_cap_binds_and_preserves_correctness(
     assert max(per_vec.values()) == 16, (
         f"cap did not bind: max pairs/vec = {max(per_vec.values())}"
     )
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM "
-        f"'{cap_dir}/embeddings.parquet'"
-    )
-    # capped oracle: value-identical to Spark
-    rel = con.execute(spec.oracle)
-    duck_cols = [c[0] for c in rel.description]
-    duck_rows = [tuple(r) for r in rel.fetchall()]
-    assert sorted(spark_cols) == sorted(duck_cols)
-    idx = [duck_cols.index(c) for c in spark_cols]
-    duck_rows = [tuple(r[i] for i in idx) for r in duck_rows]
-    assert len(spark_rows) == len(duck_rows)
-    ms_s = sorted("|".join(_canon(v) for v in r) for r in spark_rows)
-    ms_d = sorted("|".join(_canon(v) for v in r) for r in duck_rows)
-    assert ms_s == ms_d
 
     # uncapped oracle (QUALIFY stripped): the cap changed coverage only —
     # kept rows are a subset, and some vector truly had > 16 partners
@@ -378,15 +309,15 @@ def test_embedding_near_dups_pair_cap_binds_and_preserves_correctness(
     urows = [tuple(r) for r in urel.fetchall()]
     con.close()
     u_idx = [u_cols.index(c) for c in spark_cols]
-    u_set = set(
-        "|".join(_canon(r[i]) for i in u_idx) for r in urows
+    u_set = {parity.row_key(r[i] for i in u_idx) for r in urows}
+    assert all(parity.row_key(r) in u_set for r in spark_rows), (
+        "capped rows not in uncapped set"
     )
-    assert all(m in u_set for m in ms_d), "capped rows not in uncapped set"
     u_per_vec = Counter(r[u_ia] for r in urows)
     assert max(u_per_vec.values()) > 16, (
         "fixture defect: uncapped pair count never exceeded the cap"
     )
-    assert len(urows) > len(duck_rows)
+    assert len(urows) > len(spark_rows)
 
 
 def test_embedding_near_dups_candidate_cap_binds_and_is_coverage_only(
@@ -401,11 +332,7 @@ def test_embedding_near_dups_candidate_cap_binds_and_is_coverage_only(
     (links to a canonical low-id representative, the orientation
     dedup_apply consumes)."""
     spec = load_all()["embedding_near_dups"]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM "
-        f"'{cap_dir}/embeddings.parquet'"
-    )
+    con = parity.connect(cap_dir)
     capped = con.execute(spec.oracle).fetchall()
     cols = [c[0] for c in con.execute(spec.oracle).description]
     # anchor-uncapped variant: anchors come straight from b, output cap

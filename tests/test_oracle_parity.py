@@ -1,68 +1,71 @@
-"""Local replay of the driver's differential gate (SURVEY.md §5-2).
+"""Local replay of the driver's differential gate (SURVEY.md §5-2), plus
+the catalog-wide plan audit on the same build.
 
-For every catalog entry with an oracle: run the Spark builder and the
-DuckDB SQL over the same parquet tables and require identical row count,
-column names, and an order-insensitive multiset of stringified rows —
-a *stricter* local version of the driver's value-hash compare, so any
-engine-formatting drift is caught here first.
+Every catalog entry's Spark result must equal its DuckDB oracle's under
+``tools/parity.py``: a *stricter* local version of the driver's
+value-hash compare, so any engine-formatting drift is caught here first.
+Before the result is collected, the physical plan of every entry that is
+not side-effectful gets ``tools/plan_doctor.py``'s checks (no cartesian, no
+row-at-a-time Python UDF, no SinglePartition exchange outside
+``SINGLE_PARTITION_OK``).
+
+``tools/drive_contract.py``, the driver simulator, rejects bad input
+before any Spark job.
 """
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from project_bigdata_spark.plans.catalog import load_all
+from tools import drive_contract, parity, plan_doctor
 
 
-def _canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return repr(v)
-    if isinstance(v, bool):
-        return str(int(v))
-    return str(v)
-
-
-def _rows_multiset(cols, rows):
-    return sorted("|".join(_canon(v) for v in row) for row in rows)
-
-
-def all_specs():
-    return [s for s in load_all().values() if s.oracle is not None]
-
-
-@pytest.mark.parametrize("spec", all_specs(), ids=lambda s: s.name)
+@pytest.mark.parametrize("spec", load_all().values(), ids=lambda s: s.name)
 def test_parity(spec, spark, duck, sf_dir):
     sdf = spec.builder(spark, sf_dir)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    spark_cols = sdf.columns
+    if spec.name not in plan_doctor.SIDE_EFFECTFUL:
+        findings, _ = plan_doctor.check_plan(spec.name, sdf)
+        assert not findings, f"{spec.name}: plan flagged {','.join(findings)}"
+    parity.check(spec.name, sdf, duck, spec.oracle)
 
-    rel = duck.execute(spec.oracle)
-    duck_cols = [d[0] for d in rel.description]
-    duck_rows = [tuple(r) for r in rel.fetchall()]
 
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{spec.name}: column mismatch {spark_cols} vs {duck_cols}"
-    )
-    # align duck column order to spark's
-    idx = [duck_cols.index(c) for c in spark_cols]
-    duck_rows = [tuple(r[i] for i in idx) for r in duck_rows]
+@pytest.mark.parametrize(
+    "argv, sf_dir",
+    [
+        (["no_such_entry"], "/root/testdata/sf0.001"),
+        (["gold_hourly"], "/nonexistent/sf0.01"),
+    ],
+    ids=["unknown-name", "missing-dir"],
+)
+def test_drive_contract_bad_input_exits_before_any_job(
+    spark, monkeypatch, argv, sf_dir
+):
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    sc = spark.sparkContext
+    group = "drive-contract-bad-input"
+    sc.setJobGroup(group, "drive_contract.py input check")
+    try:
+        with pytest.raises(SystemExit) as exc:
+            drive_contract.main(argv)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "drive_contract.py:" in str(exc.value.code)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
-    assert len(spark_rows) == len(duck_rows), (
-        f"{spec.name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    ms_s = _rows_multiset(spark_cols, spark_rows)
-    ms_d = _rows_multiset(spark_cols, duck_rows)
-    if ms_s != ms_d:
-        diff_s = [r for r in ms_s if r not in set(ms_d)][:5]
-        diff_d = [r for r in ms_d if r not in set(ms_s)][:5]
-        raise AssertionError(
-            f"{spec.name}: value mismatch\n spark-only: {diff_s}\n duck-only: {diff_d}"
-        )
+
+def test_drive_contract_exit_status(spark, monkeypatch, capsys):
+    """Exit 0 when the entry matches its oracle; exit 1, naming the column,
+    when the oracle is altered."""
+    name = "q6_forecast_revenue"
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    assert drive_contract.main([name]) == 0
+    assert "RESULT: ALL OK" in capsys.readouterr().out
+
+    oracles = drive_contract.contract.oracle_sql()
+    oracles[name] = f"SELECT * REPLACE (n_lines + 1 AS n_lines) FROM ({oracles[name]})"
+    monkeypatch.setattr(drive_contract.contract, "oracle_sql", lambda: oracles)
+    assert drive_contract.main([name]) == 1
+    out = capsys.readouterr().out
+    assert "column n_lines:" in out
+    assert f"RESULT: 1 FAILED ['{name}']" in out

@@ -400,7 +400,7 @@ def test_no_decimal_cast_idiom_left_in_oracles():
     offenders = {
         name: spec.oracle
         for name, spec in load_all().items()
-        if spec.oracle and "DECIMAL(12,2)" in spec.oracle
+        if "DECIMAL(12,2)" in spec.oracle
     }
     assert not offenders, (
         "double->DECIMAL(12,2) cast idiom resurfaced in oracles: "
@@ -429,7 +429,7 @@ def test_all_oracles_invariant_under_tie_mode_flip(duck):
     sensitive = []
     for name, spec in specs.items():
         sql = spec.oracle
-        if not sql or name in _TIE_MODE_BY_SPEC:
+        if name in _TIE_MODE_BY_SPEC:
             continue
         flipped = _flip_floor_half_up_to_half_even(sql, name)
         base = duck.execute(sql).fetchall()

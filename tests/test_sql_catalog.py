@@ -99,6 +99,19 @@ def test_attestation_order_rule():
     assert not is_green({"hash_match": None, "err": "no_oracle", "spark_rows": 0})
 
 
+@pytest.mark.parametrize("oracle", [None, ""], ids=["none", "empty"])
+def test_query_rejects_missing_oracle(oracle):
+    """Every entry carries a DuckDB oracle: registering one without it
+    raises and leaves the registry as it was."""
+    from project_bigdata_spark.plans import catalog
+
+    catalog.load_all()
+    before = dict(catalog.QUERIES)
+    with pytest.raises(ValueError, match="no DuckDB oracle"):
+        catalog.query("oracle_less_entry", oracle)(lambda spark, sf_dir: None)
+    assert catalog.QUERIES == before
+
+
 def test_load_all_raises_on_missing_module(monkeypatch):
     """A query module that fails to import must not silently drop its
     family from the driver contract."""

@@ -1,61 +1,77 @@
-"""Simulate the driver: import __spark_entry__, smoke entry(), then run every
-queries() entry at sf0.01 and compare to oracle_sql() via DuckDB (row count +
-schema + order-insensitive value multiset)."""
-import os, sys, time, math
-sys.path.insert(0, "/root/repo")
-import duckdb
-import __spark_entry__ as e
-from project_bigdata_spark.session import get_spark
-from project_bigdata_spark.sources import TABLES
+"""Simulate the driver: hand ``__spark_entry__`` a bare SparkSession, smoke
+``entry()``, then compare catalog entries with their DuckDB oracles through
+``tools/parity.py``.
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-spark = get_spark(app_name="verify-drive")
+Usage: python tools/drive_contract.py [NAME ...]
+       (env: SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.01)
 
-t0 = time.time()
-df = e.entry(spark)
-rows = df.collect()
-print(f"entry(): {len(rows)} rows, schema={df.columns}, {time.time()-t0:.1f}s")
-assert len(rows) >= 0
+NAMEs are catalog entries; with none, every entry is compared. The session
+is what the driver hands over: ``local[DEFAULT_CPUS]`` with Spark's
+defaults and nothing from ``session.get_spark``, so each entry must assert
+the confs it needs itself. An unknown name or a missing dir exits with a
+one-line message before Spark starts. The sweep goes on past an entry that
+raises or mismatches; the exit status is 1 if any did.
+"""
 
-con = duckdb.connect()
-for t in TABLES:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+from __future__ import annotations
 
-def canon(v):
-    if v is None: return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v): return "NaN"
-        if v == int(v) and abs(v) < 1e15: return str(int(v))
-        return repr(v)
-    return str(v)
+import os
+import sys
+import time
+import traceback
+from pathlib import Path
 
-qs, os_ = e.queries(), e.oracle_sql()
-only = set(sys.argv[1:])
-fail = 0
-for name, builder in qs.items():
-    if only and name not in only:
-        continue
-    if name not in os_:
-        srows = builder(spark, SF).collect()
-        print(f"OK  {name}: rows-only check, spark={len(srows)} (no oracle)")
-        continue
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+import __spark_entry__ as contract  # noqa: E402
+from project_bigdata_spark.session import DEFAULT_CPUS  # noqa: E402
+from tools import parity  # noqa: E402
+
+DEFAULT_SF_DIR = "/root/testdata/sf0.01"
+
+
+def main(argv: list[str]) -> int:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    builders, oracles = contract.queries(), contract.oracle_sql()
+    names = argv or list(builders)
+    for n in names:
+        if n not in builders:
+            sys.exit(f"drive_contract.py: unknown catalog entry {n!r}")
+    if not Path(sf_dir).is_dir():
+        sys.exit(f"drive_contract.py: {sf_dir!r} is not an existing dir")
+
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
+        .appName("drive-contract")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
     t0 = time.time()
-    sdf = builder(spark, SF)
-    srows = [tuple(r) for r in sdf.collect()]
-    scols = sdf.columns
-    rel = con.execute(os_[name])
-    dcols = [d[0] for d in rel.description]
-    drows = rel.fetchall()
-    idx = [dcols.index(c) for c in scols]
-    drows = [tuple(r[i] for i in idx) for r in drows]
-    ok_schema = sorted(scols) == sorted(dcols)
-    ms_s = sorted("|".join(canon(v) for v in r) for r in srows)
-    ms_d = sorted("|".join(canon(v) for v in r) for r in drows)
-    ok = ok_schema and ms_s == ms_d
-    fail += (not ok)
-    print(f"{'OK ' if ok else 'MISMATCH'} {name}: spark={len(srows)} duck={len(drows)} schema_ok={ok_schema} {time.time()-t0:.1f}s")
-    if not ok and ms_s != ms_d:
-        only_s = [r for r in ms_s if r not in set(ms_d)][:2]
-        only_d = [r for r in ms_d if r not in set(ms_s)][:2]
-        print("  spark-only:", only_s, "\n  duck-only:", only_d)
-print("RESULT:", "ALL OK" if fail == 0 else f"{fail} MISMATCHES")
+    print(f"entry(): {len(contract.entry(spark).collect())} rows "
+          f"{time.time() - t0:.1f}s", flush=True)
+
+    con = parity.connect(sf_dir)
+    failed = []
+    for i, name in enumerate(names, 1):
+        t0 = time.time()
+        try:
+            parity.check(name, builders[name](spark, sf_dir), con, oracles[name])
+            status = "OK"
+        except AssertionError as exc:
+            failed.append(name)
+            status = f"FAIL {exc}"
+        except Exception as exc:  # keep sweeping; the traceback goes to stderr
+            failed.append(name)
+            traceback.print_exc()
+            status = f"FAIL {type(exc).__name__}: {str(exc)[:200]}"
+        print(f"[{i}/{len(names)}] {name} {time.time() - t0:.1f}s {status}",
+              flush=True)
+    verdict = f"{len(failed)} FAILED {failed}" if failed else "ALL OK"
+    print(f"RESULT: {verdict} ({len(names)} compared at {sf_dir})")
+    return 1 if failed else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

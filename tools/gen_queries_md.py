@@ -18,15 +18,14 @@ def main() -> None:
         "",
         "Auto-generated from `project_bigdata_spark/plans/` "
         "(`python tools/gen_queries_md.py`). Every entry is exposed through "
-        "`__spark_entry__.queries()`; entries with a DuckDB oracle are "
-        "differentially verified by the driver at sf0.01.",
+        "`__spark_entry__.queries()` with a DuckDB oracle, and the driver "
+        "verifies each differentially at sf0.01.",
         "",
         f"**{len(specs)} queries** — "
-        f"{sum(1 for s in specs.values() if s.oracle)} with oracles, "
         f"{sum(1 for s in specs.values() if s.headline)} bench headliners.",
         "",
-        "| query | SURVEY §2 | oracle | bench | what it pins |",
-        "|---|---|---|---|---|",
+        "| query | SURVEY §2 | bench | what it pins |",
+        "|---|---|---|---|",
     ]
     for name, s in specs.items():
         ids = ", ".join(s.survey_ids) or "—"
@@ -34,8 +33,7 @@ def main() -> None:
         if len(doc) > 160:
             doc = doc[:157] + "..."
         lines.append(
-            f"| `{name}` | {ids} | {'✓' if s.oracle else 'rows-only'} "
-            f"| {'✓' if s.headline else ''} | {doc} |"
+            f"| `{name}` | {ids} | {'✓' if s.headline else ''} | {doc} |"
         )
 
     coverage: dict[str, list[str]] = defaultdict(list)

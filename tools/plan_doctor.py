@@ -1,8 +1,9 @@
 """Catalog-wide physical-plan audit: every query's pre-execution plan is
 checked for the antipatterns that break at 100 TB, and the result is
 published as PLAN_AUDIT.md. tests/test_plans.py pins deep properties for
-~30 showcase queries; this tool sweeps ALL of them for the three checks
-that need no per-query knowledge:
+~30 showcase queries; :func:`check_plan` runs the three checks that need
+no per-query knowledge, and ``tests/test_oracle_parity.py`` applies it to
+every entry's build before collecting it:
 
 - **cartesian**: a `CartesianProduct` operator (an unconditioned
   fact×fact join — always a bug; intentional tiny-side cross joins
@@ -30,7 +31,6 @@ any non-whitelisted finding)
 
 from __future__ import annotations
 
-import re
 import sys
 from pathlib import Path
 
@@ -346,11 +346,28 @@ SINGLE_PARTITION_OK = {
 }
 
 
+# finding -> the operator that marks it in the formatted physical plan
+PLAN_MARKERS = {
+    "cartesian": "CartesianProduct",
+    "py_row_udf": "BatchEvalPython",
+}
+
+
+def check_plan(name: str, df) -> tuple[list[str], bool]:
+    """(findings, whitelisted) for ``df``'s pre-execution physical plan:
+    the antipatterns found, and whether the plan holds a SinglePartition
+    exchange that ``SINGLE_PARTITION_OK`` allows for ``name``."""
+    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    plan = df._jdf.queryExecution().explainString(jmode.fromString("formatted"))
+    findings = [f for f, marker in PLAN_MARKERS.items() if marker in plan]
+    single = "Arguments: SinglePartition" in plan
+    if single and name not in SINGLE_PARTITION_OK:
+        findings.append("single_partition")
+    return findings, single and name in SINGLE_PARTITION_OK
+
+
 def audit() -> int:
     spark = get_spark(app_name="plan-doctor")
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
     specs = load_all()
     rows: list[tuple[str, str, str]] = []
     bad = 0
@@ -361,30 +378,18 @@ def audit() -> int:
             rows.append((name, "skipped", "side-effectful builder"))
             continue
         try:
-            df = spec.builder(spark, SF_DIR)
-            plan = df._jdf.queryExecution().explainString(jmode)
+            findings, whitelisted = check_plan(name, spec.builder(spark, SF_DIR))
         except Exception as exc:  # noqa: BLE001
             rows.append((name, "ERROR", str(exc).splitlines()[0][:80]))
             bad += 1
             continue
-        findings = []
-        if "CartesianProduct" in plan:
-            findings.append("cartesian")
-        if "BatchEvalPython" in plan:
-            findings.append("py_row_udf")
-        if re.search(r"Arguments: SinglePartition", plan):
-            if name in SINGLE_PARTITION_OK:
-                rows.append(
-                    (name, "ok*", f"1-partition OK: {SINGLE_PARTITION_OK[name]}")
-                )
-                if findings:
-                    rows[-1] = (name, "FLAG", ",".join(findings))
-                    bad += 1
-                continue
-            findings.append("single_partition")
         if findings:
             rows.append((name, "FLAG", ",".join(findings)))
             bad += 1
+        elif whitelisted:
+            rows.append(
+                (name, "ok*", f"1-partition OK: {SINGLE_PARTITION_OK[name]}")
+            )
         else:
             rows.append((name, "ok", ""))
     lines = [
