@@ -142,8 +142,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     works; or an unannotated INT64 of ns) is declared ``bigint`` and
     converted ns -> µs with integer ``div``.
     """
+    return _read_declared(spark, f"{sf_dir}/{name}.parquet", name)
+
+
+def _read_declared(spark: SparkSession, path: str, name: str) -> DataFrame:
     ensure_runtime_confs(spark)
-    path = f"{sf_dir}/{name}.parquet"
     schema = declared_schema(path, name)
     df = spark.read.schema(schema).parquet(path)
     if schema is _EVENTS_NANOS:
@@ -203,9 +206,12 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
 
 
 def read_events(spark: SparkSession, path: str) -> DataFrame:
-    """Events-shaped parquet reader for arbitrary paths (jobs/CLI use)."""
-    ensure_runtime_confs(spark)
-    return normalize_event_ts(spark.read.parquet(path))
+    """Events parquet at any ``path`` (a file, or a directory of part
+    files), for jobs and the CLI: read like :func:`load_table`'s
+    ``events``, with the declared schema, so nothing is inferred and the
+    call starts no Spark job; ``ts`` loads as ``timestamp`` whatever its
+    parquet encoding."""
+    return _read_declared(spark, path, "events")
 
 
 def write_partitioned_parquet(

@@ -17,9 +17,12 @@ Two fan-out strategies:
   concurrent queries, independent triggers/checkpoints: the reference's
   topology, minus the triple parse since Silver derives from the parsed
   stream, not the raw source).
-- :func:`foreach_batch_fanout` — ONE query; each micro-batch is written to
-  all three layers transactionally-ish per epoch. Fewer state stores, one
-  source offset log; the right default when sinks share cadence.
+- :func:`foreach_batch_fanout` — ONE query; each micro-batch is parsed
+  once (Bronze, persisted for the batch's lifetime) and written to all
+  three layers by three concurrent writes that inherit the query's job
+  group, so ``stop()`` cancels them; the batch, and with it the query,
+  fails if any write fails. Fewer state stores, one source offset log;
+  the right default when sinks share cadence.
 
 Scale notes: the streaming gold agg keeps state per (entity, hour) in the
 state store; the 1-hour watermark bounds state to ~2h × |entities| rows.
@@ -29,7 +32,11 @@ only. ``failOnDataLoss=false`` (T7) tolerates source truncation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -123,21 +130,42 @@ def foreach_batch_fanout(
     raw: DataFrame, out_dir: str, trigger_secs: int = 10
 ) -> StreamingQuery:
     """T5 fixed: ONE streaming query; each micro-batch fans out to all
-    three layers (parse once, write thrice). Gold here is per-epoch
-    incremental (no cross-batch state) — the batch gold job provides the
-    consolidated hourly view; this sink feeds it fresh partitions."""
+    three layers. Gold here is per-epoch incremental (no cross-batch
+    state) — the batch gold job provides the consolidated hourly view;
+    this sink feeds it fresh partitions.
+
+    Invariant per micro-batch: the input is read and parsed once (Bronze
+    is persisted until all three writes end); the Bronze, Silver and
+    Gold-increment frames are built and written at the same time, each on
+    its own thread that inherits the stream thread's local properties, so
+    every job is in the query's job group (``runId``) and ``stop()``
+    cancels it; the batch fails with the first write's error, in sink
+    order, once all three have ended. One micro-batch file is one task per
+    stage, so run one after another the writes would leave all but one
+    core idle.
+
+    Jobs: four per batch when sequential (Bronze, Silver, Gold's map and
+    result stages), five concurrently. Gold's plan has a shuffle, so AQE
+    reads the cache through a table-cache stage, which starts one job to
+    fill the cache when Bronze has not filled it yet. That job's task and
+    Bronze's ask for the same cached block: one computes it, the other
+    waits for it, so the input is still read once."""
     parsed = parse_stream(raw)
+
+    def append(df: DataFrame, layer: str) -> None:
+        df.write.mode("append").parquet(f"{out_dir}/{layer}")
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         b = M.bronze(batch_df)
         b.persist()
         try:
-            b.write.mode("append").parquet(f"{out_dir}/bronze")
-            s = M.silver(b)
-            s.write.mode("append").parquet(f"{out_dir}/silver")
-            M.gold_hourly(s).drop("type_values").write.mode("append").parquet(
-                f"{out_dir}/gold_increments"
-            )
+            _run_concurrently(batch_df.sparkSession, [
+                lambda: append(b, "bronze"),
+                lambda: append(M.silver(b), "silver"),
+                lambda: append(
+                    M.gold_hourly(M.silver(b)).drop("type_values"), "gold_increments"
+                ),
+            ])
         finally:
             b.unpersist()
 
@@ -147,6 +175,18 @@ def foreach_batch_fanout(
         .trigger(processingTime=f"{trigger_secs} seconds")
         .start()
     )
+
+
+def _run_concurrently(spark: SparkSession, calls: list[Callable[[], None]]) -> None:
+    """Run every call at once, one thread each, and return when all have
+    ended, raising the first failure in ``calls`` order. Each thread gets
+    its own copy of the caller's local properties (one wrapper per call):
+    a shared copy would let one write's ``spark.sql.execution.id`` leak
+    into another's jobs."""
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in calls]
+    for future in futures:
+        future.result()
 
 
 def session_stream(

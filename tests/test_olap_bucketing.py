@@ -6,14 +6,7 @@ from pyspark.sql import functions as F
 
 from project_bigdata_spark.functions.aqi import aqi_recommendation
 from project_bigdata_spark.sources import registry as R
-
-
-def _plan(df) -> str:
-    spark = df.sparkSession
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    return df._jdf.queryExecution().explainString(jmode)
+from tools.plan_doctor import formatted_plan
 
 
 def test_olap_table_null_fill(spark):
@@ -47,7 +40,7 @@ def test_bucketed_join_is_exchange_free(spark, sf_dir):
         joined = spark.table("lineitem_b").join(
             spark.table("orders_b"), "o_orderkey"
         )
-        plan = _plan(joined)
+        plan = formatted_plan(joined)
         assert "SortMergeJoin" in plan
         assert "Exchange hashpartitioning" not in plan  # co-located: no shuffle
         assert joined.count() > 0

@@ -10,14 +10,11 @@ this is where it fails loudly.
 from __future__ import annotations
 
 from project_bigdata_spark.plans.catalog import load_all
+from tools.plan_doctor import formatted_plan
 
 
 def plan_of(spark, sf_dir, name: str) -> str:
-    df = load_all()[name].builder(spark, sf_dir)
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    return df._jdf.queryExecution().explainString(jmode)
+    return formatted_plan(load_all()[name].builder(spark, sf_dir))
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from project_bigdata_spark.operators import publish as PB
 from project_bigdata_spark.sources import load_table
+from tools.plan_doctor import formatted_plan
 
 SF = "/root/testdata/sf0.001"
 N_SHARDS = 8
@@ -65,10 +66,7 @@ def test_read_shard_prunes_partitions(spark, tmp_path):
 
     # partition PRUNING: the shard filter must appear as a partition
     # filter at the scan, and the scan must touch ~1/N of the files
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = one._jdf.queryExecution().explainString(jmode)
+    plan = formatted_plan(one)
     assert "PartitionFilters" in plan
     assert "shard_id" in plan.split("PartitionFilters", 1)[1].splitlines()[0]
 

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from project_bigdata_spark.operators import joins as J
 from project_bigdata_spark.sources import registry as R
+from tools.plan_doctor import formatted_plan
 
 
 def test_kafka_envelope_roundtrip(spark):
@@ -106,10 +107,7 @@ def test_partition_pruning_on_partitioned_table(spark, tmp_path):
     )
     R.write_partitioned_parquet(df, p, ["year", "month"])
     q = spark.read.parquet(p).filter("month = 2").select("v")
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = q._jdf.queryExecution().explainString(jmode)
+    plan = formatted_plan(q)
     assert "PartitionFilters" in plan and "month" in plan
     assert q.count() == 10
 
@@ -309,7 +307,9 @@ def test_load_table_runs_no_spark_job(spark, tmp_path):
     """Declared schemas: loading any table, and ``events`` in each of the
     three ``ts`` encodings (and as a Spark-written directory of part
     files), lists no files and reads no footer in Spark, so no job starts.
-    Schema inference ran one job per call."""
+    Schema inference ran one job per call. ``read_events`` (the batch
+    medallion job's reader of any events path) reads the same way, also
+    on a directory of pyarrow part files."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -332,6 +332,11 @@ def test_load_table_runs_no_spark_job(spark, tmp_path):
         str(tmp_path / "spark_dir" / "events.parquet")
     )
     labels = [*labels, "spark_dir"]
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    step = -(-src.num_rows // 3)
+    for i in range(3):
+        pq.write_table(src.slice(i * step, step), parts / f"part-{i:05d}.parquet")
     sc = spark.sparkContext
     group = "load_table_job_count"
     sc.setJobGroup(group, group)
@@ -342,14 +347,19 @@ def test_load_table_runs_no_spark_job(spark, tmp_path):
             R.load_table(spark, str(tmp_path / label), "events")
             for label in labels
         ]
+        reads = {
+            label: R.read_events(spark, str(tmp_path / label / "events.parquet"))
+            for label in labels
+        }
+        reads["parts"] = R.read_events(spark, str(parts))
         # resolving each schema runs no job either
-        assert [dict(df.dtypes).get("ts") for df in frames[-4:]] == [
-            "timestamp"
-        ] * 4
+        assert [
+            dict(df.dtypes).get("ts") for df in [*frames[-4:], *reads.values()]
+        ] == ["timestamp"] * 9
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert jobs == [], f"load_table started Spark jobs {jobs}"
+    assert jobs == [], f"load_table or read_events started Spark jobs {jobs}"
     # every encoding, the Spark-written directory included, loads the same
     # instants as the testdata file
     events = frames[R.TABLES.index("events")]
@@ -357,3 +367,6 @@ def test_load_table_runs_no_spark_job(spark, tmp_path):
     for label, df in zip(labels, frames[-4:]):
         got = sorted(df.select("event_id", "ts").collect())
         assert got == want, f"{label}: ts differs from the single-file load"
+    for label, df in reads.items():
+        got = sorted(df.select("event_id", "ts").collect())
+        assert got == want, f"read_events {label}: rows differ"

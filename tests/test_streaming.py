@@ -4,6 +4,8 @@ synchronously; watermark late-data semantics verified batch by batch."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import threading
 import time
 
 import pandas as pd
@@ -97,6 +99,58 @@ def test_foreach_batch_fanout_single_parse(spark, stream_env):
         assert gold.count() == 1            # one (uid, hour) group from valid rows
     finally:
         q.stop()
+
+
+def test_foreach_batch_fanout_jobs_in_query_group(spark, stream_env):
+    """The three concurrent sink writes inherit the stream thread's job
+    group (the query's ``runId``), so ``stop()`` cancels them and a trace
+    credits them to the query: at least one job per write per batch."""
+    raw, src, out = stream_env
+    q = SP.foreach_batch_fanout(raw, out, trigger_secs=1)
+    try:
+        q.processAllAvailable()
+        _write_batch(spark, src, _rows(hour=2, n=2, base_id=50), 1)
+        q.processAllAvailable()
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    finally:
+        q.stop()
+    assert len(batches) == 2
+    assert len(jobs) >= 3 * len(batches), jobs
+
+
+def _threads_not_py4j() -> set[threading.Thread]:
+    """Live threads, less py4j's: its callback server starts on the first
+    foreachBatch call, and the JVM opens one callback connection, served
+    by one Python thread, per stream thread and keeps it after the query
+    ends."""
+    return {
+        t for t in threading.enumerate()
+        if not type(
+            getattr(getattr(t, "_target", None), "__self__", None)
+        ).__module__.startswith("py4j.")
+    }
+
+
+def test_foreach_batch_fanout_write_failure_fails_query(spark, stream_env):
+    """One failing write (its output path is a plain file) fails the
+    micro-batch and the query, after the other writes have ended: no sink
+    thread outlives the query."""
+    from pyspark.errors import StreamingQueryException
+
+    raw, src, out = stream_env
+    os.makedirs(out)
+    with open(f"{out}/silver", "w") as fh:
+        fh.write("not a directory")
+    threads_before = _threads_not_py4j()
+    q = SP.foreach_batch_fanout(raw, out, trigger_secs=1)
+    try:
+        with pytest.raises(StreamingQueryException, match="silver"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert q.exception() is not None
+    assert not _threads_not_py4j() - threads_before, "a sink thread outlived the query"
 
 
 def test_multi_sink_topology(spark, stream_env):

@@ -31,14 +31,9 @@ except ImportError:  # Spark 3.x
 
 from project_bigdata_spark.plans.catalog import load_all
 from project_bigdata_spark.session import get_spark
+from tools.plan_doctor import formatted_plan
 
 SF_DIR = "/root/testdata/sf0.1"
-
-
-def _fmt(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def main() -> None:
@@ -60,7 +55,7 @@ def main() -> None:
     orig_ckpt = DataFrame.localCheckpoint
 
     def recording_ckpt(self: DataFrame, *args, **kwargs) -> DataFrame:
-        fragments.append(_fmt(self))
+        fragments.append(formatted_plan(self))
         return orig_ckpt(self, *args, **kwargs)
 
     DataFrame.localCheckpoint = recording_ckpt  # type: ignore[method-assign]
@@ -68,7 +63,7 @@ def main() -> None:
         for s in targets:
             fragments.clear()
             df = s.builder(spark, SF_DIR)
-            parts = [_fmt(df)]
+            parts = [formatted_plan(df)]
             for i, frag in enumerate(fragments, 1):
                 parts.append(
                     f"\n==== PRE-CHECKPOINT FRAGMENT {i}/{len(fragments)} "

@@ -12,6 +12,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from project_bigdata_spark.plans.catalog import load_all  # noqa: E402
 from project_bigdata_spark.session import get_spark  # noqa: E402
+from tools.plan_doctor import formatted_plan  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -91,9 +92,6 @@ NOTES = {
 
 def main() -> None:
     spark = get_spark(app_name="plan-dump")
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
     specs = load_all()
     out = [
         "# PLANS — headline physical plans (sf0.01, pre-execution AQE)",
@@ -148,8 +146,7 @@ def main() -> None:
         "",
     ]
     for name, note in NOTES.items():
-        df = specs[name].builder(spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(jmode)
+        plan = formatted_plan(specs[name].builder(spark, SF_DIR))
         out += [f"## {name}", "", f"*{note}*", "", "```", plan.strip(), "```", ""]
     Path(__file__).resolve().parent.parent.joinpath("PLANS.md").write_text(
         "\n".join(out)

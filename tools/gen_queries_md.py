@@ -12,7 +12,9 @@ from project_bigdata_spark.plans.catalog import load_all  # noqa: E402
 
 
 def main() -> None:
-    specs = load_all()
+    # name order: the catalog's own order is the attestation order, which
+    # moves with every committed CORRECTNESS report
+    specs = dict(sorted(load_all().items()))
     lines = [
         "# QUERIES — catalog inventory",
         "",

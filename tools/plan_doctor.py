@@ -353,12 +353,18 @@ PLAN_MARKERS = {
 }
 
 
+def formatted_plan(df) -> str:
+    """``df.explain("formatted")`` as a string: the pre-execution physical
+    plan that every plan check, test and dump in the repo reads."""
+    jvm = df.sparkSession._jvm
+    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
 def check_plan(name: str, df) -> tuple[list[str], bool]:
     """(findings, whitelisted) for ``df``'s pre-execution physical plan:
     the antipatterns found, and whether the plan holds a SinglePartition
     exchange that ``SINGLE_PARTITION_OK`` allows for ``name``."""
-    jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
-    plan = df._jdf.queryExecution().explainString(jmode.fromString("formatted"))
+    plan = formatted_plan(df)
     findings = [f for f, marker in PLAN_MARKERS.items() if marker in plan]
     single = "Arguments: SinglePartition" in plan
     if single and name not in SINGLE_PARTITION_OK:
