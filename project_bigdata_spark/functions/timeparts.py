@@ -1,4 +1,4 @@
-"""Time-part / date scalar helpers (SURVEY.md §2.7 F4, F9, F10; §2.2 P5-P7).
+"""Time-part / date scalar helpers (SURVEY.md §2.7 F4, F9; §2.2 P5-P7).
 
 The reference derives these in pandas driver-side (``ml_training/
 data_loader.py:134-138``) or ClickHouse SQL (``clickhouse_queries.sql:133``).
@@ -49,8 +49,3 @@ def with_partition_cols(df: DataFrame, ts_col: str = "ts") -> DataFrame:
         .withColumn("month", F.month(ts).cast("int"))
         .withColumn("day", F.dayofmonth(ts).cast("int"))
     )
-
-
-def yyyymm(ts: Column) -> Column:
-    """F10: ClickHouse ``toYYYYMM`` equivalent (init.sql:24)."""
-    return F.date_format(ts, "yyyyMM")

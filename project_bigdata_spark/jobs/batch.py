@@ -61,9 +61,8 @@ def main(argv: list[str] | None = None) -> dict[str, int]:
     parser.add_argument(
         "--layer", choices=["bronze", "silver", "gold", "all"], default="all"
     )
-    parser.add_argument("--cpus", type=int, default=None)
     args = parser.parse_args(argv)
-    spark = get_spark(app_name="medallion-batch", cpus=args.cpus)
+    spark = get_spark(app_name="medallion-batch")
     counts = run(spark, args.input, args.output, args.layer)
     print(json.dumps({"layers": counts}))
     return counts

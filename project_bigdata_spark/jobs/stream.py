@@ -27,10 +27,9 @@ def main(argv: list[str] | None = None) -> None:
     )
     parser.add_argument("--timeout", type=int, default=None,
                         help="seconds to run (default: forever)")
-    parser.add_argument("--cpus", type=int, default=None)
     args = parser.parse_args(argv)
 
-    spark = get_spark(app_name="medallion-stream", cpus=args.cpus)
+    spark = get_spark(app_name="medallion-stream")
     raw = spark.readStream.schema(SP.EVENT_SCHEMA).parquet(args.input)
     if args.fanout == "foreach_batch":
         queries = [SP.foreach_batch_fanout(raw, args.output)]

@@ -18,29 +18,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def fit_ivf_centroids(
-    df: DataFrame,
-    k: int = 8,
-    vec_col: str = "embedding",
-    sample_frac: float | None = None,
-    seed: int = 42,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Fit a k-means coarse quantizer; returns ``(centroid_id, embedding)``.
-
-    ``sample_frac`` bounds the training pass (e.g. ``0.01`` at 1B+ rows);
-    ``None`` trains on the full input — fine for small corpora, wasteful
-    at scale.
+def fit_ivf_centroids(df: DataFrame, k: int = 8, seed: int = 42) -> DataFrame:
+    """Fit a k-means coarse quantizer on the ``embedding`` column (20
+    iterations); returns ``(centroid_id, embedding)``.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     data = df.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
-    if sample_frac is not None:
-        data = data.sample(fraction=sample_frac, seed=seed)
-    model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(data)
+    model = KMeans(k=k, seed=seed, maxIter=20).fit(data)
     spark = df.sparkSession
     return spark.createDataFrame(
         [

@@ -49,10 +49,9 @@ def prepare_training_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return typed.filter(F.col(TARGET).isNotNull())
 
 
-def train_regressor(
-    train: DataFrame, kind: str = "gbt", max_iter: int = 20
-):
-    """Fit a Spark ML regressor on the assembled feature vector."""
+def train_regressor(train: DataFrame, kind: str = "gbt"):
+    """Fit a Spark ML regressor on the assembled feature vector (a GBT
+    runs 20 iterations)."""
     from pyspark.ml import Pipeline
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import GBTRegressor, LinearRegression
@@ -62,7 +61,7 @@ def train_regressor(
     )
     if kind == "gbt":
         reg = GBTRegressor(
-            labelCol=TARGET, featuresCol="features", maxIter=max_iter, maxDepth=4
+            labelCol=TARGET, featuresCol="features", maxIter=20, maxDepth=4
         )
     else:
         reg = LinearRegression(
@@ -103,13 +102,12 @@ def metrics(pred: DataFrame) -> dict[str, float]:
 
 
 def train_and_evaluate(
-    spark: SparkSession,
-    sf_dir: str,
-    kind: str = "gbt",
-    split_ts: str = "2024-01-20 00:00:00",
+    spark: SparkSession, sf_dir: str, kind: str = "gbt"
 ) -> dict[str, float]:
-    """End-to-end: prepare -> time split -> fit -> clamped predict -> metrics."""
+    """End-to-end: prepare -> time split at 2024-01-20 -> fit -> clamped
+    predict -> metrics."""
     frame = prepare_training_frame(spark, sf_dir)
+    split_ts = "2024-01-20 00:00:00"
     train = frame.filter(F.col("hour_ts") < split_ts).drop("hour_ts")
     test = frame.filter(F.col("hour_ts") >= split_ts).drop("hour_ts")
     model = train_regressor(train, kind=kind)

@@ -35,12 +35,12 @@ def asof_join(
     ts_col: str = "ts",
     right_seq: str | None = None,
     carry_cols: list[str] | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Backward as-of join (right.ts <= left.ts), inner-ish: left rows with
     no prior right row get NULLs in the carried columns.
 
-    ``carry_cols``: right columns to carry (default: all non-key/ts).
+    ``carry_cols``: right columns to carry (default: all non-key/ts), each
+    exposed as ``<col>_asof``.
     ``right_seq``: tiebreak column among equal right timestamps (e.g. an
     event id); latest wins, matching "most recent observation".
     """
@@ -72,7 +72,7 @@ def asof_join(
     carried = unioned
     for c in carry:
         carried = carried.withColumn(
-            f"{c}{suffix}", F.last(f"_carry_{c}", ignorenulls=True).over(w)
+            f"{c}_asof", F.last(f"_carry_{c}", ignorenulls=True).over(w)
         )
     out = carried.filter(F.col("_side") == 1).drop(
         "_side", "_seq", *[f"_carry_{c}" for c in carry]
@@ -88,7 +88,6 @@ def asof_join_tolerance(
     tolerance_us: int = 3_600_000_000,
     right_seq: str | None = None,
     carry_cols: list[str] | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Backward as-of join with a max-staleness bound (pandas
     ``merge_asof(tolerance=...)``): a prior right row older than
@@ -98,24 +97,21 @@ def asof_join_tolerance(
     Same single-shuffle union+carry construction as :func:`asof_join`
     (the right timestamp rides along as one extra carried column); the
     tolerance check is a post-window column predicate, so the bound adds
-    zero exchanges. ``{ts_col}{suffix}`` exposes the matched timestamp
+    zero exchanges. ``<ts_col>_asof`` exposes the matched timestamp
     (NULL when out of tolerance) for gap auditing.
     """
     carry = carry_cols or [c for c in right.columns if c not in (key, ts_col)]
     r2 = right.withColumn("_rts", F.col(ts_col))
     out = asof_join(
         left, r2, key=key, ts_col=ts_col, right_seq=right_seq,
-        carry_cols=carry + ["_rts"], suffix=suffix,
+        carry_cols=carry + ["_rts"],
     )
-    matched_ts = F.col(f"_rts{suffix}")
+    matched_ts = F.col("_rts_asof")
     within = (
         F.unix_micros(F.col(ts_col)) - F.unix_micros(matched_ts)
     ) <= F.lit(tolerance_us)
     for c in carry:
-        out = out.withColumn(
-            f"{c}{suffix}",
-            F.when(within, F.col(f"{c}{suffix}")),
-        )
-    return out.withColumn(
-        f"{ts_col}{suffix}", F.when(within, matched_ts)
-    ).drop(f"_rts{suffix}")
+        out = out.withColumn(f"{c}_asof", F.when(within, F.col(f"{c}_asof")))
+    return out.withColumn(f"{ts_col}_asof", F.when(within, matched_ts)).drop(
+        "_rts_asof"
+    )

@@ -21,11 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from project_bigdata_spark.operators.dedup import (
-    SHINGLE_WORDS,
-    shingles_from_words,
-    words_col,
-)
+from project_bigdata_spark.operators.dedup import shingles_from_words, words_col
 
 SEGMENT_WORDS = 16
 
@@ -50,14 +46,9 @@ def segments_col(ws, seg_words: int = SEGMENT_WORDS):
     )).otherwise(F.array().cast("array<string>"))
 
 
-def segment_dedup_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seg_words: int = SEGMENT_WORDS,
-) -> DataFrame:
-    """Corpus-wide exact segment dedup accounting: split every document
-    into non-overlapping ``seg_words``-word segments, keep the FIRST
+def segment_dedup_stats(df: DataFrame) -> DataFrame:
+    """Corpus-wide exact segment dedup accounting: split every document's
+    ``text`` into non-overlapping ``SEGMENT_WORDS``-word segments, keep the FIRST
     occurrence of each distinct segment (ordered by ``(doc_id, seg_idx)``),
     and report per-document ``n_segments`` / ``n_kept`` / ``dup_ratio``.
 
@@ -66,31 +57,26 @@ def segment_dedup_stats(
     novel 60%. Only the 32-hex MD5 of each segment shuffles — two
     exchanges total (digest, then doc_id), payload text never moves.
     """
-    ws = words_col(F.col(text_col))
+    ws = words_col(F.col("text"))
     segs = (
-        df.select(F.col(id_col), ws.alias("_ws"))
-        .select(id_col, F.posexplode(segments_col(F.col("_ws"), seg_words))
+        df.select(F.col("doc_id"), ws.alias("_ws"))
+        .select("doc_id", F.posexplode(segments_col(F.col("_ws")))
                 .alias("seg_idx", "seg"))
-        .select(id_col, "seg_idx", F.md5(F.col("seg")).alias("_h"))
+        .select("doc_id", "seg_idx", F.md5(F.col("seg")).alias("_h"))
     )
-    first = Window.partitionBy("_h").orderBy(id_col, "seg_idx")
+    first = Window.partitionBy("_h").orderBy("doc_id", "seg_idx")
     ranked = segs.withColumn("_rn", F.row_number().over(first))
-    return ranked.groupBy(id_col).agg(
+    return ranked.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_segments"),
         F.sum(F.when(F.col("_rn") == 1, 1).otherwise(0))
         .cast("bigint").alias("n_kept"),
     )
 
 
-def boilerplate_shingles(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_n: int = 20,
-    k: int = SHINGLE_WORDS,
-) -> DataFrame:
-    """Cross-document boilerplate detector: the ``top_n`` k-word shingles
-    by DISTINCT-document frequency, with their corpus share.
+def boilerplate_shingles(df: DataFrame, top_n: int = 20) -> DataFrame:
+    """Cross-document boilerplate detector: the ``top_n``
+    ``SHINGLE_WORDS``-word shingles of ``text`` by DISTINCT-``doc_id``
+    frequency, with their corpus share.
 
     Counting distinct docs (not raw occurrences) is what separates
     boilerplate (nav bars, license headers — appear once in *many* docs)
@@ -99,13 +85,13 @@ def boilerplate_shingles(
     distinct-doc frequency — no count-distinct shuffle state. Doc total
     rides along as one broadcast row.
     """
-    ws = words_col(F.col(text_col))
+    ws = words_col(F.col("text"))
     per_doc = (
-        df.select(F.col(id_col), ws.alias("_ws"), F.lower(text_col).alias("_lo"))
+        df.select(F.col("doc_id"), ws.alias("_ws"), F.lower("text").alias("_lo"))
         .select(
-            id_col,
+            "doc_id",
             F.explode(
-                F.array_distinct(shingles_from_words(F.col("_ws"), F.col("_lo"), k))
+                F.array_distinct(shingles_from_words(F.col("_ws"), F.col("_lo")))
             ).alias("shingle"),
         )
     )
@@ -120,19 +106,18 @@ def boilerplate_shingles(
     )
 
 
-def corpus_composition(
-    df: DataFrame, group_col: str = "source", text_col: str = "text"
-) -> DataFrame:
-    """Per-source corpus composition: docs, whitespace tokens, token share,
-    and cumulative share in descending-tokens order — the mixing table a
-    sampling-weights decision (e.g. DoReMi-style re-weighting) reads.
+def corpus_composition(df: DataFrame) -> DataFrame:
+    """Per-``source`` corpus composition: docs, whitespace tokens of
+    ``text``, token share, and cumulative share in descending-tokens
+    order — the mixing table a sampling-weights decision (e.g.
+    DoReMi-style re-weighting) reads.
 
-    Shape: one partial-aggregated shuffle on ``group_col`` to a
+    Shape: one partial-aggregated shuffle on ``source`` to a
     #sources-row frame; the share window runs on that tiny frame, not the
     corpus.
     """
-    toks = F.size(words_col(F.col(text_col))).cast("bigint")
-    per = df.groupBy(group_col).agg(
+    toks = F.size(words_col(F.col("text"))).cast("bigint")
+    per = df.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(toks).cast("bigint").alias("n_tokens"),
     )
@@ -143,11 +128,11 @@ def corpus_composition(
     w_all = Window.partitionBy(one)
     w_cum = (
         Window.partitionBy(one)
-        .orderBy(F.desc("n_tokens"), group_col)
+        .orderBy(F.desc("n_tokens"), "source")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return per.select(
-        group_col,
+        "source",
         "n_docs",
         "n_tokens",
         (F.col("n_tokens") / F.sum("n_tokens").over(w_all)).alias("_share"),
@@ -157,16 +142,11 @@ def corpus_composition(
     )
 
 
-def vocab_coverage(
-    df: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-    top_k: int = 10,
-) -> DataFrame:
-    """Per-language vocabulary profile: total tokens, vocabulary size,
-    hapax count (frequency-1 types), and the token share covered by the
-    ``top_k`` most frequent types — the Zipf-head coverage a tokenizer
-    budget decision needs.
+def vocab_coverage(df: DataFrame) -> DataFrame:
+    """Per-``lang`` vocabulary profile of ``text``: total tokens,
+    vocabulary size, hapax count (frequency-1 types), and the token share
+    covered by the 10 most frequent types — the Zipf-head coverage a
+    tokenizer budget decision needs.
 
     Two aggregations: tokens -> (lang, word) counts (map-side partials
     collapse the heavy hitters early), then counts -> one row per lang.
@@ -174,39 +154,38 @@ def vocab_coverage(
     never over raw tokens.
     """
     toks = df.select(
-        F.col(group_col), F.explode(words_col(F.col(text_col))).alias("w")
+        F.col("lang"), F.explode(words_col(F.col("text"))).alias("w")
     )
-    counts = toks.groupBy(group_col, "w").agg(
+    counts = toks.groupBy("lang", "w").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    rk = Window.partitionBy(group_col).orderBy(F.desc("c"), "w")
+    rk = Window.partitionBy("lang").orderBy(F.desc("c"), "w")
     ranked = counts.withColumn("_rk", F.row_number().over(rk))
-    return ranked.groupBy(group_col).agg(
+    return ranked.groupBy("lang").agg(
         F.sum("c").cast("bigint").alias("n_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("vocab_size"),
         F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
         .cast("bigint").alias("hapax_count"),
         (
-            F.sum(F.when(F.col("_rk") <= top_k, F.col("c")).otherwise(0))
+            F.sum(F.when(F.col("_rk") <= 10, F.col("c")).otherwise(0))
             / F.sum("c")
         ).alias("_topk_share"),
     )
 
 
-def length_bucket_stats(
-    df: DataFrame, text_col: str = "text", buckets: list[int] = LENGTH_BUCKETS
-) -> DataFrame:
+def length_bucket_stats(df: DataFrame) -> DataFrame:
     """Sequence-length bucketing audit: assign each doc the smallest
-    power-of-two bucket >= its token count and report per-bucket doc
+    ``LENGTH_BUCKETS`` bucket >= the token count of its ``text`` and
+    report per-bucket doc
     count, real tokens, padding tokens, and padding waste share — what a
     bucketed-batching data loader wastes at each size.
 
     Pure integer column math + one tiny aggregation; the CASE ladder
     avoids float ``log2`` edge cases at exact powers of two.
     """
-    n = F.size(words_col(F.col(text_col))).cast("bigint")
-    bucket = F.lit(buckets[-1])
-    for b in reversed(buckets):
+    n = F.size(words_col(F.col("text"))).cast("bigint")
+    bucket = F.lit(LENGTH_BUCKETS[-1])
+    for b in reversed(LENGTH_BUCKETS):
         bucket = F.when(n <= b, F.lit(b)).otherwise(bucket)
     per = df.select(
         bucket.cast("bigint").alias("bucket"),
@@ -219,42 +198,32 @@ def length_bucket_stats(
     )
 
 
-def stratified_fixed_n(
-    df: DataFrame,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-    n_per_group: int = 20,
-    mod: int = 1_000_003,
-    mult: int = 2_654_435_761,
-) -> DataFrame:
-    """Exactly-``n_per_group`` deterministic sample per stratum: order each
-    group by a Knuth multiplicative hash of the id and take the first n.
+def stratified_fixed_n(df: DataFrame, n_per_group: int = 20) -> DataFrame:
+    """Exactly-``n_per_group`` deterministic sample per ``lang`` stratum:
+    order each group by a Knuth multiplicative hash of the ``doc_id`` and
+    take the first n.
 
     Fraction sampling (P12) can't promise exact per-stratum counts; eval
     sets and human-review batches need them. The hash is pure int64
-    arithmetic (id is reduced mod ``mod`` before multiplying, so the
-    product never overflows at any id scale) — identical on every engine,
+    arithmetic (id is reduced mod 1_000_003 before multiplying by
+    2_654_435_761, so the product never overflows at any id scale) —
+    identical on every engine,
     stable across runs and engines, no RNG state. One shuffle on the
     group, top-n via the rank window (WindowGroupLimit pushes the limit
     into the sort at scale).
     """
-    h = ((F.col(id_col) % mod) * mult) % mod
-    w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(id_col).asc())
+    h = ((F.col("doc_id") % 1_000_003) * 2_654_435_761) % 1_000_003
+    w = Window.partitionBy("lang").orderBy(h.asc(), F.col("doc_id").asc())
     return (
-        df.select(F.col(group_col), F.col(id_col), h.alias("_h"))
+        df.select(F.col("lang"), F.col("doc_id"), h.alias("_h"))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= n_per_group)
     )
 
 
-def segment_dedup_apply(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seg_words: int = SEGMENT_WORDS,
-) -> DataFrame:
+def segment_dedup_apply(df: DataFrame) -> DataFrame:
     """The rewrite form of :func:`segment_dedup_stats`: materialize each
-    document with its corpus-duplicated segments REMOVED (first
+    ``doc_id``'s ``text`` with its corpus-duplicated segments REMOVED (first
     occurrence wins, ordered by ``(doc_id, seg_idx)``), reassembling the
     survivors in original order.
 
@@ -265,17 +234,17 @@ def segment_dedup_apply(
     earlier come back with empty text rather than vanishing, so the
     output stays 1:1 with input docs that had any segment at all.
     """
-    ws = words_col(F.col(text_col))
+    ws = words_col(F.col("text"))
     segs = (
-        df.select(F.col(id_col), ws.alias("_ws"))
-        .select(id_col, F.posexplode(segments_col(F.col("_ws"), seg_words))
+        df.select(F.col("doc_id"), ws.alias("_ws"))
+        .select("doc_id", F.posexplode(segments_col(F.col("_ws")))
                 .alias("seg_idx", "seg"))
     )
-    first = Window.partitionBy(F.md5(F.col("seg"))).orderBy(id_col, "seg_idx")
+    first = Window.partitionBy(F.md5(F.col("seg"))).orderBy("doc_id", "seg_idx")
     kept = segs.withColumn("_rn", F.row_number().over(first)).filter(
         F.col("_rn") == 1
     )
-    assembled = kept.groupBy(id_col).agg(
+    assembled = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
@@ -287,22 +256,17 @@ def segment_dedup_apply(
         ).alias("dedup_text"),
         F.count(F.lit(1)).cast("bigint").alias("n_kept"),
     )
-    base = df.select(F.col(id_col)).join(
-        segs.select(id_col).distinct(), on=id_col
+    base = df.select(F.col("doc_id")).join(
+        segs.select("doc_id").distinct(), on="doc_id"
     )
-    return base.join(assembled, on=id_col, how="left").select(
-        id_col,
+    return base.join(assembled, on="doc_id", how="left").select(
+        "doc_id",
         F.coalesce(F.col("dedup_text"), F.lit("")).alias("dedup_text"),
         F.coalesce(F.col("n_kept"), F.lit(0).cast("bigint")).alias("n_kept"),
     )
 
 
-def paragraph_dedup_apply(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seg_words: int = 2,
-) -> DataFrame:
+def paragraph_dedup_apply(df: DataFrame, seg_words: int = 2) -> DataFrame:
     """WITHIN-document repetition removal — the Gopher/MassiveText
     paragraph-dedup transform (Rae et al. 2021 §A1.1: drop duplicate
     paragraphs inside a document, first occurrence wins), the APPLY twin
@@ -320,18 +284,18 @@ def paragraph_dedup_apply(
     both keyed by doc_id and therefore co-partitionable. At 100 TB
     this is embarrassingly parallel per document.
     """
-    ws = words_col(F.col(text_col))
-    segs = df.select(F.col(id_col), ws.alias("_ws")).select(
-        id_col,
+    ws = words_col(F.col("text"))
+    segs = df.select(F.col("doc_id"), ws.alias("_ws")).select(
+        "doc_id",
         F.posexplode(segments_col(F.col("_ws"), seg_words)).alias(
             "seg_idx", "seg"
         ),
     )
-    first = Window.partitionBy(id_col, F.md5(F.col("seg"))).orderBy(
+    first = Window.partitionBy("doc_id", F.md5(F.col("seg"))).orderBy(
         "seg_idx"
     )
     ranked = segs.withColumn("_rn", F.row_number().over(first))
-    return ranked.groupBy(id_col).agg(
+    return ranked.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_segments"),
         F.sum(F.when(F.col("_rn") == 1, 1))
         .cast("bigint")

@@ -125,14 +125,15 @@ def shingles_from_words(ws: Column, lowered: Column, k: int = SHINGLE_WORDS) -> 
     return F.when(n >= k, k_shingles).otherwise(F.array(lowered))
 
 
-def shingles_col(text: Column, k: int = SHINGLE_WORDS) -> Column:
-    """k-word shingles; a doc shorter than k words is its own shingle.
+def shingles_col(text: Column) -> Column:
+    """``SHINGLE_WORDS``-word shingles; a doc shorter than that is its own
+    shingle.
 
     Convenience form over :func:`shingles_from_words` — inside HOF-heavy
     pipelines prefer projecting the word array first (see that
     docstring).
     """
-    return shingles_from_words(words_col(text), F.lower(text), k)
+    return shingles_from_words(words_col(text), F.lower(text))
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -164,11 +165,9 @@ def bow_fingerprint(text: Column, ws: Column | None = None) -> Column:
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = NUM_HASHES
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """MinHash signature per document, from SLICED wide hashes: md5 runs
-    once per (shingle, group) for ``ceil(num_hashes / 4)`` groups, and each
+    once per (shingle, group) for ``HASH_GROUPS`` groups, and each
     128-bit digest is split into four 8-hex-char (32-bit) components;
     component i is ``md5(g ':' shingle)[8j .. 8j+8)`` with ``(g, j) =
     divmod(i, 4)``. Hash slicing is the standard production MinHash trick:
@@ -182,9 +181,8 @@ def minhash_signatures(
     Pure column expressions — one narrow pass, no UDF; the only shuffle
     is the gated id-keyed fan-out below (a no-op once the scan has
     natural splits). Returns id, the shingle array (for exact-Jaccard
-    verification), and ``sig`` as ``array<string>(num_hashes)``.
+    verification), and ``sig`` as ``array<string>(NUM_HASHES)``.
     """
-    groups = -(-num_hashes // SLICES_PER_MD5)
     # r11: fan out BY THE ID — same shuffle bytes as round-robin, but the
     # id partitioning survives the narrow signature pass, so downstream
     # verify joins on the id consume the persisted signatures without
@@ -219,7 +217,7 @@ def minhash_signatures(
         F.col("shingles"),
         *[
             F.transform("shingles", md5_group(g)).alias(f"_h{g}")
-            for g in range(groups)
+            for g in range(HASH_GROUPS)
         ],
     )
     sig = F.array(
@@ -230,33 +228,22 @@ def minhash_signatures(
                     slicer(i % SLICES_PER_MD5),
                 )
             )
-            for i in range(num_hashes)
+            for i in range(NUM_HASHES)
         ]
     )
     return hashed.select(F.col(id_col), F.col("shingles"), sig.alias("sig"))
 
 
-def _banded(
-    sigs: DataFrame,
-    id_col: str,
-    band_rows: int,
-    max_bucket: int,
-    num_hashes: int | None,
-) -> DataFrame:
-    """Explode signatures to (id, band_key) rows, dropping band buckets
-    larger than ``max_bucket`` (the quadratic-bucket guard shared by the
+def _banded(sigs: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
+    """Explode ``NUM_HASHES``-wide signatures to (id, band_key) rows, one
+    per band of ``BAND_ROWS`` components, dropping band buckets larger
+    than ``max_bucket`` (the quadratic-bucket guard shared by the
     self-join and incremental pair builders)."""
-    if num_hashes is None:
-        num_hashes = NUM_HASHES
-    if num_hashes % band_rows != 0:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by band_rows={band_rows}"
-        )
     bands = [
         F.concat_ws(
-            "|", F.lit(str(b)), *[F.col("sig")[b * band_rows + r] for r in range(band_rows)]
+            "|", F.lit(str(b)), *[F.col("sig")[b * BAND_ROWS + r] for r in range(BAND_ROWS)]
         ).alias("band_key")
-        for b in range(num_hashes // band_rows)
+        for b in range(NUM_HASHES // BAND_ROWS)
     ]
     exploded = sigs.select(
         F.col(id_col), F.explode(F.array(*bands)).alias("band_key")
@@ -273,9 +260,7 @@ def minhash_incremental_pairs(
     new_sigs: DataFrame,
     corpus_sigs: DataFrame,
     id_col: str,
-    band_rows: int = BAND_ROWS,
     max_bucket: int = 1000,
-    num_hashes: int | None = None,
 ) -> DataFrame:
     """Two-sided LSH banding for INCREMENTAL dedup: candidate pairs
     between a new batch and an already-deduped corpus — never
@@ -290,8 +275,8 @@ def minhash_incremental_pairs(
 
     Emits distinct ``(id_a = new id, id_b = corpus id)``.
     """
-    n = _banded(new_sigs, id_col, band_rows, max_bucket, num_hashes)
-    c = _banded(corpus_sigs, id_col, band_rows, max_bucket, num_hashes)
+    n = _banded(new_sigs, id_col, max_bucket)
+    c = _banded(corpus_sigs, id_col, max_bucket)
     return (
         n.select(F.col("band_key"), F.col(id_col).alias("id_a"))
         .join(
@@ -304,25 +289,15 @@ def minhash_incremental_pairs(
 
 
 def minhash_candidate_pairs(
-    sigs: DataFrame,
-    id_col: str,
-    band_rows: int = BAND_ROWS,
-    max_bucket: int = 1000,
-    num_hashes: int | None = None,
+    sigs: DataFrame, id_col: str, max_bucket: int = 1000
 ) -> DataFrame:
     """LSH banding: docs sharing any band of the signature become a pair.
 
     Emits distinct (id_a, id_b) with id_a < id_b. ``max_bucket`` drops
     degenerate buckets (all-identical corpora) whose self-join would be
     quadratic — the standard guard at scale.
-
-    ``num_hashes`` must match the width the signatures were built with
-    (defaults to ``NUM_HASHES``, the builder's default); a width not
-    divisible by ``band_rows`` raises rather than silently indexing past
-    the array (NULL band keys under non-ANSI mode would corrupt every
-    bucket).
     """
-    bounded = _banded(sigs, id_col, band_rows, max_bucket, num_hashes)
+    bounded = _banded(sigs, id_col, max_bucket)
     a = bounded.select(F.col("band_key"), F.col(id_col).alias("id_a"))
     b = bounded.select(F.col("band_key"), F.col(id_col).alias("id_b"))
     return (
@@ -432,88 +407,61 @@ def simhash_bits(text: Column, nbits: int = 16) -> Column:
     return total
 
 
-def simhash_fingerprints_frame(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    nbits: int = 60,
-    out_col: str = "simhash",
-) -> DataFrame:
-    """``nbits``-bit SimHash fingerprints as a FRAME transform — the fast
-    wide path (explode + codegen'd conditional sums), shared by
-    :func:`simhash_hamming_pairs` and any caller needing > 16 bits.
+# SimHash fingerprint width of the frame path: at most 60 keeps the
+# packed fingerprint positive in a signed BIGINT on both engines — bit 63
+# would sign-extend under shiftright and break band extraction downstream.
+SIMHASH_BITS = 60
 
-    Rather than the interpreted per-word ``nbits``-slot HOF fold of
-    :func:`simhash_bits` (the per-word array-accumulator lambda runs
-    outside whole-stage codegen and measured ~6x slower at 60 bits /
-    sf0.1), this shuffles only (id, md5) pairs and aggregates in
-    codegen'd sums. Empty-word docs drop out (exactly as an oracle's
-    unnest does). ``nbits <= 60`` keeps the packed fingerprint positive
-    in a signed BIGINT on both engines — bit 63 would sign-extend under
-    shiftright and break band extraction downstream.
+
+def simhash_fingerprints_frame(df: DataFrame, out_col: str = "simhash") -> DataFrame:
+    """``SIMHASH_BITS``-bit SimHash fingerprint per ``doc_id`` of its
+    ``text``, as a FRAME transform — the fast wide path (explode +
+    codegen'd conditional sums) behind :func:`simhash_hamming_pairs`.
+
+    Rather than the interpreted per-word array-accumulator HOF fold of
+    :func:`simhash_bits` (the lambda runs outside whole-stage codegen and
+    measured ~6x slower at 60 bits / sf0.1), this shuffles only
+    (id, md5) pairs and aggregates in codegen'd sums. Empty-word docs
+    drop out (exactly as an oracle's unnest does).
     """
-    assert 0 < nbits <= 60, (
-        "nbits must be in (0, 60]: 61+ would set bit 63 after packing "
-        "headroom and sign-extend under shiftright on signed BIGINT"
-    )
     words = df.select(
-        F.col(id_col), F.explode(words_col(F.col(text_col))).alias("_w")
+        F.col("doc_id"), F.explode(words_col(F.col("text"))).alias("_w")
     )
-    hashed = words.select(F.col(id_col), F.md5(F.col("_w")).alias("_h"))
+    hashed = words.select(F.col("doc_id"), F.md5(F.col("_w")).alias("_h"))
 
     def bit(h: Column, b: int) -> Column:
         nibble = F.conv(F.substring(h, 1 + b // 4, 1), 16, 10).cast("int")
         return F.shiftright(nibble, 3 - b % 4).bitwiseAND(F.lit(1))
 
-    votes = hashed.groupBy(id_col).agg(
+    votes = hashed.groupBy("doc_id").agg(
         *[
             F.sum(bit(F.col("_h"), b) * 2 - 1).alias(f"_v{b}")
-            for b in range(nbits)
+            for b in range(SIMHASH_BITS)
         ]
     )
     total = F.lit(0).cast("bigint")
-    for b in range(nbits):
+    for b in range(SIMHASH_BITS):
         total = total + F.when(
-            F.col(f"_v{b}") > 0, F.lit(1 << (nbits - 1 - b)).cast("bigint")
+            F.col(f"_v{b}") > 0, F.lit(1 << (SIMHASH_BITS - 1 - b)).cast("bigint")
         ).otherwise(F.lit(0).cast("bigint"))
-    return votes.select(F.col(id_col), total.alias(out_col))
+    return votes.select(F.col("doc_id"), total.alias(out_col))
 
 
-def simhash_hamming_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    nbits: int = 60,
-    bands: int = 4,
-    max_dist: int = 3,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """SimHash near-dup pairs by pigeonhole banding (the classic
-    Charikar/Manku web-dedup construction): split the ``nbits``
-    fingerprint into ``bands`` equal bit-bands — any pair within Hamming
-    distance ``bands - 1`` agrees EXACTLY on at least one band — then
-    equi-join per band and verify ``bit_count(xor) <= max_dist``.
+def simhash_hamming_pairs(df: DataFrame, max_bucket: int = 1000) -> DataFrame:
+    """SimHash near-dup ``doc_id`` pairs by pigeonhole banding (the
+    classic Charikar/Manku web-dedup construction): split each ``text``'s
+    ``SIMHASH_BITS`` fingerprint into 4 equal 15-bit bands — any pair
+    within Hamming distance 3 agrees EXACTLY on at least one band — then
+    equi-join per band and verify ``bit_count(xor) <= 3``.
 
     Scale shape: candidates come from band-bucket equi-joins (never n²);
     ``max_bucket`` drops degenerate band buckets whole (a band value
     shared by a huge cohort — boilerplate-dominated corpora), the same
-    hot-bucket guard as MinHash LSH banding. Requires
-    ``max_dist <= bands - 1`` for the pigeonhole guarantee and
-    ``nbits % bands == 0`` so every fingerprint bit lands in exactly one
-    band (a remainder would leave the top ``nbits % bands`` bits
-    uncovered — two fingerprints differing only there would silently
-    never become candidates).
+    hot-bucket guard as MinHash LSH banding.
     """
-    assert max_dist <= bands - 1, "pigeonhole needs max_dist <= bands-1"
-    assert nbits % bands == 0, (
-        "nbits must divide evenly into bands: a remainder leaves the top "
-        "nbits % bands bits outside every band, silently dropping "
-        "candidates that differ only in those bits"
-    )
-    bandw = nbits // bands
-    sh = simhash_fingerprints_frame(
-        df, id_col=id_col, text_col=text_col, nbits=nbits, out_col="_sh"
-    )
+    bands = 4
+    bandw = SIMHASH_BITS // bands
+    sh = simhash_fingerprints_frame(df, out_col="_sh")
     bands_arr = F.array(
         *[
             F.shiftright(F.col("_sh"), bandw * i).bitwiseAND(
@@ -523,17 +471,17 @@ def simhash_hamming_pairs(
         ]
     )
     e = sh.select(
-        F.col(id_col), F.col("_sh"), F.posexplode(bands_arr).alias("_band", "_bv")
+        F.col("doc_id"), F.col("_sh"), F.posexplode(bands_arr).alias("_band", "_bv")
     )
     w = Window.partitionBy("_band", "_bv")
     capped = e.withColumn("_bsz", F.count(F.lit(1)).over(w)).filter(
         F.col("_bsz") <= max_bucket
     )
     a = capped.select(
-        "_band", "_bv", F.col(id_col).alias("id_a"), F.col("_sh").alias("_sha")
+        "_band", "_bv", F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sha")
     )
     b = capped.select(
-        "_band", "_bv", F.col(id_col).alias("id_b"), F.col("_sh").alias("_shb")
+        "_band", "_bv", F.col("doc_id").alias("id_b"), F.col("_sh").alias("_shb")
     )
     pairs = (
         a.join(b, on=["_band", "_bv"])
@@ -543,7 +491,7 @@ def simhash_hamming_pairs(
     )
     ham = F.bit_count(F.col("_sha").bitwiseXOR(F.col("_shb")))
     return pairs.withColumn("hamming", ham).filter(
-        F.col("hamming") <= max_dist
+        F.col("hamming") <= 3
     ).select("id_a", "id_b", "hamming")
 
 
@@ -555,7 +503,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     n: int = 2,
     max_block: int = 1000,
-    refine_over: int = 128,
 ) -> DataFrame:
     """Blocked exact n-gram Jaccard: compare only docs sharing a blocking
     key (cheap metadata), with distinct word-n-gram sets.
@@ -567,12 +514,12 @@ def ngram_jaccard_pairs(
     ``minhash_candidate_pairs``'s ``max_bucket`` guard; route oversized
     blocks through MinHash LSH instead.
 
-    ``refine_over``: blocks denser than this many members sub-block on a
-    MINHASH BAND over the SAME n-gram shingles the operator measures —
-    ``min(md5(shingle))`` over the doc's grams, the exact LSH family for
-    n-gram Jaccard (Broder; the metadata key's block COUNT is a
-    vocabulary constant, so block size — and the pair join, quadratically
-    — otherwise grows with the corpus). The band key is
+    Blocks denser than 128 members sub-block on a MINHASH BAND over the
+    SAME n-gram shingles the operator measures — ``min(md5(shingle))``
+    over the doc's grams, the exact LSH family for n-gram Jaccard
+    (Broder; the metadata key's block COUNT is a vocabulary constant, so
+    block size — and the pair join, quadratically — otherwise grows with
+    the corpus). The band key is
     ORDER-INSENSITIVE where it matters (round-7 verdict ask #2): a
     reordered near-dup shares almost its whole gram set (a k-sentence
     block move touches k boundary grams), hence w.h.p. the same minimum,
@@ -623,7 +570,7 @@ def ngram_jaccard_pairs(
     w0 = Window.partitionBy(*block_cols)
     pre = pre.withColumn(
         "_blk",
-        F.when(F.count(F.lit(1)).over(w0) > refine_over, band).otherwise(
+        F.when(F.count(F.lit(1)).over(w0) > 128, band).otherwise(
             F.lit("")
         ),
     )
@@ -669,15 +616,10 @@ def ngram_jaccard_pairs(
     )
 
 
-def shingle_containment(
-    docs: DataFrame,
-    bench: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = SHINGLE_WORDS,
-) -> DataFrame:
-    """Benchmark-contamination check: per document, the fraction of its
-    distinct k-word shingles that appear anywhere in the benchmark set —
+def shingle_containment(docs: DataFrame, bench: DataFrame) -> DataFrame:
+    """Benchmark-contamination check: per ``doc_id``, the fraction of the
+    distinct ``SHINGLE_WORDS``-word shingles of its ``text`` that appear
+    anywhere in the benchmark set's ``text`` —
     the standard eval-set decontamination signal for training corpora.
 
     Scale shape: the benchmark's distinct shingle set is the SMALL side
@@ -690,23 +632,19 @@ def shingle_containment(
     # the doc id also satisfies the per-doc aggregate below, so the
     # explicit exchange REPLACES the aggregate's rather than adding one
     # (measured 4.96 s -> 0.98 s at sf0.1/32 cpus; no-op at scale).
-    doc_sh = fan_out_by_key(docs.select(id_col, text_col), id_col).select(
-        F.col(id_col),
-        F.explode(F.array_distinct(shingles_col(F.col(text_col), k))).alias(
-            "_sh"
-        ),
+    doc_sh = fan_out_by_key(docs.select("doc_id", "text"), "doc_id").select(
+        F.col("doc_id"),
+        F.explode(F.array_distinct(shingles_col(F.col("text")))).alias("_sh"),
     )
     bench_sh = (
         bench.select(
-            F.explode(F.array_distinct(shingles_col(F.col(text_col), k))).alias(
-                "_sh"
-            )
+            F.explode(F.array_distinct(shingles_col(F.col("text")))).alias("_sh")
         )
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
     marked = doc_sh.join(F.broadcast(bench_sh), on="_sh", how="left")
-    return marked.groupBy(id_col).agg(
+    return marked.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
         F.sum(F.coalesce(F.col("_hit"), F.lit(0))).cast("bigint").alias(
             "n_contaminated"
@@ -720,22 +658,17 @@ def shingle_containment(
 CLUSTER_ROUNDS = 4
 
 
-def min_label_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    rounds: int = CLUSTER_ROUNDS,
-) -> DataFrame:
+def min_label_clusters(pairs: DataFrame) -> DataFrame:
     """Duplicate clustering: bounded min-label propagation over an
-    undirected near-dup pair graph -> ``(id, cluster_id)``.
+    undirected near-dup ``(id_a, id_b)`` pair graph -> ``(id, cluster_id)``.
 
     Each round every vertex takes the min of its own label and its
     neighbors' labels; after ``r`` rounds a vertex holds the smallest id
-    within ``r`` hops, so components with diameter <= ``rounds`` get their
-    exact connected component (near-dup clusters are almost always
-    shallow). The bounded unroll keeps the whole computation one
+    within ``r`` hops, so components with diameter <= ``CLUSTER_ROUNDS``
+    get their exact connected component (near-dup clusters are almost
+    always shallow). The bounded unroll keeps the whole computation one
     deterministic DAG — no driver-side convergence loop, and an oracle
-    can replay it as ``rounds`` unrolled self-joins.
+    can replay it as ``CLUSTER_ROUNDS`` unrolled self-joins.
 
     Scale: 2 shuffles per round on (vertex, label) pairs — the standard
     iterative-join cost (what GraphFrames' connected components pays per
@@ -756,14 +689,14 @@ def min_label_clusters(
     bounded intermediate, never the corpus.
     """
     sym = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .localCheckpoint()
     )
     labels = sym.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
     )
-    for _ in range(rounds):
+    for _ in range(CLUSTER_ROUNDS):
         nbr = sym.join(labels, sym["dst"] == labels["id"]).select(
             F.col("src").alias("id"), "label"
         )
@@ -814,10 +747,11 @@ def _bloom_shard(key: Column, num_shards: int) -> Column:
     )
 
 
-def _bloom_positions(key: Column, num_bits: int, num_hashes: int) -> list[Column]:
-    """k bit positions for a key via double hashing: ``(h1 + i*h2) mod m``
-    (Kirsch & Mitzenmacher, "Less Hashing, Same Performance" — the
-    standard construction) costs TWO hash evaluations total instead of k,
+def _bloom_positions(key: Column, num_bits: int) -> list[Column]:
+    """``BLOOM_HASHES`` bit positions for a key via double hashing:
+    ``(h1 + i*h2) mod m`` (Kirsch & Mitzenmacher, "Less Hashing, Same
+    Performance" — the standard construction) costs TWO hash evaluations
+    total instead of k,
     which matters because the probe runs per ingested row. Both terms are
     reduced mod small ranges first so ``h1 + i*h2`` stays far below 2^63
     (ANSI mode makes long overflow an ERROR, not a wrap). xxhash64 (not
@@ -828,7 +762,7 @@ def _bloom_positions(key: Column, num_bits: int, num_hashes: int) -> list[Column
     # odd-ish nonzero step << 2^31 keeps i*h2 + h1 < 2^35, overflow-free
     h2 = F.pmod(F.xxhash64(key, F.lit(1)), F.lit((1 << 31) - 1)) + F.lit(1)
     return [
-        F.pmod(h1 + F.lit(i) * h2, F.lit(num_bits)) for i in range(num_hashes)
+        F.pmod(h1 + F.lit(i) * h2, F.lit(num_bits)) for i in range(BLOOM_HASHES)
     ]
 
 
@@ -836,15 +770,15 @@ def bloom_build(
     df: DataFrame,
     key_col: str,
     num_bits: int = BLOOM_BITS,
-    num_hashes: int = BLOOM_HASHES,
     num_shards: int = 1,
 ) -> DataFrame:
     """Distributed Bloom-filter build: returns ``num_shards`` rows of
     ``(shard int, bloom array<bigint>)`` — each shard a ``num_bits``-bit
     bitmap packed into ``num_bits/64`` longs.
 
-    Build shape (scale-first): explode each key into k tiny (shard, pos)
-    ints -> ``bit_or`` per 64-bit word. No ``distinct`` is needed —
+    Build shape (scale-first): explode each key into ``BLOOM_HASHES``
+    tiny (shard, pos) ints -> ``bit_or`` per 64-bit word. No
+    ``distinct`` is needed —
     OR-ing a bit twice is a no-op, and the groupBy's map-side partial
     aggregation means each task emits at most ``num_shards x num_bits/64``
     word rows no matter how many corpus keys it scanned, so the exchange
@@ -864,7 +798,7 @@ def bloom_build(
     key = F.col(key_col)
     pos = df.select(
         _bloom_shard(key, num_shards).alias("shard"),
-        F.explode(F.array(*_bloom_positions(key, num_bits, num_hashes))).alias(
+        F.explode(F.array(*_bloom_positions(key, num_bits))).alias(
             "pos"
         ),
     )
@@ -909,11 +843,9 @@ def bloom_probe(
     bloom: DataFrame,
     key: Column,
     num_bits: int = BLOOM_BITS,
-    num_hashes: int = BLOOM_HASHES,
     num_shards: int = 1,
-    flag_col: str = "bloom_hit",
 ) -> DataFrame:
-    """Membership probe: adds boolean ``flag_col`` = "key might be in the
+    """Membership probe: adds boolean ``bloom_hit`` = "key might be in the
     bloomed set" (no false negatives; false positives at the filter's
     FPR). The bloom table is broadcast and joined on the shard route, so
     the probe is a zero-shuffle map pass over ``df`` — bit tests are plain
@@ -922,11 +854,11 @@ def bloom_probe(
         F.broadcast(bloom.withColumnRenamed("shard", "_shard")), on="_shard"
     )
     hit = F.lit(True)
-    for p in _bloom_positions(key, num_bits, num_hashes):
+    for p in _bloom_positions(key, num_bits):
         word = F.element_at("bloom", (p / F.lit(64)).cast("int") + F.lit(1))
         bit = F.getbit(word, (p % F.lit(64)).cast("int"))
         hit = hit & (bit == 1)
-    return probed.withColumn(flag_col, hit).drop("_shard", "bloom")
+    return probed.withColumn("bloom_hit", hit).drop("_shard", "bloom")
 
 
 def minhash_eval_pairs(
@@ -937,7 +869,7 @@ def minhash_eval_pairs(
     error — the dial-tuning readout for NUM_HASHES / banding choices.
 
     Same join shape as :func:`jaccard_verify` (candidates only, never n²);
-    the signature arrays add ``num_hashes`` small strings per row to the
+    the signature arrays add ``NUM_HASHES`` small strings per row to the
     join, nothing corpus-sized.
     """
     sa = sigs.select(
@@ -973,19 +905,12 @@ def minhash_eval_pairs(
 
 
 def edit_distance_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_cols: tuple[str, ...] = ("lang",),
-    prefix_chars: int = 32,
-    max_dist: int = 8,
-    max_block: int = 1000,
-    refine_over: int = 128,
+    df: DataFrame, max_dist: int = 8, max_block: int = 1000
 ) -> DataFrame:
-    """Blocked fuzzy record linkage: within each block (cheap equality
-    keys + the first word), pair documents whose lowercased
-    ``prefix_chars``-char prefixes are within ``max_dist`` Levenshtein
-    edits — the classic blocking+edit-distance linkage pass.
+    """Blocked fuzzy record linkage of ``doc_id`` rows: within each block
+    (``lang`` + the first word of ``text``), pair documents whose
+    lowercased 32-char ``text`` prefixes are within ``max_dist``
+    Levenshtein edits — the classic blocking+edit-distance linkage pass.
 
     Levenshtein is O(m·n) per pair and all-pairs is quadratic, so BOTH
     dimensions are bounded: the compared string is a fixed-width prefix
@@ -994,62 +919,61 @@ def edit_distance_pairs(
     LSH banding; a hot block belongs to MinHash, not edit distance).
     Only (id, block key, prefix) tuples shuffle — never documents.
 
-    ``refine_over``: the coarse key's block COUNT is a constant (lang x
+    Dense blocks: the coarse key's block COUNT is a constant (lang x
     first-word vocabulary), so block SIZE — and the pair count,
     quadratically — grows with the corpus (the synthetic-decade soak
-    measured 1.6s -> 102s). Blocks exceeding ``refine_over`` members
-    refine on the prefix's first 8 chars: true near-dup pairs
-    (Levenshtein <= 8 over 32-char prefixes) almost surely agree on the
-    first 8 chars, while unrelated docs that merely share a first word
-    scatter. RECALL TRADE-OFF: inside a dense block, a pair whose edits
-    fall within the first 8 chars stops pairing once the refinement
-    fires. A no-op below the threshold (max block at any attested SF is
-    93). The prefix refinement is justified HERE specifically because
-    the metric itself is prefix edit distance — key agreement and metric
-    proximity align.
+    measured 1.6s -> 102s). Blocks exceeding 128 members refine on the
+    prefix's first 8 chars: true near-dup pairs (Levenshtein <= 8 over
+    32-char prefixes) almost surely agree on the first 8 chars, while
+    unrelated docs that merely share a first word scatter. RECALL
+    TRADE-OFF: inside a dense block, a pair whose edits fall within the
+    first 8 chars stops pairing once the refinement fires. A no-op below
+    the threshold (max block at any attested SF is 93). The prefix
+    refinement is justified HERE specifically because the metric itself
+    is prefix edit distance — key agreement and metric proximity align.
     """
-    first_word = F.element_at(words_col(F.col(text_col)), 1)
+    first_word = F.element_at(words_col(F.col("text")), 1)
     keyed = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in block_cols],
+        F.col("doc_id"),
+        F.col("lang"),
         first_word.alias("_fw"),
-        F.substring(F.lower(F.col(text_col)), 1, prefix_chars).alias("_pfx"),
+        F.substring(F.lower(F.col("text")), 1, 32).alias("_pfx"),
     )
     # conditional sub-blocking (round-6 re-plan); block identity lives in
     # the key columns themselves (never a concat_ws composite, whose '|'
     # separator can collide distinct blocks and whose NULL-skipping would
     # pair NULL-keyed rows an equi-join correctly never matches); the
     # refinement is a separate suffix column.
-    w0 = Window.partitionBy(*block_cols, "_fw")
+    w0 = Window.partitionBy("lang", "_fw")
     refined = keyed.withColumn(
         "_sfx",
         F.when(
-            F.count(F.lit(1)).over(w0) > refine_over,
+            F.count(F.lit(1)).over(w0) > 128,
             F.substring(F.col("_pfx"), 1, 8),
         ).otherwise(F.lit("")),
     )
-    bw = Window.partitionBy(*block_cols, "_fw", "_sfx")
+    bw = Window.partitionBy("lang", "_fw", "_sfx")
     bounded = (
         refined.withColumn("_bsz", F.count(F.lit(1)).over(bw))
         .filter(F.col("_bsz") <= max_block)
         .drop("_bsz")
     )
     a = bounded.select(
-        *block_cols,
+        "lang",
         "_fw",
         "_sfx",
-        F.col(id_col).alias("id_a"),
+        F.col("doc_id").alias("id_a"),
         F.col("_pfx").alias("_pa"),
     )
     b = bounded.select(
-        *block_cols,
+        "lang",
         "_fw",
         "_sfx",
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         F.col("_pfx").alias("_pb"),
     )
     return (
-        a.join(b, on=[*block_cols, "_fw", "_sfx"])
+        a.join(b, on=["lang", "_fw", "_sfx"])
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("edit_dist", F.levenshtein("_pa", "_pb"))
         .filter(F.col("edit_dist") <= max_dist)

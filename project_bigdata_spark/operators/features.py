@@ -47,13 +47,12 @@ def _order_cols(order_by: list[str]) -> list[Column]:
 def add_lag_features(
     df: DataFrame,
     value_col: str,
-    entity_col: str = "user_id",
     order_by: list[str] | None = None,
     lags: tuple[int, ...] = (1, 24, 168),
 ) -> DataFrame:
-    """W1: row-offset lags per entity (pandas ``groupby().shift(k)``,
+    """W1: row-offset lags per ``user_id`` (pandas ``groupby().shift(k)``,
     data_loader.py:141-143)."""
-    w = Window.partitionBy(entity_col).orderBy(*_order_cols(order_by or ["ts"]))
+    w = Window.partitionBy("user_id").orderBy(*_order_cols(order_by or ["ts"]))
     for k in lags:
         df = df.withColumn(f"{value_col}_lag_{k}", F.lag(value_col, k).over(w))
     return df
@@ -62,12 +61,12 @@ def add_lag_features(
 def add_target_lead(
     df: DataFrame,
     value_col: str,
-    entity_col: str = "user_id",
     order_by: list[str] | None = None,
     target_name: str | None = None,
 ) -> DataFrame:
-    """W2: next-step target (pandas ``shift(-1)``, train_lightgbm.py:167-171)."""
-    w = Window.partitionBy(entity_col).orderBy(*_order_cols(order_by or ["ts"]))
+    """W2: next-step target per ``user_id`` (pandas ``shift(-1)``,
+    train_lightgbm.py:167-171)."""
+    w = Window.partitionBy("user_id").orderBy(*_order_cols(order_by or ["ts"]))
     name = target_name or f"{value_col}_next"
     return df.withColumn(name, F.lead(value_col, 1).over(w))
 
@@ -75,15 +74,14 @@ def add_target_lead(
 def add_rolling_features(
     df: DataFrame,
     value_col: str,
-    entity_col: str = "user_id",
     order_by: list[str] | None = None,
     window_rows: int = 168,
     long_window_rows: int = 720,
-    prefix: str | None = None,
 ) -> DataFrame:
-    """W3+W4: rolling mean/std/max/min over the short window and mean over
-    the long window (pandas ``rolling(k, min_periods=1)``,
-    data_loader.py:146-160).
+    """W3+W4: rolling mean/std/max/min per ``user_id`` over the short
+    window and mean over the long window (pandas
+    ``rolling(k, min_periods=1)``, data_loader.py:146-160), as columns
+    ``<value_col>_<stat>_<rows>``.
 
     Exact-decimal sum/sum-of-squares forms keep the results engine-neutral
     and summation-order-free (see plans/_norm.py rationale); max/min are
@@ -91,8 +89,8 @@ def add_rolling_features(
     """
     from project_bigdata_spark.plans import _norm as N
 
-    p = prefix or value_col
-    w = Window.partitionBy(entity_col).orderBy(*_order_cols(order_by or ["ts"]))
+    p = value_col
+    w = Window.partitionBy("user_id").orderBy(*_order_cols(order_by or ["ts"]))
     short = w.rowsBetween(-(window_rows - 1), 0)
     long = w.rowsBetween(-(long_window_rows - 1), 0)
 
@@ -166,7 +164,6 @@ def label_encode(
     df: DataFrame,
     col: str,
     out_col: str | None = None,
-    n_parts: int = 32,
     dictionary: DataFrame | None = None,
 ) -> DataFrame:
     """F7: dense integer codes in lexicographic order — exactly sklearn's
@@ -177,7 +174,7 @@ def label_encode(
     codes) with a two-phase distributed rank: range-partition the
     distinct values, ``row_number`` WITHIN each sorted range (a
     partitioned window — no single-partition global sort), then add each
-    range's cumulative start offset (an ``n_parts``-row broadcast).
+    range's cumulative start offset (a 32-row broadcast: 32 ranges).
     ``repartitionByRange`` assigns ascending key ranges to ascending
     partition ids, so offset(p) + local_rank reproduces the global dense
     code exactly (values are distinct, so row_number ≡ dense_rank). The
@@ -196,14 +193,14 @@ def label_encode(
     # extra job that would otherwise re-execute the whole upstream plan
     dict_src = dictionary if dictionary is not None else df
     distinct_vals = dict_src.select(col).distinct().persist()
-    dv = distinct_vals.repartitionByRange(n_parts, F.col(col)).withColumn(
+    dv = distinct_vals.repartitionByRange(32, F.col(col)).withColumn(
         "_p", F.spark_partition_id()
     )
     local = dv.withColumn(
         "_lr", F.row_number().over(Window.partitionBy("_p").orderBy(col))
     )
     # partitionBy(_p % 1): same single-partition execution over this
-    # n_parts-row aggregate, but with an explicit partition spec so the
+    # 32-row aggregate, but with an explicit partition spec so the
     # global-window WARN stays reserved for real unpartitioned windows.
     # (A bare lit(0) is constant-folded OUT of the partition spec before
     # WindowExec checks it, so the WARN would still fire; _p % 1 is
@@ -225,17 +222,11 @@ def label_encode(
     return df.join(codes, on=col, how="left")
 
 
-def hash_split_assign(
-    df: DataFrame,
-    id_col: str,
-    train_buckets: int = 204,
-    val_buckets: int = 26,
-    out_col: str = "split",
-) -> DataFrame:
-    """Deterministic hash-based train/val/test assignment (the sibling of
-    :func:`time_split` for non-temporal corpora): bucket = the first two
-    hex nibbles of ``md5(id)`` (0..255), split by bucket thresholds
-    (defaults ≈ 80/10/10).
+def hash_split_assign(df: DataFrame, id_col: str) -> DataFrame:
+    """Deterministic hash-based train/val/test ``split`` column (the
+    sibling of :func:`time_split` for non-temporal corpora): bucket = the
+    first two hex nibbles of ``md5(id)`` (0..255); buckets below 204 are
+    train, the next 26 val, the rest test (≈ 80/10/10).
 
     Hashing the id decorrelates the split from ingest order — an id
     modulo leaks collection time into the split. A narrow map, no
@@ -246,41 +237,36 @@ def hash_split_assign(
         F.substring(F.md5(F.col(id_col).cast("string")), 1, 2), 16, 10
     ).cast("int")
     split = (
-        F.when(bucket < train_buckets, F.lit("train"))
-        .when(bucket < train_buckets + val_buckets, F.lit("val"))
+        F.when(bucket < 204, F.lit("train"))
+        .when(bucket < 204 + 26, F.lit("val"))
         .otherwise(F.lit("test"))
     )
-    return df.withColumn(out_col, split)
+    return df.withColumn("split", split)
 
 
-def feature_scaling(
-    df: DataFrame,
-    value_col: str = "value",
-    group_col: str = "event_type",
-    stats_round: int = 4,
-) -> DataFrame:
+def feature_scaling(df: DataFrame) -> DataFrame:
     """Per-group feature scaling: z-score and min-max normalize
-    ``value_col`` within each ``group_col`` — the standard numeric-feature
+    ``value`` within each ``event_type`` — the standard numeric-feature
     prep pass before model training (the reference scales features
     driver-side in pandas, ``ml_training/train_lightgbm.py``).
 
     The stats frame is #groups rows built with one partial-aggregated
     shuffle, then BROADCAST back against the big side — the corpus itself
     never reshuffles. Mean/stddev are computed with exact DECIMAL sums
-    (order-free) and rounded to ``stats_round`` decimals BEFORE the scale
+    (order-free) and rounded to 4 decimals BEFORE the scale
     arithmetic, so the scaled outputs are bit-identical on any engine and
     any partitioning.
     """
     from project_bigdata_spark.plans import _norm as N
 
-    c = F.col(value_col)
-    stats = df.groupBy(group_col).agg(
-        N.avg_exact(value_col, stats_round).alias("_mean"),
-        N.stddev_exact(value_col, stats_round).alias("_sd"),
+    c = F.col("value")
+    stats = df.groupBy("event_type").agg(
+        N.avg_exact("value", 4).alias("_mean"),
+        N.stddev_exact("value", 4).alias("_sd"),
         F.min(c).alias("_mn"),
         F.max(c).alias("_mx"),
     )
-    out = df.join(F.broadcast(stats), on=group_col, how="inner")
+    out = df.join(F.broadcast(stats), on="event_type", how="inner")
     return (
         out.withColumn(
             "_zscore", (c - F.col("_mean")) / F.nullif(F.col("_sd"), F.lit(0.0))

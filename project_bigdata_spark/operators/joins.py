@@ -50,9 +50,9 @@ def salted_join(
     right: DataFrame,
     key: str,
     salt_buckets: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-resistant equi-join: explode the small side over a salt space.
+    """Skew-resistant inner equi-join: explode the small side over a salt
+    space.
 
     Manual fallback for when AQE skew handling is unavailable (e.g. the key
     skew lives in an aggregation upstream of the join). ``left`` gets a
@@ -68,7 +68,7 @@ def salted_join(
             )
         )
     )
-    out = l_salted.join(r_salted, on=[key, "__salt"], how=how)
+    out = l_salted.join(r_salted, on=[key, "__salt"], how="inner")
     return out.drop("__salt")
 
 

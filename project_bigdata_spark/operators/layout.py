@@ -10,7 +10,7 @@ pruning works exactly when the writer clustered the data.
 Z-ordering (bit-interleaved space-filling curve — the public technique
 behind Delta/Iceberg ``OPTIMIZE ZORDER BY``) makes ONE layout serve range
 predicates on ANY of the clustered columns: normalize each column to a
-``bits``-wide integer rank, interleave the bits, range-partition + sort by
+``Z_BITS``-wide integer rank, interleave the bits, range-partition + sort by
 the interleaved value. Every operation is a column expression plus one
 range exchange — the standard periodic rewrite job shape (compose with the
 S7 partitioned sink for per-partition rewrites).
@@ -24,12 +24,12 @@ from pyspark.sql import functions as F
 Z_BITS = 16  # rank width per column; 2 cols -> 32-bit z-values
 
 
-def _scale_expr(col: str, bits: int) -> Column:
-    """Min-max normalize ``col`` to an integer in [0, 2^bits): uses the
+def _scale_expr(col: str) -> Column:
+    """Min-max normalize ``col`` to an integer in [0, 2^Z_BITS): uses the
     ``_min_{col}`` / ``_max_{col}`` columns attached by the stats row.
     Constant columns scale to 0 (a degenerate axis adds no information)."""
     lo, hi = F.col(f"_min_{col}"), F.col(f"_max_{col}")
-    top = float((1 << bits) - 1)
+    top = float((1 << Z_BITS) - 1)
     span = (F.col(col).cast("double") - lo) / (hi - lo)
     return (
         F.when(hi == lo, F.lit(0))
@@ -54,7 +54,7 @@ def zorder_key(cols: list[str], bits: int = Z_BITS) -> Column:
     return z
 
 
-def with_zorder(df: DataFrame, cols: list[str], bits: int = Z_BITS) -> DataFrame:
+def with_zorder(df: DataFrame, cols: list[str]) -> DataFrame:
     """Attach ``_zval`` to every row. The min/max stats frame is ONE row
     (a full but narrow reduce), broadcast — the same one-row-index shape
     as the IVF centroids; the z computation itself is a narrow map."""
@@ -63,9 +63,9 @@ def with_zorder(df: DataFrame, cols: list[str], bits: int = Z_BITS) -> DataFrame
         *[F.max(c).cast("double").alias(f"_max_{c}") for c in cols],
     )
     scaled = df.crossJoin(F.broadcast(stats)).select(
-        df["*"], *[_scale_expr(c, bits).alias(f"_scaled_{c}") for c in cols]
+        df["*"], *[_scale_expr(c).alias(f"_scaled_{c}") for c in cols]
     )
-    return scaled.withColumn("_zval", zorder_key(cols, bits)).drop(
+    return scaled.withColumn("_zval", zorder_key(cols)).drop(
         *[f"_scaled_{c}" for c in cols],
         *[f"_min_{c}" for c in cols],
         *[f"_max_{c}" for c in cols],
@@ -77,7 +77,6 @@ def zorder_write(
     path: str,
     cols: list[str],
     num_files: int = 16,
-    bits: int = Z_BITS,
 ) -> None:
     """The OPTIMIZE-ZORDER rewrite: range-partition on the z-value (one
     sampled range exchange -> even output files regardless of skew) and
@@ -85,7 +84,7 @@ def zorder_write(
     After this, a range predicate on ANY clustered column prunes most
     files by footer stats alone."""
     (
-        with_zorder(df, cols, bits)
+        with_zorder(df, cols)
         .repartitionByRange(num_files, "_zval")
         .sortWithinPartitions("_zval")
         .drop("_zval")

@@ -9,8 +9,9 @@ SURVEY.md §3.1) as pure DataFrame->DataFrame functions over the driver's
 
 Fixed defects relative to the reference (SURVEY.md §4.3):
 
-- counts come from ``observe()`` metrics, not a post-write ``count()`` that
-  recomputes the lineage (batch_processor.py:131,177,220);
+- counts come from ``observe()`` metrics on the writes (``jobs/batch.run``),
+  not a post-write ``count()`` that recomputes the lineage
+  (batch_processor.py:131,177,220);
 - Gold's parallel arrays are built from ONE sorted ``collect_list(struct)``
   (deterministic) instead of two independent ``collect_list`` calls
   (batch_processor.py:206-207);
@@ -27,7 +28,7 @@ driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from project_bigdata_spark.functions import arrays as A
@@ -106,27 +107,3 @@ def gold_hourly(silver_df: DataFrame) -> DataFrame:
         .drop("pairs")
     )
     return agg
-
-
-def run_batch_medallion(raw: DataFrame, out_dir: str | None = None) -> dict[str, int]:
-    """End-to-end batch run (§3.1 lifecycle) with single-pass counts.
-
-    ``observe()`` attaches a count metric to each layer so the write action
-    itself produces the record counts — the reference's post-write
-    ``df.count()`` re-read Kafka and recomputed every layer (§4.3-1).
-    """
-    obs_b, obs_s, obs_g = Observation("bronze"), Observation("silver"), Observation("gold")
-    b = bronze(raw).observe(obs_b, F.count(F.lit(1)).alias("rows"))
-    s = silver(b).observe(obs_s, F.count(F.lit(1)).alias("rows"))
-    g = gold_hourly(s).observe(obs_g, F.count(F.lit(1)).alias("rows"))
-    if out_dir:
-        g.write.mode("overwrite").partitionBy("year", "month", "day").parquet(
-            f"{out_dir}/gold"
-        )
-    else:
-        g.write.format("noop").mode("overwrite").save()
-    return {
-        "bronze": obs_b.get["rows"],
-        "silver": obs_s.get["rows"],
-        "gold": obs_g.get["rows"],
-    }

@@ -268,14 +268,9 @@ def text_to_embedding(df: DataFrame, id_col: str = "doc_id",
     return d.mapInPandas(encode, schema=EMBED_SCHEMA)
 
 
-def audio_segment_plan(
-    media: DataFrame,
-    sample_rate: int = 16_000,
-    bytes_per_sample: int = 2,
-    window_samples: int = 80_000,
-) -> DataFrame:
-    """Audio segmentation plumbing: split each PCM payload into fixed
-    ``window_samples`` windows and emit per-segment metadata —
+def audio_segment_plan(media: DataFrame, window_samples: int = 80_000) -> DataFrame:
+    """Audio segmentation plumbing: split each 16-bit PCM payload into
+    fixed ``window_samples`` windows and emit per-segment metadata —
     (media_id, seg_idx, start_sample, n_samples, byte_off, n_bytes) —
     entirely from ``byte_len`` arithmetic (sequence + posexplode).
 
@@ -286,7 +281,7 @@ def audio_segment_plan(
     truncated to the real sample count — every sample lands in exactly
     one segment.
     """
-    total = (F.col("byte_len") / bytes_per_sample).cast("bigint")
+    total = (F.col("byte_len") / 2).cast("bigint")
     n_seg = F.greatest(F.ceil(total / F.lit(window_samples)), F.lit(1)).cast(
         "int"
     )
@@ -307,8 +302,8 @@ def audio_segment_plan(
         F.col("seg_idx").cast("bigint").alias("seg_idx"),
         start.alias("start_sample"),
         n.alias("n_samples"),
-        (start * bytes_per_sample).alias("byte_off"),
-        (n * bytes_per_sample).alias("n_bytes"),
+        (start * 2).alias("byte_off"),
+        (n * 2).alias("n_bytes"),
     )
 
 

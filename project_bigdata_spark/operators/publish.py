@@ -41,12 +41,9 @@ def shard_id_col(id_col: Column, n_shards: int) -> Column:
 
 
 def assign_shards(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_shards: int = 16,
-    out_col: str = "shard_id",
+    df: DataFrame, id_col: str = "doc_id", n_shards: int = 16
 ) -> DataFrame:
-    return df.withColumn(out_col, shard_id_col(F.col(id_col), n_shards))
+    return df.withColumn("shard_id", shard_id_col(F.col(id_col), n_shards))
 
 
 def shard_manifest_frame(
@@ -125,13 +122,12 @@ def read_shard(spark: SparkSession, path: str, shard_id: int) -> DataFrame:
 
 def epoch_order(
     df: DataFrame,
-    id_col: str = "doc_id",
     epoch: int = 0,
     n_shards: int = 16,
     out_col: str = "epoch_pos",
 ) -> DataFrame:
     """Deterministic per-epoch shuffle order WITHIN each shard: position
-    = rank of ``md5(id || '-e' || epoch)``, so every epoch visits a shard
+    = rank of ``md5(doc_id || '-e' || epoch)``, so every epoch visits a shard
     in a different but reproducible order (resume mid-epoch = seek to a
     position), and changing the epoch reshuffles without touching data.
 
@@ -141,39 +137,33 @@ def epoch_order(
     """
     from pyspark.sql import Window
 
-    s = assign_shards(df, id_col, n_shards)
+    s = assign_shards(df, "doc_id", n_shards)
     key = F.md5(
-        F.concat(F.col(id_col).cast("string"), F.lit(f"-e{epoch}"))
+        F.concat(F.col("doc_id").cast("string"), F.lit(f"-e{epoch}"))
     )
-    w = Window.partitionBy("shard_id").orderBy(key, F.col(id_col))
+    w = Window.partitionBy("shard_id").orderBy(key, F.col("doc_id"))
     return s.withColumn(out_col, F.row_number().over(w))
 
 
-def assign_global_ids(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_shards: int = 16,
-    out_col: str = "global_id",
-    shard_bits: int = 40,
-) -> DataFrame:
-    """Deterministic dense-ish global int64 ids without global
-    coordination: ``shard_id << shard_bits | rank within shard`` (rank
-    ordered by the natural key). The standard scale pattern replacing
+def assign_global_ids(df: DataFrame, n_shards: int = 16) -> DataFrame:
+    """Deterministic dense-ish ``global_id`` int64 ids without global
+    coordination: ``shard_id << 40 | rank within shard`` (rank ordered by
+    the natural key ``doc_id``). The standard scale pattern replacing
     ``monotonically_increasing_id()``, whose values depend on partition
     COUNT and task scheduling — they change when the cluster size does,
     which silently breaks any join keyed on them across runs. These ids
     are a pure function of the data: stable across runs, clusters, and
     AQE decisions; per-shard ranks are a shard-local window (no single
-    global sort), capacity 2^shard_bits rows per shard.
+    global sort), capacity 2^40 rows per shard.
     """
     from pyspark.sql import Window
 
-    s = assign_shards(df, id_col, n_shards)
-    w = Window.partitionBy("shard_id").orderBy(F.col(id_col))
+    s = assign_shards(df, "doc_id", n_shards)
+    w = Window.partitionBy("shard_id").orderBy(F.col("doc_id"))
     return s.withColumn(
-        out_col,
+        "global_id",
         (
-            F.col("shard_id").cast("bigint") * F.lit(1 << shard_bits)
+            F.col("shard_id").cast("bigint") * F.lit(1 << 40)
             + F.row_number().over(w)
         ).cast("bigint"),
     )

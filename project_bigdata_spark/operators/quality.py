@@ -43,10 +43,6 @@ def in_set(col: str, allowed: list[str]) -> Check:
     return Check(f"in_set({col})", ~F.col(col).isin(*allowed))
 
 
-def matches(col: str, regex: str) -> Check:
-    return Check(f"matches({col})", ~F.col(col).rlike(regex))
-
-
 def run_checks(df: DataFrame, checks: list[Check]) -> DataFrame:
     """One aggregation pass: total rows + violation count per check."""
     aggs = [F.count(F.lit(1)).alias("total_rows")] + [
@@ -99,7 +95,6 @@ def psi_drift(
     group_col: str = "event_type",
     split_pred=None,
     bin_width: float = 25.0,
-    round_to: int = 6,
     rnd=None,
 ):
     """Population Stability Index between two halves of a dataset —
@@ -112,7 +107,7 @@ def psi_drift(
     One aggregation over (group, bin) with conditional partial counts —
     the two sides are counted in the SAME pass (no self-join, no second
     scan); the per-group bin frames are tiny and the PSI fold is a
-    rounded-then-DECIMAL sum, engine-exact.
+    rounded-to-6-places-then-DECIMAL sum, engine-exact.
     """
     from pyspark.sql import functions as F
 
@@ -132,7 +127,7 @@ def psi_drift(
     j = counts.join(F.broadcast(totals), group_col)
     p = (F.col("n_a") + 0.5) / (F.col("t_a") + 0.5 * F.col("n_bins"))
     q = (F.col("n_b") + 0.5) / (F.col("t_b") + 0.5 * F.col("n_bins"))
-    term = rnd((p - q) * F.log(p / q), round_to).cast("decimal(18,6)")
+    term = rnd((p - q) * F.log(p / q), 6).cast("decimal(18,6)")
     return (
         j.groupBy(group_col)
         .agg(

@@ -28,8 +28,6 @@ def range_join(
     key: str,
     lo_seconds: int,
     hi_seconds: int,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
 ) -> DataFrame:
     """Inner range join: right.ts in [left.ts + lo, left.ts + hi].
 
@@ -40,8 +38,7 @@ def range_join(
     if width <= 0:
         raise ValueError("hi_seconds must exceed lo_seconds")
 
-    l_us = F.unix_micros(F.col(left_ts))
-    r_us = F.unix_micros(F.col(right_ts))
+    l_us = F.unix_micros(F.col("ts"))
     width_us = width * 1_000_000
 
     # left's window [ts+lo, ts+hi] overlaps buckets floor((ts+lo)/w) and
@@ -53,7 +50,7 @@ def range_join(
         F.explode(F.array_distinct(F.array(lo_bucket, hi_bucket))),
     ).withColumn("_l_us", l_us)
 
-    r_b = right.withColumnRenamed(right_ts, "r_ts").withColumn(
+    r_b = right.withColumnRenamed("ts", "r_ts").withColumn(
         "_bucket", (F.unix_micros(F.col("r_ts")) / width_us).cast("long")
     ).withColumn("_r_us", F.unix_micros(F.col("r_ts")))
 

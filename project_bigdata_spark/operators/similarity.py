@@ -35,14 +35,14 @@ N_PLANES = 8
 WIDE_PLANES = 24  # adaptive-LSH signature width (see lsh_near_dup_pairs)
 
 
-def plane_signs(plane: int, dim: int = DIM) -> list[int]:
+def plane_signs(plane: int) -> list[int]:
     """Deterministic ±1 signs for one hyperplane: parity of md5 nibbles.
 
     Computed at plan-build time; both the Spark plan and the SQL oracle
     inline the same literals.
     """
     signs: list[int] = []
-    for d in range(dim):
+    for d in range(DIM):
         h = hashlib.md5(f"plane{plane}:{d}".encode()).hexdigest()
         signs.append(1 if int(h[0], 16) % 2 == 0 else -1)
     return signs
@@ -74,13 +74,13 @@ def cosine(a: Column, b: Column) -> Column:
     )
 
 
-def lsh_bucket(vec: Column, n_planes: int = N_PLANES, dim: int = DIM) -> Column:
+def lsh_bucket(vec: Column, n_planes: int = N_PLANES) -> Column:
     """Random-sign hyperplane bucket id: one bit per plane (sign of the
     ±1-weighted sum), packed into a string like '10110010'."""
     v = as_double(vec)
     bits = []
     for p in range(n_planes):
-        signs = F.array(*[F.lit(float(s)) for s in plane_signs(p, dim)])
+        signs = F.array(*[F.lit(float(s)) for s in plane_signs(p)])
         d = dot(v, signs)
         bits.append(F.when(d > 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
@@ -88,15 +88,14 @@ def lsh_bucket(vec: Column, n_planes: int = N_PLANES, dim: int = DIM) -> Column:
 
 def lsh_near_dup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
     max_bucket: int = 2000,
     adaptive_planes: bool = False,
     max_candidates: int | None = None,
 ) -> DataFrame:
-    """Embedding near-dup: exact cosine verification restricted to vectors
-    sharing an LSH bucket — the sub-quadratic embedding-dedup pattern.
+    """Embedding near-dup over ``(vec_id, embedding)``: exact cosine
+    verification restricted to vectors sharing an LSH bucket — the
+    sub-quadratic embedding-dedup pattern.
 
     ``adaptive_planes``: with a FIXED plane count the bucket count is a
     constant (2^N_PLANES), so bucket size — and the verify join,
@@ -130,17 +129,17 @@ def lsh_near_dup_pairs(
         withb = (
             df.crossJoin(F.broadcast(kcol))
             .select(
-                F.col(id_col),
-                as_double(F.col(vec_col)).alias("_v"),
-                lsh_bucket(F.col(vec_col), n_planes=WIDE_PLANES)
+                F.col("vec_id"),
+                as_double(F.col("embedding")).alias("_v"),
+                lsh_bucket(F.col("embedding"), n_planes=WIDE_PLANES)
                 .substr(F.lit(1), F.col("_k").cast("int"))
                 .alias("bucket"),
             )
         )
     else:
         withb = df.select(
-            F.col(id_col), as_double(F.col(vec_col)).alias("_v"),
-            lsh_bucket(F.col(vec_col)).alias("bucket"),
+            F.col("vec_id"), as_double(F.col("embedding")).alias("_v"),
+            lsh_bucket(F.col("embedding")).alias("bucket"),
         )
     w = Window.partitionBy("bucket")
     bounded = withb.withColumn("_bsz", F.count(F.lit(1)).over(w)).filter(
@@ -158,17 +157,17 @@ def lsh_near_dup_pairs(
         # bucket occupancy <= cap (all attested SFs); binding on
         # replicated stress corpora where copy-groups pile into one
         # bucket (the sf10 regime measured 24.9x without it).
-        wc = Window.partitionBy("bucket").orderBy(id_col)
+        wc = Window.partitionBy("bucket").orderBy("vec_id")
         a_src = (
             bounded.withColumn("_crk", F.row_number().over(wc))
             .filter(F.col("_crk") <= max_candidates)
             .drop("_crk")
         )
     a = a_src.select(
-        "bucket", F.col(id_col).alias("id_a"), F.col("_v").alias("va")
+        "bucket", F.col("vec_id").alias("id_a"), F.col("_v").alias("va")
     )
     b = bounded.select(
-        "bucket", F.col(id_col).alias("id_b"), F.col("_v").alias("vb")
+        "bucket", F.col("vec_id").alias("id_b"), F.col("_v").alias("vb")
     )
     return (
         a.join(b, on="bucket")
@@ -179,20 +178,19 @@ def lsh_near_dup_pairs(
     )
 
 
-def _centroid_row(
-    centroids: DataFrame, centroid_id: str, vec_col: str
-) -> DataFrame:
-    """Pack the centroid table into ONE row holding a cid-sorted
-    ``array<struct<cid, cvec, cnorm>>`` — the broadcastable form that lets
-    the per-vector argmax run as a column expression instead of a shuffle.
-    Centroid L2 norms are computed once here, not once per corpus row."""
+def _centroid_row(centroids: DataFrame) -> DataFrame:
+    """Pack the ``(centroid_id, embedding)`` table into ONE row holding a
+    cid-sorted ``array<struct<cid, cvec, cnorm>>`` — the broadcastable
+    form that lets the per-vector argmax run as a column expression
+    instead of a shuffle. Centroid L2 norms are computed once here, not
+    once per corpus row."""
     return centroids.agg(
         F.array_sort(
             F.collect_list(
                 F.struct(
-                    F.col(centroid_id).alias("cid"),
-                    as_double(F.col(vec_col)).alias("cvec"),
-                    norm(as_double(F.col(vec_col))).alias("cnorm"),
+                    F.col("centroid_id").alias("cid"),
+                    as_double(F.col("embedding")).alias("cvec"),
+                    norm(as_double(F.col("embedding"))).alias("cnorm"),
                 )
             )
         ).alias("_cents")
@@ -242,31 +240,29 @@ def _nearest_centroid(
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
     round_to: int | None = None,
     rnd=F.round,
 ) -> DataFrame:
-    """IVF coarse assignment: nearest centroid (max cosine) per vector.
+    """IVF coarse assignment: nearest ``centroid_id`` (max cosine) per
+    ``vec_id``, both tables holding an ``embedding`` column.
 
     The centroid table is packed into a single broadcast row and the
     argmax runs as a per-row fold — a narrow map over the corpus with NO
     shuffle (the window/groupBy formulation re-shuffles corpus×centroids,
     which is the dominant cost at billions of vectors).
     """
-    crow = F.broadcast(_centroid_row(centroids, centroid_id, vec_col))
+    crow = F.broadcast(_centroid_row(centroids))
     best = _nearest_centroid(
         F.col("_v"), F.col("_cents"), round_to, rnd, vnorm=F.col("_vnorm")
     )
     return (
-        df.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
+        df.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_v"))
         .withColumn("_vnorm", norm(F.col("_v")))
         .crossJoin(crow)
         .withColumn("_best", best)
         .select(
-            F.col(id_col),
-            F.col("_best")["cid"].alias(centroid_id),
+            F.col("vec_id"),
+            F.col("_best")["cid"].alias("centroid_id"),
             F.col("_best")["cos"].alias("cosine"),
         )
     )
@@ -278,26 +274,23 @@ def ivf_search(
     query_df: DataFrame,
     k: int = 5,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-    round_to: int = 6,
     rnd=F.round,
 ) -> DataFrame:
-    """IVF-Flat search: pick the ``nprobe`` centroids nearest the query,
-    then exact-cosine re-rank only the vectors whose nearest centroid is
-    one of the probed cells.
+    """IVF-Flat search over ``(vec_id, embedding)``: pick the ``nprobe``
+    centroids nearest the query, then exact-cosine re-rank only the
+    vectors whose nearest centroid is one of the probed cells.
 
     The whole index side (centroid array + query vector + probe set) is
     ONE broadcast row; the corpus pass is a narrow map + filter ending in
     a TakeOrderedAndProject — zero shuffles end to end. The probe filter
     prunes ~``nprobe/|centroids|`` of the corpus before the exact re-rank,
     which is what makes this the scale path over brute force. Cosines are
-    rounded before every argmax/top-k so rankings replay across engines.
+    rounded to 6 places before every argmax/top-k so rankings replay
+    across engines.
     """
-    qrow = query_df.select(as_double(F.col(vec_col)).alias("_qvec"))
+    qrow = query_df.select(as_double(F.col("embedding")).alias("_qvec"))
     combo = (
-        _centroid_row(centroids, centroid_id, vec_col)
+        _centroid_row(centroids)
         .crossJoin(qrow)
         .withColumn(
             "_probes",
@@ -311,7 +304,7 @@ def ivf_search(
                                     -F.coalesce(
                                         rnd(
                                             cosine(F.col("_qvec"), c["cvec"]),
-                                            round_to,
+                                            6,
                                         ),
                                         F.lit(-2.0),
                                     )
@@ -328,22 +321,20 @@ def ivf_search(
         )
     )
     best = _nearest_centroid(
-        F.col("_v"), F.col("_cents"), round_to, rnd, vnorm=F.col("_vnorm")
+        F.col("_v"), F.col("_cents"), 6, rnd, vnorm=F.col("_vnorm")
     )
     return (
-        df.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
+        df.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_v"))
         .withColumn("_vnorm", norm(F.col("_v")))
         .crossJoin(F.broadcast(combo))
         .withColumn("_best", best)
         .filter(F.array_contains(F.col("_probes"), F.col("_best")["cid"]))
         .select(
-            F.col(id_col),
-            F.col("_best")["cid"].alias(centroid_id),
-            rnd(cosine(F.col("_v"), F.col("_qvec")), round_to).alias(
-                "cosine"
-            ),
+            F.col("vec_id"),
+            F.col("_best")["cid"].alias("centroid_id"),
+            rnd(cosine(F.col("_v"), F.col("_qvec")), 6).alias("cosine"),
         )
-        .orderBy(F.desc("cosine"), id_col)
+        .orderBy(F.desc("cosine"), "vec_id")
         .limit(k)
     )
 
@@ -352,14 +343,11 @@ def cosine_topk_batch(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    round_to: int = 6,
     rnd=F.round,
 ) -> DataFrame:
-    """Batch exact kNN: top-``k`` corpus neighbors for EVERY query in a
-    (small, broadcast) query batch.
+    """Batch exact kNN: top-``k`` corpus ``(vec_id, embedding)``
+    neighbors for EVERY ``query_id`` in a (small, broadcast) query batch,
+    cosines rounded to 6 places.
 
     The corpus is scored once in a narrow pass against the broadcast
     batch, then reduced with a two-level bounded top-k: per-input-
@@ -374,35 +362,35 @@ def cosine_topk_batch(
     """
     q = F.broadcast(
         queries.select(
-            F.col(qid_col), as_double(F.col(vec_col)).alias("_qvec")
+            F.col("query_id"), as_double(F.col("embedding")).alias("_qvec")
         )
     )
-    cos = rnd(cosine(F.col("_v"), F.col("_qvec")), round_to)
+    cos = rnd(cosine(F.col("_v"), F.col("_qvec")), 6)
     scored = (
-        corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
+        corpus.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_v"))
         .crossJoin(q)
         .select(
-            F.col(qid_col),
+            F.col("query_id"),
             F.struct(
                 (-F.coalesce(cos, F.lit(-2.0))).alias("nk"),
-                F.col(id_col).alias("id"),
+                F.col("vec_id").alias("id"),
                 cos.alias("cos"),
             ).alias("_cand"),
         )
     )
     part = (
         scored.withColumn("_p", F.spark_partition_id())
-        .groupBy(qid_col, "_p")
+        .groupBy("query_id", "_p")
         .agg(F.slice(F.array_sort(F.collect_list("_cand")), 1, k).alias("_top"))
     )
-    merged = part.groupBy(qid_col).agg(
+    merged = part.groupBy("query_id").agg(
         F.slice(F.array_sort(F.flatten(F.collect_list("_top"))), 1, k).alias(
             "_top"
         )
     )
-    return merged.select(F.col(qid_col), F.explode("_top").alias("_t")).select(
-        F.col(qid_col),
-        F.col("_t")["id"].alias(id_col),
+    return merged.select(F.col("query_id"), F.explode("_top").alias("_t")).select(
+        F.col("query_id"),
+        F.col("_t")["id"].alias("vec_id"),
         F.col("_t")["cos"].alias("cosine"),
     )
 
@@ -466,13 +454,12 @@ def semantic_dedup_pairs(
     df: DataFrame,
     centroids: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cluster: int = 10000,
     round_to: int | None = None,
     rnd=F.round,
 ) -> DataFrame:
-    """Semantic dedup (SemDeDup-shaped): cluster embeddings coarsely, then
+    """Semantic dedup (SemDeDup-shaped) of ``(vec_id, embedding)`` rows:
+    cluster embeddings coarsely, then
     exact pairwise cosine ONLY within clusters; pairs at or above
     ``threshold`` are semantic duplicates (keep the min-id survivor
     downstream).
@@ -487,18 +474,17 @@ def semantic_dedup_pairs(
 
     Emits ``(centroid_id, id_a, id_b, cosine)`` with ``id_a < id_b``.
     """
-    assign = ivf_assign(
-        df, centroids, id_col=id_col, vec_col=vec_col,
-        round_to=round_to, rnd=rnd,
-    ).select(F.col(id_col), F.col("centroid_id"))
+    assign = ivf_assign(df, centroids, round_to=round_to, rnd=rnd).select(
+        F.col("vec_id"), F.col("centroid_id")
+    )
     # norms are computed ONCE per member row, not per pair: the pairwise
     # cosine then needs a single interpreted dot fold instead of three
     # (a.b, a.a, b.b) — 3x less HOF work on the quadratic-in-cluster part,
     # and sqrt(a.a)*sqrt(b.b) is the same IEEE expression either way, so
     # oracle parity is unchanged
     members = assign.join(
-        df.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v")),
-        on=id_col,
+        df.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_v")),
+        on="vec_id",
     ).withColumn("_n", norm(F.col("_v")))
     cw = Window.partitionBy("centroid_id")
     members = (
@@ -508,13 +494,13 @@ def semantic_dedup_pairs(
     )
     a = members.select(
         F.col("centroid_id"),
-        F.col(id_col).alias("id_a"),
+        F.col("vec_id").alias("id_a"),
         F.col("_v").alias("_va"),
         F.col("_n").alias("_na"),
     )
     b = members.select(
         F.col("centroid_id"),
-        F.col(id_col).alias("id_b"),
+        F.col("vec_id").alias("id_b"),
         F.col("_v").alias("_vb"),
         F.col("_n").alias("_nb"),
     )
@@ -587,15 +573,16 @@ def l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def _codebook_row(codebook: DataFrame, code_id: str, vec_col: str) -> DataFrame:
-    """Pack the codeword table into ONE broadcastable row: a cid-sorted
-    ``array<struct<cid, cvec>>`` (same shape trick as :func:`_centroid_row`)."""
+def _codebook_row(codebook: DataFrame) -> DataFrame:
+    """Pack the ``(code_id, embedding)`` codeword table into ONE
+    broadcastable row: a cid-sorted ``array<struct<cid, cvec>>`` (same
+    shape trick as :func:`_centroid_row`)."""
     return codebook.agg(
         F.array_sort(
             F.collect_list(
                 F.struct(
-                    F.col(code_id).alias("cid"),
-                    as_double(F.col(vec_col)).alias("cvec"),
+                    F.col("code_id").alias("cid"),
+                    as_double(F.col("embedding")).alias("cvec"),
                 )
             )
         ).alias("_cb")
@@ -606,14 +593,15 @@ def _sub(v: Column, m: int, sub_dim: int) -> Column:
     return F.slice(v, m * sub_dim + 1, sub_dim)
 
 
-def _best_code(v: Column, cb: Column, m: int, sub_dim: int, rnd, round_to: int):
+def _best_code(v: Column, cb: Column, m: int, sub_dim: int, rnd):
     """Per-subspace argmin over the packed codebook: struct array sorted by
-    (dist, cid, pos) — ties break to the smallest codeword id, and ``pos``
-    rides along so ADC can index the distance table positionally."""
+    (dist, cid, pos), dist rounded to 6 places — ties break to the
+    smallest codeword id, and ``pos`` rides along so ADC can index the
+    distance table positionally."""
     scored = F.transform(
         cb,
         lambda c, i: F.struct(
-            rnd(l2sq(_sub(v, m, sub_dim), _sub(c["cvec"], m, sub_dim)), round_to)
+            rnd(l2sq(_sub(v, m, sub_dim), _sub(c["cvec"], m, sub_dim)), 6)
             .alias("dist"),
             c["cid"].alias("cid"),
             i.alias("pos"),
@@ -627,14 +615,11 @@ def pq_encode_flat(
     codebook: DataFrame,
     n_sub: int = 4,
     dim: int = DIM,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_id: str = "code_id",
-    round_to: int = 6,
     rnd=F.round,
 ) -> DataFrame:
-    """PQ encoding, one row per (vector, subspace): the nearest codeword
-    (min rounded squared-L2 over that subspace's slice) and its distance.
+    """PQ encoding, one row per (``vec_id``, subspace): the nearest
+    ``code_id`` codeword (min rounded squared-L2 over that subspace's
+    slice of ``embedding``) and its distance.
 
     The codebook is ONE broadcast row; per input row the M argmins run as
     column expressions and ``inline`` unrolls them — a narrow map, zero
@@ -642,23 +627,23 @@ def pq_encode_flat(
     a codes table a few hundred GB wide.
     """
     sub_dim = dim // n_sub
-    cb = F.broadcast(_codebook_row(codebook, code_id, vec_col))
+    cb = F.broadcast(_codebook_row(codebook))
     rows = F.array(
         *[
             F.struct(
                 F.lit(m).alias("m"),
-                _best_code(F.col("_v"), F.col("_cb"), m, sub_dim, rnd, round_to)
+                _best_code(F.col("_v"), F.col("_cb"), m, sub_dim, rnd)
                 .alias("best"),
             )
             for m in range(n_sub)
         ]
     )
     return (
-        df.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
+        df.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_v"))
         .crossJoin(cb)
-        .select(F.col(id_col), F.inline(rows))
+        .select(F.col("vec_id"), F.inline(rows))
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.col("m"),
             F.col("best")["cid"].alias("code"),
             F.col("best")["dist"].alias("dist"),
@@ -673,13 +658,10 @@ def pq_search_adc(
     k: int = 10,
     n_sub: int = 4,
     dim: int = DIM,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_id: str = "code_id",
-    round_to: int = 6,
     rnd=F.round,
 ) -> DataFrame:
-    """Asymmetric-distance (ADC) PQ search: build the per-subspace
+    """Asymmetric-distance (ADC) PQ search over ``(vec_id, embedding)``
+    with a ``(code_id, embedding)`` codebook: build the per-subspace
     query->codeword distance table ONCE (n_sub x K entries, computed
     in-plan from the broadcast query row + codebook row), then score every
     vector as the DECIMAL-exact sum of its codes' table entries.
@@ -690,15 +672,15 @@ def pq_search_adc(
     n_sub-term sum is order-free and bit-identical on any engine.
     """
     sub_dim = dim // n_sub
-    cb = F.broadcast(_codebook_row(codebook, code_id, vec_col))
-    q = F.broadcast(query_df.select(as_double(F.col(vec_col)).alias("_q")))
+    cb = F.broadcast(_codebook_row(codebook))
+    q = F.broadcast(query_df.select(as_double(F.col("embedding")).alias("_q")))
     # distance table: dtab[m][pos] = round(l2sq(q_sub, cw_sub), 6) as DECIMAL.
     # NB: the per-m lambda must stay single-argument — PySpark reads a
     # 2-arg HOF lambda as (element, index) and would shadow m.
     def _dtab_entry(m: int):
         return lambda c: rnd(
             l2sq(_sub(F.col("_q"), m, sub_dim), _sub(c["cvec"], m, sub_dim)),
-            round_to,
+            6,
         ).cast("decimal(18,6)")
 
     dtab = F.array(
@@ -706,7 +688,7 @@ def pq_search_adc(
     )
     best = F.array(
         *[
-            _best_code(F.col("_v"), F.col("_cb"), m, sub_dim, rnd, round_to)
+            _best_code(F.col("_v"), F.col("_cb"), m, sub_dim, rnd)
             for m in range(n_sub)
         ]
     )
@@ -717,62 +699,55 @@ def pq_search_adc(
         term = F.element_at(F.col("_dtab")[m], F.col("_best")[m]["pos"] + 1)
         score = term if score is None else score + term
     return (
-        df.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
+        df.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_v"))
         .crossJoin(cb)
         .crossJoin(q)
         .withColumn("_dtab", dtab)
         .withColumn("_best", best)
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.concat_ws(
                 ",", F.transform(F.col("_best"), lambda b: b["cid"].cast("string"))
             ).alias("codes"),
             score.cast("double").alias("adc_dist"),
         )
-        .orderBy("adc_dist", id_col)
+        .orderBy("adc_dist", "vec_id")
         .limit(k)
     )
 
 
-def rp_signs(component: int, dim: int = DIM) -> list[int]:
+def rp_signs(component: int) -> list[int]:
     """Deterministic ±1 signs for one random-projection component —
     same md5-parity scheme as :func:`plane_signs`, different salt."""
     signs: list[int] = []
-    for d in range(dim):
+    for d in range(DIM):
         h = hashlib.md5(f"rp{component}:{d}".encode()).hexdigest()
         signs.append(1 if int(h[0], 16) % 2 == 0 else -1)
     return signs
 
 
-def random_project(
-    df: DataFrame,
-    out_dim: int = 16,
-    dim: int = DIM,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rnd=F.round,
-    round_to: int = 6,
-) -> DataFrame:
-    """Johnson-Lindenstrauss dimensionality reduction with a Rademacher
-    (±1) matrix: ``y_j = <v, s_j> / sqrt(out_dim)``. The sign matrix is a
-    plan-build-time literal (md5 parity), so the projection replays
-    bit-identically anywhere — no stored model artifact to ship.
+def random_project(df: DataFrame, out_dim: int = 16, rnd=F.round) -> DataFrame:
+    """Johnson-Lindenstrauss dimensionality reduction of each ``vec_id``'s
+    ``embedding`` with a Rademacher (±1) matrix:
+    ``y_j = <v, s_j> / sqrt(out_dim)``, rounded to 6 places. The sign
+    matrix is a plan-build-time literal (md5 parity), so the projection
+    replays bit-identically anywhere — no stored model artifact to ship.
 
     Zero shuffles, pure narrow map; the standard pre-pass that shrinks a
-    100 TB embedding corpus ~dim/out_dim× before ANN indexing or
+    100 TB embedding corpus ~DIM/out_dim× before ANN indexing or
     clustering, with pairwise distances preserved to O(1/sqrt(out_dim)).
     """
-    v = as_double(F.col(vec_col))
+    v = as_double(F.col("embedding"))
     scale = float(out_dim) ** 0.5
     comps = [
         rnd(
-            dot(v, F.array(*[F.lit(float(s)) for s in rp_signs(j, dim)]))
+            dot(v, F.array(*[F.lit(float(s)) for s in rp_signs(j)]))
             / F.lit(scale),
-            round_to,
+            6,
         )
         for j in range(out_dim)
     ]
-    return df.select(F.col(id_col), F.array(*comps).alias("projected"))
+    return df.select(F.col("vec_id"), F.array(*comps).alias("projected"))
 
 
 def ivfpq_search(
@@ -784,16 +759,11 @@ def ivfpq_search(
     nprobe: int = 2,
     rerank: int = 20,
     n_sub: int = 4,
-    dim: int = DIM,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-    code_id: str = "code_id",
-    round_to: int = 6,
     rnd=F.round,
 ) -> DataFrame:
-    """IVF-PQ search — the production billion-vector ANN architecture,
-    composed from the engine's IVF and PQ pieces in ONE corpus pass:
+    """IVF-PQ search over ``(vec_id, embedding)`` — the production
+    billion-vector ANN architecture, composed from the engine's IVF and
+    PQ pieces in ONE corpus pass:
 
     1. coarse probe: the ``nprobe`` centroids nearest the query
        (broadcast centroid array, per-row fold — as :func:`ivf_search`);
@@ -810,11 +780,11 @@ def ivfpq_search(
     ADC scan and exactly ``rerank`` rows for the float re-rank — the
     recall/cost dial FAISS exposes as (nprobe, rerank).
     """
-    sub_dim = dim // n_sub
-    qrow = query_df.select(as_double(F.col(vec_col)).alias("_qvec"))
+    sub_dim = DIM // n_sub
+    qrow = query_df.select(as_double(F.col("embedding")).alias("_qvec"))
     combo = (
-        _centroid_row(centroids, centroid_id, vec_col)
-        .crossJoin(_codebook_row(codebook, code_id, vec_col))
+        _centroid_row(centroids)
+        .crossJoin(_codebook_row(codebook))
         .crossJoin(qrow)
         .withColumn(
             "_probes",
@@ -828,7 +798,7 @@ def ivfpq_search(
                                     -F.coalesce(
                                         rnd(
                                             cosine(F.col("_qvec"), c["cvec"]),
-                                            round_to,
+                                            6,
                                         ),
                                         F.lit(-2.0),
                                     )
@@ -848,18 +818,18 @@ def ivfpq_search(
     def _dtab_entry(m: int):
         return lambda c: rnd(
             l2sq(_sub(F.col("_qvec"), m, sub_dim), _sub(c["cvec"], m, sub_dim)),
-            round_to,
+            6,
         ).cast("decimal(18,6)")
 
     dtab = F.array(
         *[F.transform(F.col("_cb"), _dtab_entry(m)) for m in range(n_sub)]
     )
     best_cent = _nearest_centroid(
-        F.col("_v"), F.col("_cents"), round_to, rnd, vnorm=F.col("_vnorm")
+        F.col("_v"), F.col("_cents"), 6, rnd, vnorm=F.col("_vnorm")
     )
     best_codes = F.array(
         *[
-            _best_code(F.col("_v"), F.col("_cb"), m, sub_dim, rnd, round_to)
+            _best_code(F.col("_v"), F.col("_cb"), m, sub_dim, rnd)
             for m in range(n_sub)
         ]
     )
@@ -868,23 +838,23 @@ def ivfpq_search(
         term = F.element_at(F.col("_dtab")[m], F.col("_best")[m]["pos"] + 1)
         score = term if score is None else score + term
     candidates = (
-        df.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
+        df.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_v"))
         .withColumn("_vnorm", norm(F.col("_v")))
         .crossJoin(F.broadcast(combo.withColumn("_dtab", dtab)))
         .withColumn("_bc", best_cent)
         .filter(F.array_contains(F.col("_probes"), F.col("_bc")["cid"]))
         .withColumn("_best", best_codes)
         .withColumn("_adc", score.cast("double"))
-        .orderBy("_adc", id_col)
+        .orderBy("_adc", "vec_id")
         .limit(rerank)
     )
     return (
         candidates.select(
-            F.col(id_col),
-            F.col("_bc")["cid"].alias(centroid_id),
+            F.col("vec_id"),
+            F.col("_bc")["cid"].alias("centroid_id"),
             F.col("_adc").alias("adc_dist"),
-            rnd(cosine(F.col("_v"), F.col("_qvec")), round_to).alias("cosine"),
+            rnd(cosine(F.col("_v"), F.col("_qvec")), 6).alias("cosine"),
         )
-        .orderBy(F.desc("cosine"), id_col)
+        .orderBy(F.desc("cosine"), "vec_id")
         .limit(k)
     )

@@ -17,16 +17,14 @@ payload (lists) or the key count is tiny.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from project_bigdata_spark.functions import arrays as A
 
 
 def salted_hourly_gold(
     df: DataFrame,
-    entity_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    type_col: str = "event_type",
     buckets: int = 16,
     max_pairs: int | None = None,
     salt_col: str | None = None,
@@ -34,7 +32,8 @@ def salted_hourly_gold(
     """Gold hourly aggregation with a salted first stage.
 
     Semantically identical to ``medallion.gold_hourly``'s core aggregate
-    (max/count + sorted pairs); physically the hot (entity, hour) groups
+    (per ``user_id`` and hour of ``ts``: max/count of ``value`` + sorted
+    ``(event_type, value)`` pairs); physically the hot (entity, hour) groups
     fan out over ``buckets`` partial groups first, so one pathological
     station cannot serialize a reducer.
 
@@ -49,24 +48,20 @@ def salted_hourly_gold(
     the bounded-output contract a 100 TB hot key requires; leave it None
     only when group sizes are known-bounded.
     """
-    hour = F.date_trunc("hour", F.col(ts_col)).alias("hour_ts")
+    hour = F.date_trunc("hour", F.col("ts")).alias("hour_ts")
     # Salt on a row-unique column when one exists: hashing ts alone sends
     # an exact-duplicate burst (same entity, same timestamp — sensor
     # replays, default values) into ONE bucket, silently un-salting the
     # hottest case. Deterministic (hash of data, not rand()) so task
     # retries re-derive identical salts.
-    salt = (F.abs(F.xxhash64(F.col(salt_col or ts_col))) % buckets).alias("_salt")
-    pairs_partial = F.sort_array(
-        F.collect_list(
-            F.struct(F.col(type_col).alias("k"), F.col(value_col).alias("v"))
-        )
-    )
+    salt = (F.abs(F.xxhash64(F.col(salt_col or "ts"))) % buckets).alias("_salt")
+    pairs_partial = A.collect_sorted_pairs(F.col("event_type"), F.col("value"))
     if max_pairs is not None:
         pairs_partial = F.slice(pairs_partial, 1, max_pairs)
     partial = (
-        df.groupBy(F.col(entity_col), hour, salt)
+        df.groupBy(F.col("user_id"), hour, salt)
         .agg(
-            F.max(value_col).alias("_max"),
+            F.max("value").alias("_max"),
             F.count(F.lit(1)).alias("_n"),
             pairs_partial.alias("_pairs"),
         )
@@ -75,14 +70,14 @@ def salted_hourly_gold(
     if max_pairs is not None:
         pairs_merged = F.slice(pairs_merged, 1, max_pairs)
     merged = (
-        partial.groupBy(entity_col, "hour_ts")
+        partial.groupBy("user_id", "hour_ts")
         .agg(
             F.max("_max").alias("max_value"),
             F.sum("_n").alias("n_events"),
             pairs_merged.alias("pairs"),
         )
-        .withColumn("event_types", F.transform("pairs", lambda p: p["k"]))
-        .withColumn("values", F.transform("pairs", lambda p: p["v"]))
+        .withColumn("event_types", A.pairs_keys(F.col("pairs")))
+        .withColumn("values", A.pairs_values(F.col("pairs")))
         .drop("pairs")
     )
     return merged

@@ -18,20 +18,15 @@ from pyspark.sql import functions as F
 STATUSES = ("added", "removed", "changed", "unchanged")
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    digest_col: str = "digest",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Per-id diff status between two snapshot frames.
 
-    Inputs carry ``(id_col, digest_col)`` — build the digest upstream
+    Inputs carry ``(doc_id, digest)`` — build the digest upstream
     (``F.md5(text)``) so only fixed-width keys shuffle, never payloads.
-    Returns ``(id_col, status)`` with status in :data:`STATUSES`.
+    Returns ``(doc_id, status)`` with status in :data:`STATUSES`.
     """
-    o = old.select(F.col(id_col).alias("_id"), F.col(digest_col).alias("_old"))
-    n = new.select(F.col(id_col).alias("_id"), F.col(digest_col).alias("_new"))
+    o = old.select(F.col("doc_id").alias("_id"), F.col("digest").alias("_old"))
+    n = new.select(F.col("doc_id").alias("_id"), F.col("digest").alias("_new"))
     status: Column = (
         F.when(F.col("_old").isNull(), F.lit("added"))
         .when(F.col("_new").isNull(), F.lit("removed"))
@@ -40,22 +35,17 @@ def snapshot_diff(
     )
     return (
         o.join(n, on="_id", how="full_outer")
-        .select(F.col("_id").alias(id_col), status.alias("status"))
+        .select(F.col("_id").alias("doc_id"), status.alias("status"))
     )
 
 
-def snapshot_diff_summary(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    digest_col: str = "digest",
-) -> DataFrame:
+def snapshot_diff_summary(old: DataFrame, new: DataFrame) -> DataFrame:
     """Roll the per-id diff up to ``(status, n_docs)`` — the audit
     headline. A second tiny aggregation over 4 keys; the per-id frame
     stays available for targeted reprocessing of just the changed ids.
     """
     return (
-        snapshot_diff(old, new, id_col, digest_col)
+        snapshot_diff(old, new)
         .groupBy("status")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     )

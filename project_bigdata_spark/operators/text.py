@@ -119,14 +119,14 @@ def lang_scores(text: Column) -> dict[str, Column]:
     }
 
 
-def predict_lang(text: Column, min_score: float = 0.02) -> Column:
+def predict_lang(text: Column) -> Column:
     """Argmax language over profile scores; 'unknown' when nothing clears
-    ``min_score``. Ties break to the lexicographically first language
+    0.02. Ties break to the lexicographically first language
     (deterministic; mirrored in the oracle SQL)."""
     scores = lang_scores(text)
     langs = sorted(scores)  # lexicographic tiebreak via scan order
     best = F.greatest(*[scores[lang] for lang in langs])
-    expr = F.when(best < F.lit(min_score), F.lit("unknown"))
+    expr = F.when(best < F.lit(0.02), F.lit("unknown"))
     for lang in langs:
         expr = expr.when(scores[lang] == best, F.lit(lang))
     return expr.otherwise(F.lit("unknown"))
@@ -183,11 +183,10 @@ def pii_redact(text: Column) -> Column:
     return out
 
 
-def repetition_metrics(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Within-document repetition — the classic low-quality-text signal
-    (boilerplate, keyword stuffing, generator loops):
+def repetition_metrics(df: DataFrame) -> DataFrame:
+    """Within-document repetition of each ``doc_id``'s ``text`` — the
+    classic low-quality-text signal (boilerplate, keyword stuffing,
+    generator loops):
 
     - ``dup_word_ratio``: 1 - distinct/total words;
     - ``top_word_share``: frequency of the most common word / total.
@@ -196,9 +195,9 @@ def repetition_metrics(
     then (doc) — partial aggregation shrinks each level, never an O(n²)
     per-row array scan.
     """
-    w = df.select(F.col(id_col), F.explode(words_col(F.col(text_col))).alias("w"))
-    per_word = w.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("c"))
-    return per_word.groupBy(id_col).agg(
+    w = df.select(F.col("doc_id"), F.explode(words_col(F.col("text"))).alias("w"))
+    per_word = w.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
+    return per_word.groupBy("doc_id").agg(
         F.sum("c").cast("bigint").alias("n_words"),
         F.count(F.lit(1)).cast("bigint").alias("n_distinct_words"),
         (F.lit(1.0) - F.count(F.lit(1)) / F.sum("c")).alias("dup_word_ratio"),
@@ -206,15 +205,10 @@ def repetition_metrics(
     )
 
 
-def pack_documents(
-    df: DataFrame,
-    budget: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shards: int = 64,
-) -> DataFrame:
-    """Sequence packing for LLM training: assign documents to token-budget
-    bins (training sequences) with a deterministic greedy fill.
+def pack_documents(df: DataFrame, budget: int, shards: int = 64) -> DataFrame:
+    """Sequence packing for LLM training: assign documents (``doc_id``,
+    ``text``) to token-budget bins (training sequences) with a
+    deterministic greedy fill.
 
     Packing is inherently sequential, so a global order would serialize
     on one partition; instead docs are sharded (``id % shards`` — the
@@ -223,16 +217,16 @@ def pack_documents(
     ``bin = floor((cumsum - n_tokens) / budget)``. Each shard's window is
     one partition of work; shards scale out.
     """
-    toks = F.size(words_col(F.col(text_col))).cast("bigint")
-    shard = (F.col(id_col) % shards).alias("shard")
+    toks = F.size(words_col(F.col("text"))).cast("bigint")
+    shard = (F.col("doc_id") % shards).alias("shard")
     w = (
         Window.partitionBy("shard")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    out = df.select(F.col(id_col), shard, toks.alias("n_tokens"))
+    out = df.select(F.col("doc_id"), shard, toks.alias("n_tokens"))
     return out.select(
-        id_col,
+        "doc_id",
         "shard",
         "n_tokens",
         F.floor(
@@ -245,83 +239,41 @@ CHUNK_TOKENS = 50
 CHUNK_OVERLAP = 10
 
 
-def chunk_documents(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = CHUNK_TOKENS,
-    overlap: int = CHUNK_OVERLAP,
-) -> DataFrame:
-    """Split documents into overlapping token-window chunks — the unit of
-    work an embedding pipeline feeds to the encoder.
+def chunk_documents_with_text(df: DataFrame) -> DataFrame:
+    """Split each ``doc_id``'s ``text`` into overlapping token-window
+    chunks — the unit of work an embedding pipeline feeds to the encoder
+    — with each chunk's text and token count.
 
-    Chunk ``i`` covers tokens ``[1 + i*stride, i*stride + chunk_tokens]``
-    (1-based, ``stride = chunk_tokens - overlap``); the last chunk starts
-    at the final stride boundary at or before ``n - overlap`` so every
-    token lands in >= 1 chunk and no empty tail chunk is emitted.
+    Chunk ``i`` covers tokens ``[1 + i*stride, i*stride + CHUNK_TOKENS]``
+    (1-based, ``stride = CHUNK_TOKENS - CHUNK_OVERLAP``); the last chunk
+    starts at the final stride boundary at or before
+    ``n - CHUNK_OVERLAP`` so every token lands in >= 1 chunk and no empty
+    tail chunk is emitted.
 
     Entirely JVM-side: ``sequence`` builds the start offsets,
     ``posexplode`` fans out, ``slice`` + ``array_join`` materialize each
     chunk — a narrow pass (no UDF, no shuffle) whose output is
     ~``1/stride`` rows per token, ready for `mapInPandas` encoding.
     """
-    stride = chunk_tokens - overlap
-    if stride <= 0:
-        raise ValueError("chunk_tokens must exceed overlap")
-    toks = words_col(F.col(text_col))
+    toks = words_col(F.col("text"))
     starts = F.sequence(
         F.lit(1),
-        F.greatest(F.col("n_tokens") - overlap, F.lit(1)),
-        F.lit(stride),
+        F.greatest(F.col("n_tokens") - CHUNK_OVERLAP, F.lit(1)),
+        F.lit(CHUNK_TOKENS - CHUNK_OVERLAP),
     )
-    return (
-        df.select(F.col(id_col), F.size(toks).alias("n_tokens"))
-        .select(
-            F.col(id_col),
-            "n_tokens",
-            F.posexplode(starts).alias("chunk_id", "_start"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("chunk_id").cast("bigint").alias("chunk_id"),
-            F.col("n_tokens").cast("bigint").alias("n_tokens"),
-            F.col("_start").cast("bigint").alias("start_token"),
-        )
-    )
-
-
-def chunk_documents_with_text(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = CHUNK_TOKENS,
-    overlap: int = CHUNK_OVERLAP,
-) -> DataFrame:
-    """:func:`chunk_documents` plus the chunk text itself and its token
-    count (separate entry point so offset-only consumers skip carrying
-    the token array through the explode)."""
-    stride = chunk_tokens - overlap
-    if stride <= 0:
-        raise ValueError("chunk_tokens must exceed overlap")
-    toks = words_col(F.col(text_col))
-    starts = F.sequence(
-        F.lit(1),
-        F.greatest(F.col("n_tokens") - overlap, F.lit(1)),
-        F.lit(stride),
-    )
-    chunk = F.slice(F.col("_toks"), F.col("_start"), chunk_tokens)
+    chunk = F.slice(F.col("_toks"), F.col("_start"), CHUNK_TOKENS)
     return (
         df.select(
-            F.col(id_col), toks.alias("_toks"), F.size(toks).alias("n_tokens")
+            F.col("doc_id"), toks.alias("_toks"), F.size(toks).alias("n_tokens")
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "n_tokens",
             "_toks",
             F.posexplode(starts).alias("chunk_id", "_start"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("chunk_id").cast("bigint").alias("chunk_id"),
             F.col("n_tokens").cast("bigint").alias("n_tokens"),
             F.col("_start").cast("bigint").alias("start_token"),
@@ -331,14 +283,13 @@ def chunk_documents_with_text(
     )
 
 
-def unigram_vocab_row(
-    df: DataFrame, text_col: str = "text", vocab_size: int = 4096
-) -> DataFrame:
+def unigram_vocab_row(df: DataFrame, vocab_size: int = 4096) -> DataFrame:
     """ONE-row frame ``(_vmap: map<token,count>, _total: double)`` — the
-    corpus unigram model, capped to the ``vocab_size`` most frequent
-    tokens (ties broken lexicographically so the cutoff replays across
-    engines). ``_total`` counts ALL token occurrences (pre-cap), so
-    out-of-vocab mass is still normalized correctly.
+    corpus unigram model of the ``text`` column, capped to the
+    ``vocab_size`` most frequent tokens (ties broken lexicographically so
+    the cutoff replays across engines). ``_total`` counts ALL token
+    occurrences (pre-cap), so out-of-vocab mass is still normalized
+    correctly.
 
     Scale shape: one token-keyed shuffle builds the counts; the top-K is
     a TakeOrdered (per-partition top-K + merge, never a global sort);
@@ -347,7 +298,7 @@ def unigram_vocab_row(
     because the map and the total both consume it.
     """
     counts = (
-        df.select(F.explode(words_col(F.col(text_col))).alias("token"))
+        df.select(F.explode(words_col(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .persist()
@@ -376,17 +327,12 @@ def _vocab_table(vocab_row: DataFrame, map_col: str, key_name: str) -> DataFrame
     )
 
 
-def unigram_logprob_scores(
-    df: DataFrame,
-    vocab_row: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    oov_count: float = 0.5,
-) -> DataFrame:
+def unigram_logprob_scores(df: DataFrame, vocab_row: DataFrame) -> DataFrame:
     """CCNet-style language-model quality proxy: the mean unigram
-    log-probability of each document under the corpus unigram model
-    (low = gibberish / OOV-heavy; the standard pre-training quality
-    filter alongside heuristic scores).
+    log-probability of each ``doc_id``'s ``text`` under the corpus
+    unigram model (low = gibberish / OOV-heavy; the standard pre-training
+    quality filter alongside heuristic scores). An out-of-vocab token
+    counts 0.5.
 
     Lookup shape matters at corpus scale: ``element_at`` on a Spark MAP
     is a LINEAR scan, so folding over tokens against the vocab map costs
@@ -397,22 +343,22 @@ def unigram_logprob_scores(
     explode preserves row locality, that is ~one row per doc total.
     """
     toks = df.select(
-        F.col(id_col), F.explode(words_col(F.col(text_col))).alias("_tok")
+        F.col("doc_id"), F.explode(words_col(F.col("text"))).alias("_tok")
     )
     vt = _vocab_table(vocab_row, "_vmap", "_tok")
     per_doc = (
         toks.join(F.broadcast(vt), on="_tok", how="left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.avg(
-                F.log(F.coalesce(F.col("_cnt__tok"), F.lit(oov_count)))
+                F.log(F.coalesce(F.col("_cnt__tok"), F.lit(0.5)))
             ).alias("_avg_ln")
         )
     )
     return per_doc.crossJoin(
         F.broadcast(vocab_row.select("_total"))
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         (F.col("_avg_ln") - F.log(F.col("_total"))).alias("lm_logprob"),
     )
 
@@ -604,16 +550,14 @@ def repeated_ngram_spans(
     )
 
 
-def bigram_vocab_row(
-    df: DataFrame, text_col: str = "text", vocab_size: int = 8192
-) -> DataFrame:
+def bigram_vocab_row(df: DataFrame, vocab_size: int = 8192) -> DataFrame:
     """ONE-row frame ``(_bmap: map<'w1 w2', count>)`` — the corpus bigram
-    table, capped to the ``vocab_size`` most frequent bigrams (ties
-    lexicographic, same determinism rule as :func:`unigram_vocab_row`).
-    Same scale shape: one bigram-keyed shuffle, TakeOrdered cap, one
-    broadcastable map row.
+    table of the ``text`` column, capped to the ``vocab_size`` most
+    frequent bigrams (ties lexicographic, same determinism rule as
+    :func:`unigram_vocab_row`). Same scale shape: one bigram-keyed
+    shuffle, TakeOrdered cap, one broadcastable map row.
     """
-    ws = words_col(F.col(text_col))
+    ws = words_col(F.col("text"))
     grams = F.transform(
         F.sequence(F.lit(2), F.size("_ws")),
         lambda i: F.concat_ws(
@@ -639,20 +583,14 @@ def bigram_vocab_row(
 
 
 def bigram_logprob_scores(
-    df: DataFrame,
-    bigram_row: DataFrame,
-    unigram_row: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    oov_count: float = 0.5,
-    backoff: float = 0.4,
+    df: DataFrame, bigram_row: DataFrame, unigram_row: DataFrame
 ) -> DataFrame:
-    """Conditional bigram LM quality proxy with stupid-backoff: per
-    adjacent word pair, ``ln P(w2|w1)`` where an in-vocab bigram scores
-    ``c(w1 w2)/c(w1)`` and an out-of-vocab one backs off to
-    ``backoff * c(w2)/total`` (unigram mass; OOV unigrams count
-    ``oov_count``). Sharper than the unigram proxy at catching shuffled
-    or templated text whose word *set* looks fine but whose transitions
+    """Conditional bigram LM quality proxy of each ``doc_id``'s ``text``
+    with stupid-backoff: per adjacent word pair, ``ln P(w2|w1)`` where an
+    in-vocab bigram scores ``c(w1 w2)/c(w1)`` and an out-of-vocab one
+    backs off to ``0.4 * c(w2)/total`` (unigram mass; OOV unigrams count
+    0.5). Sharper than the unigram proxy at catching shuffled or
+    templated text whose word *set* looks fine but whose transitions
     don't.
 
     Same execution shape as :func:`unigram_logprob_scores` — and for the
@@ -662,12 +600,12 @@ def bigram_logprob_scores(
     unigram-of-w2), re-aggregate per doc; the exchange carries ~one
     partial-agg row per doc.
     """
-    ws = words_col(F.col(text_col))
+    ws = words_col(F.col("text"))
     pairs = (
-        df.select(F.col(id_col), ws.alias("_toks"))
+        df.select(F.col("doc_id"), ws.alias("_toks"))
         .filter(F.size("_toks") >= 2)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.transform(
                     F.sequence(F.lit(2), F.size("_toks")),
@@ -679,7 +617,7 @@ def bigram_logprob_scores(
             ).alias("_p"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("_p.w1").alias("_w1"),
             F.col("_p.w2").alias("_w2"),
             F.concat_ws(" ", "_p.w1", "_p.w2").alias("_bg"),
@@ -697,70 +635,62 @@ def bigram_logprob_scores(
     ln_p = F.log(
         F.coalesce(
             F.col("_cnt__bg")
-            / F.coalesce(F.col("_cnt__w1"), F.lit(oov_count)),
-            F.lit(backoff)
-            * F.coalesce(F.col("_cnt__w2"), F.lit(oov_count))
+            / F.coalesce(F.col("_cnt__w1"), F.lit(0.5)),
+            F.lit(0.4)
+            * F.coalesce(F.col("_cnt__w2"), F.lit(0.5))
             / F.col("_total"),
         )
     )
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("doc_id").agg(
         F.avg(ln_p).alias("bigram_logprob")
     )
 
 
 # --------------------------------------------------------------------------
 # Corpus retrieval surface: TF-IDF keyword extraction, an inverted index,
-# and BM25 ranking. These are the lexical-retrieval counterparts of the
-# embedding ANN path (operators/similarity.py) — a curation pipeline uses
-# them for keyword-based corpus slicing and query-driven subset export.
+# and BM25 ranking over the ``doc_id``/``text`` columns. These are the
+# lexical-retrieval counterparts of the embedding ANN path
+# (operators/similarity.py) — a curation pipeline uses them for
+# keyword-based corpus slicing and query-driven subset export.
 # Scale shape: everything is explode -> partial-agg -> small-key shuffle on
 # (doc, term) or term; document payloads never shuffle, and corpus-level
 # scalars (N, avg doclen) travel as one broadcast row.
 
 
-def term_freqs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc, term, tf) from whitespace tokens — map-side combine applies
-    because the groupBy keys are a superset of the explode's input row."""
-    w = df.select(F.col(id_col), F.explode(words_col(F.col(text_col))).alias("term"))
-    return w.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+def term_freqs(df: DataFrame) -> DataFrame:
+    """(doc_id, term, tf) from whitespace tokens of ``text`` — map-side
+    combine applies because the groupBy keys are a superset of the
+    explode's input row."""
+    w = df.select(F.col("doc_id"), F.explode(words_col(F.col("text"))).alias("term"))
+    return w.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
 
 
-def inverted_index_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def inverted_index_stats(df: DataFrame) -> DataFrame:
     """Posting-list statistics per term: document frequency, total term
     frequency, and the doc-id span. The full posting list (sorted doc ids)
     is a per-term ``collect_list`` away, but an unbounded list column is a
     skew hazard at corpus scale — cap or bucket it; the stats here are
     fixed-width per term regardless of corpus size."""
-    tf = term_freqs(df, id_col, text_col)
+    tf = term_freqs(df)
     return tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("tf").cast("bigint").alias("total_tf"),
-        F.min(id_col).cast("bigint").alias("min_doc"),
-        F.max(id_col).cast("bigint").alias("max_doc"),
+        F.min("doc_id").cast("bigint").alias("min_doc"),
+        F.max("doc_id").cast("bigint").alias("max_doc"),
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    rnd=F.round,
-    round_to: int = 6,
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3, rnd=F.round) -> DataFrame:
     """Top-k characteristic terms per document by smoothed TF-IDF
-    (``tf * ln((N+1)/(df+1))``), rank ties broken lexicographically.
+    (``tf * ln((N+1)/(df+1))``, rounded to 6 places), rank ties broken
+    lexicographically.
 
     The doc-frequency side aggregates to ~vocab rows, then re-joins the
     (doc, term, tf) frame on ``term`` — at web-corpus vocab sizes that
     join side is MBs, so Spark broadcasts it; the corpus count rides in
     one literal-sized row. The rank filter becomes a WindowGroupLimit.
     """
-    tf = term_freqs(df, id_col, text_col)
+    tf = term_freqs(df)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     ndocs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -771,16 +701,16 @@ def tfidf_top_terms(
             rnd(
                 F.col("tf")
                 * F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)),
-                round_to,
+                6,
             ),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("term"),
             F.col("tf").cast("bigint").alias("tf"),
             F.col("score"),
@@ -793,25 +723,21 @@ def bm25_topk(
     df: DataFrame,
     query_terms: "list[str] | DataFrame",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     rnd=F.round,
-    round_to: int = 6,
 ) -> DataFrame:
     """BM25 ranking of documents against a bag of query terms.
 
     ``score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·len_d/avglen))``
-    with ``idf = ln(1 + (N−df+0.5)/(df+0.5))``. Per-term contributions are
-    rounded then summed as DECIMAL so the cross-engine result is exact
-    regardless of aggregation order. Only rows matching a query term
-    survive the first filter — the exploded frame collapses to
+    with ``k1 = 1.2``, ``b = 0.75`` and
+    ``idf = ln(1 + (N−df+0.5)/(df+0.5))``. Per-term contributions are
+    rounded to 6 places then summed as DECIMAL so the cross-engine result
+    is exact regardless of aggregation order. Only rows matching a query
+    term survive the first filter — the exploded frame collapses to
     |query| × df rows before any shuffle; corpus stats (N, avg doclen)
     are one broadcast row.
     """
     lens = df.select(
-        F.col(id_col), F.size(words_col(F.col(text_col))).alias("dl")
+        F.col("doc_id"), F.size(words_col(F.col("text"))).alias("dl")
     )
     stats = F.broadcast(
         lens.agg(
@@ -819,7 +745,7 @@ def bm25_topk(
             F.sum("dl").alias("total_len"),
         )
     )
-    tf = term_freqs(df, id_col, text_col)
+    tf = term_freqs(df)
     if isinstance(query_terms, DataFrame):
         # data-dependent term set (e.g. pseudo-relevance expansion):
         # broadcast semi-join instead of an IN literal
@@ -834,56 +760,49 @@ def bm25_topk(
         + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
     avgdl = F.col("total_len").cast("double") / F.col("n_docs")
-    tfnorm = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl)
+    tfnorm = (F.col("tf") * (1.2 + 1.0)) / (
+        F.col("tf") + 1.2 * (1.0 - 0.75 + 0.75 * F.col("dl") / avgdl)
     )
-    contrib = rnd(idf * tfnorm, round_to).cast("decimal(18,6)")
+    contrib = rnd(idf * tfnorm, 6).cast("decimal(18,6)")
     scored = (
         tf.join(F.broadcast(dfreq), "term")
-        .join(lens, id_col)
+        .join(lens, "doc_id")
         .crossJoin(stats)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum(contrib).cast("double").alias("bm25"),
             F.count(F.lit(1)).cast("bigint").alias("n_terms_hit"),
         )
     )
-    return scored.orderBy(F.desc("bm25"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
 
 
-def rrf_fuse(
-    ranked: list[DataFrame],
-    id_col: str = "doc_id",
-    k0: int = 60,
-    rank_col: str = "rank",
-    out_col: str = "rrf",
-    rnd=F.round,
-    round_to: int = 6,
-) -> DataFrame:
-    """Reciprocal Rank Fusion: merge N ranked lists into one score,
-    ``sum over lists of 1 / (k0 + rank)`` (Cormack et al.'s k0=60) — the
-    standard hybrid-retrieval combiner (BM25 + dense) because it needs
-    no score calibration, only ranks. Documents absent from a list
-    contribute nothing. Each term is rounded then summed as DECIMAL so
-    the fusion is engine- and order-neutral.
+def rrf_fuse(ranked: list[DataFrame], rnd=F.round) -> DataFrame:
+    """Reciprocal Rank Fusion: merge N ranked ``(doc_id, rank)`` lists
+    into one ``rrf`` score, ``sum over lists of 1 / (60 + rank)``
+    (Cormack et al.'s k0=60) — the standard hybrid-retrieval combiner
+    (BM25 + dense) because it needs no score calibration, only ranks.
+    Documents absent from a list contribute nothing. Each term is rounded
+    to 6 places then summed as DECIMAL so the fusion is engine- and
+    order-neutral.
 
     Inputs are small top-k frames (already cut), so the full-outer
     fusion join is a few-row broadcast, never a corpus shuffle.
     """
     fused = None
     for i, r in enumerate(ranked):
-        c = r.select(F.col(id_col), F.col(rank_col).alias(f"_r{i}"))
-        fused = c if fused is None else fused.join(c, id_col, "full_outer")
+        c = r.select(F.col("doc_id"), F.col("rank").alias(f"_r{i}"))
+        fused = c if fused is None else fused.join(c, "doc_id", "full_outer")
     score = None
     for i in range(len(ranked)):
         term = F.coalesce(
-            rnd(
-                F.lit(1.0) / (F.lit(float(k0)) + F.col(f"_r{i}")), round_to
-            ).cast("decimal(18,6)"),
+            rnd(F.lit(1.0) / (F.lit(60.0) + F.col(f"_r{i}")), 6).cast(
+                "decimal(18,6)"
+            ),
             F.lit(0).cast("decimal(18,6)"),
         )
         score = term if score is None else score + term
-    return fused.withColumn(out_col, score.cast("double"))
+    return fused.withColumn("rrf", score.cast("double"))
 
 
 def prf_expand_terms(
@@ -892,10 +811,7 @@ def prf_expand_terms(
     n_feedback: int = 5,
     n_expansion: int = 2,
     min_len: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     rnd=F.round,
-    round_to: int = 6,
 ) -> DataFrame:
     """Pseudo-relevance feedback (RM3-lite): expand a keyword query with
     the ``n_expansion`` highest-TF-IDF terms of the seed query's BM25
@@ -910,15 +826,12 @@ def prf_expand_terms(
     ``n_feedback`` ids (broadcast); the only wide work is the same
     vocab aggregation tfidf_top_terms already does.
     """
-    feedback = bm25_topk(
-        df, seed_terms, k=n_feedback, id_col=id_col, text_col=text_col,
-        rnd=rnd, round_to=round_to,
-    ).select(id_col)
-    tf = term_freqs(df, id_col, text_col)
+    feedback = bm25_topk(df, seed_terms, k=n_feedback, rnd=rnd).select("doc_id")
+    tf = term_freqs(df)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     ndocs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     weights = (
-        tf.join(F.broadcast(feedback), id_col)
+        tf.join(F.broadcast(feedback), "doc_id")
         .join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(ndocs))
         .filter(
@@ -930,7 +843,7 @@ def prf_expand_terms(
                 rnd(
                     F.col("tf")
                     * F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)),
-                    round_to,
+                    6,
                 ).cast("decimal(18,6)")
             )
             .cast("double")

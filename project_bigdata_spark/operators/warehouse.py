@@ -41,11 +41,11 @@ def ewma_col(
     order_by: list[str] | None = None,
     rows: int = 24,
     alpha: float = 0.9,
-    out: str | None = None,
 ) -> DataFrame:
     """Exponentially-weighted moving average over the last ``rows`` rows
-    per entity: ``sum(x_j * alpha^age_j) / sum(alpha^age_j)`` with
-    ``age = 0`` for the current row.
+    per entity, as column ``<value_col>_ewma_<rows>``:
+    ``sum(x_j * alpha^age_j) / sum(alpha^age_j)`` with ``age = 0`` for
+    the current row.
 
     Pandas' ``ewm(alpha=1-alpha, min_periods=1).mean()`` on a bounded
     history, expressed as collect-over-frame + JVM higher-order fold —
@@ -54,7 +54,7 @@ def ewma_col(
     DuckDB oracle uses ``list_reduce``) is bit-identical.
     """
     order_by = order_by or ["ts", "event_id"]
-    out = out or f"{value_col}_ewma_{rows}"
+    out = f"{value_col}_ewma_{rows}"
     w = (
         Window.partitionBy(entity_col)
         .orderBy(*[F.col(c) for c in order_by])
@@ -151,15 +151,13 @@ def cdc_latest(
     changelog: DataFrame,
     key: str = "user_id",
     order_by: list[str] | None = None,
-    op_col: str = "op",
-    delete_op: str = "D",
 ) -> DataFrame:
     """Latest-wins CDC compaction: reduce a change stream to final state.
 
     Per key, take the single most recent record (ties broken by the full
     ``order_by`` list, which must be a total order — e.g. ``[ts,
-    event_id]``); if that record is a delete, the key is absent from the
-    output. The delete filter runs AFTER the head-pick so a trailing
+    event_id]``); if that record is a delete (``op = 'D'``), the key is
+    absent from the output. The delete filter runs AFTER the head-pick so a trailing
     delete erases earlier upserts, and a post-delete re-insert
     resurrects the key — exact Debezium/Delta ``MERGE`` semantics.
     """
@@ -171,7 +169,7 @@ def cdc_latest(
         changelog.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
-        .where(F.col(op_col) != delete_op)
+        .where(F.col("op") != "D")
     )
 
 

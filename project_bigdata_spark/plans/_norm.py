@@ -118,13 +118,6 @@ def sql_sum_cents2(expr: str) -> str:
     return f"(CAST(sum({sql_cents(expr)}) AS DOUBLE) / 100)"
 
 
-def sum_cents(col: Column | str) -> Column:
-    """Raw exact cents sum (DECIMAL(38,0)) for integer-grid comparisons
-    (e.g. ``HAVING sum(qty) > 150`` becomes ``sum_cents > 15000``) —
-    compare against cents-scaled literals. Mirror: ``sum(sql_cents(x))``."""
-    return F.sum(cents(col).cast("decimal(38,0)"))
-
-
 def sum_rev2(price: Column | str, disc: Column | str) -> Column:
     """Exact TPC-H revenue sum ``Σ price*(1-disc)`` over 2-decimal
     doubles, rendered DOUBLE: integer units of 1e-4

@@ -1062,12 +1062,12 @@ _LOGIT_LR = 10.0
 _LOGIT_DIMS = 4
 
 
-def _logit_margin(dims: int = _LOGIT_DIMS) -> str:
+def _logit_margin() -> str:
     """Margin w.x as an engine-neutral string over the integer-grid
     columns (weights on the 1e-9 grid, features on the 1e-6 grid) —
     identical parenthesization on both engines."""
     terms = ["(b9 / 1e9)"] + [
-        f"((w{j}_9 / 1e9) * (x{j}_6 / 1e6))" for j in range(1, dims + 1)
+        f"((w{j}_9 / 1e9) * (x{j}_6 / 1e6))" for j in range(1, _LOGIT_DIMS + 1)
     ]
     return "(" + " + ".join(terms) + ")"
 
@@ -1971,9 +1971,9 @@ _SVM_LAM = 0.1   # L2 strength; weights decay by (1 - lr*lam) per step
 _SVM_DIMS = 4
 
 
-def _svm_margin(dims: int = _SVM_DIMS) -> str:
+def _svm_margin() -> str:
     terms = ["(b9 / 1e9)"] + [
-        f"((w{j}_9 / 1e9) * (x{j}_6 / 1e6))" for j in range(1, dims + 1)
+        f"((w{j}_9 / 1e9) * (x{j}_6 / 1e6))" for j in range(1, _SVM_DIMS + 1)
     ]
     return "(" + " + ".join(terms) + ")"
 

@@ -677,14 +677,14 @@ _PQ_SUBDIM = 16
 
 _L2SQ_SLICE_SQL = (
     "list_sum(list_transform(list_zip("
-    "list_slice(CAST({a} AS DOUBLE[]), {m}*16+1, {m}*16+16), "
-    "list_slice(CAST({b} AS DOUBLE[]), {m}*16+1, {m}*16+16)), "
+    "list_slice(CAST({a} AS DOUBLE[]), s.m*16+1, s.m*16+16), "
+    "list_slice(CAST({b} AS DOUBLE[]), s.m*16+1, s.m*16+16)), "
     "p -> (p[1]-p[2])*(p[1]-p[2])))"
 )
 
 
-def _l2sq_slice_sql(a: str, b: str, m: str = "s.m") -> str:
-    return _L2SQ_SLICE_SQL.format(a=a, b=b, m=m)
+def _l2sq_slice_sql(a: str, b: str) -> str:
+    return _L2SQ_SLICE_SQL.format(a=a, b=b)
 
 
 @query(

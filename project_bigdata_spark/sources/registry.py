@@ -187,24 +187,6 @@ def _micros_from_nanos(ts_col: str) -> Column:
     return F.timestamp_micros(F.expr(f"{ts_col} div 1000"))
 
 
-def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Coerce ``ts_col`` to TimestampType regardless of parquet encoding:
-
-    - TIMESTAMP(NANOS) surfaced as bigint (``nanosAsLong``) -> integer
-      ``div 1000`` to µs (double division loses precision above 2^53 ns).
-    - ``timestamp_ntz`` (µs-no-tz parquet read before the inferTimestampNTZ
-      conf landed, e.g. a frame cached by a caller) -> plain cast; session
-      tz is pinned UTC so the cast is value-preserving.
-    - TimestampType -> passthrough.
-    """
-    dtype = dict(df.dtypes).get(ts_col)
-    if dtype == "bigint":
-        df = df.withColumn(ts_col, _micros_from_nanos(ts_col))
-    elif dtype == "timestamp_ntz":
-        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return df
-
-
 def read_events(spark: SparkSession, path: str) -> DataFrame:
     """Events parquet at any ``path`` (a file, or a directory of part
     files), for jobs and the CLI: read like :func:`load_table`'s
@@ -215,9 +197,9 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
 
 
 def write_partitioned_parquet(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
+    df: DataFrame, path: str, partition_cols: list[str]
 ) -> None:
-    """Partitioned parquet sink (S7).
+    """Partitioned parquet sink (S7), overwrite mode.
 
     With ``spark.sql.sources.partitionOverwriteMode=dynamic`` (asserted
     here so a caller-provided vanilla session can't run STATIC and wipe
@@ -226,12 +208,13 @@ def write_partitioned_parquet(
     leaf, not the whole table.
     """
     ensure_runtime_confs(df.sparkSession)
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """CSV export (S10; reference: ``clickhouse_queries.sql:167-183``)."""
-    df.write.mode(mode).option("header", True).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """CSV export with a header, replacing ``path`` (S10; reference:
+    ``clickhouse_queries.sql:167-183``)."""
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
 def kafka_sink_frame(df: DataFrame) -> DataFrame:
@@ -315,14 +298,9 @@ def read_kafka_stream(
     return reader.load()
 
 
-def write_olap_table(
-    df: DataFrame,
-    name: str,
-    string_fill: str = "",
-    numeric_fill: float = 0.0,
-    mode: str = "overwrite",
-) -> None:
-    """S9: OLAP-serving sink with non-nullable-column fill semantics.
+def write_olap_table(df: DataFrame, name: str) -> None:
+    """S9: OLAP-serving sink (overwrites table ``name``) with
+    non-nullable-column fill semantics.
 
     The reference exports parquet to ClickHouse through a pandas loader
     that fills NULLs per MergeTree's non-nullable columns — strings to '',
@@ -331,25 +309,25 @@ def write_olap_table(
     store" is a saved Spark table on columnar parquet — same engine, no
     export hop.
     """
-    filled = df.na.fill(string_fill).na.fill(numeric_fill)
+    filled = df.na.fill("").na.fill(0.0)
     for col, dtype in filled.dtypes:
         if dtype.startswith("array"):
             filled = filled.withColumn(
                 col, F.coalesce(F.col(col), F.array().cast(dtype))
             )
-    filled.write.mode(mode).format("parquet").saveAsTable(name)
+    filled.write.mode("overwrite").format("parquet").saveAsTable(name)
 
 
 def write_bucketed_table(
-    df: DataFrame, name: str, bucket_col: str, n_buckets: int = 8,
-    mode: str = "overwrite",
+    df: DataFrame, name: str, bucket_col: str, n_buckets: int = 8
 ) -> None:
-    """Bucketed managed table: pre-shuffled storage layout so later joins
-    and aggregations on ``bucket_col`` are exchange-free — the storage-side
-    co-location strategy for repeated big-big joins at scale.
+    """Bucketed managed table (overwritten): pre-shuffled storage layout
+    so later joins and aggregations on ``bucket_col`` are exchange-free —
+    the storage-side co-location strategy for repeated big-big joins at
+    scale.
     """
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .bucketBy(n_buckets, bucket_col)
         .sortBy(bucket_col)
         .format("parquet")
@@ -362,12 +340,12 @@ def write_clustered_parquet(
     path: str,
     cluster_cols: list[str],
     n_files: int = 8,
-    mode: str = "overwrite",
 ) -> None:
-    """Range-clustered parquet layout: ``repartitionByRange`` assigns
-    disjoint key ranges to files, ``sortWithinPartitions`` orders rows
-    inside each, so every file and row group carries tight, mostly
-    non-overlapping min/max footer stats on ``cluster_cols``.
+    """Range-clustered parquet layout, replacing ``path``:
+    ``repartitionByRange`` assigns disjoint key ranges to files,
+    ``sortWithinPartitions`` orders rows inside each, so every file and
+    row group carries tight, mostly non-overlapping min/max footer stats
+    on ``cluster_cols``.
 
     That is what makes predicate pushdown *skip* at scale: a selective
     range filter on the cluster key touches ~1/``n_files`` of a table
@@ -378,7 +356,7 @@ def write_clustered_parquet(
     (
         df.repartitionByRange(n_files, *cluster_cols)
         .sortWithinPartitions(*cluster_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -400,10 +378,7 @@ def table_bytes(spark: SparkSession, path: str) -> int:
 
 
 def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-    cluster_cols: list[str] | None = None,
+    spark: SparkSession, path: str, target_file_bytes: int = 128 << 20
 ) -> int:
     """Small-file compaction: rewrite a parquet directory into
     ``ceil(bytes / target_file_bytes)`` right-sized files; returns the new
@@ -412,10 +387,8 @@ def compact_parquet(
     Streaming appends and per-epoch upserts fragment a table into
     thousands of small files, and at 100 TB scan cost becomes dominated
     by file-open/footer overhead and tiny row groups. Periodic bin-
-    packing to ~128 MB (HDFS-block-ish) restores scan efficiency. With
-    ``cluster_cols`` the rewrite also range-clusters (see
-    :func:`write_clustered_parquet`), so compaction doubles as layout
-    maintenance. The rewrite lands in a sibling temp dir first and is
+    packing to ~128 MB (HDFS-block-ish) restores scan efficiency. The
+    rewrite lands in a sibling temp dir first and is
     swapped in with two FileSystem renames — readers never observe a
     half-written table (rename is atomic per directory on HDFS-like
     stores; on S3A use a committer-backed overwrite instead).
@@ -435,15 +408,7 @@ def compact_parquet(
     for stale in (p_tmp, p_old):
         if fs.exists(stale):
             fs.delete(stale, True)
-    if cluster_cols:
-        (
-            df.repartitionByRange(n, *[F.col(c) for c in cluster_cols])
-            .sortWithinPartitions(*cluster_cols)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-    else:
-        df.repartition(n).write.mode("overwrite").parquet(tmp)
+    df.repartition(n).write.mode("overwrite").parquet(tmp)
     if not fs.rename(p, p_old):
         raise IOError(f"compaction swap failed: cannot move {path} aside")
     if not fs.rename(p_tmp, p):

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from project_bigdata_spark.functions import arrays as A
 from project_bigdata_spark.operators import medallion as M
 from project_bigdata_spark.sources.registry import SCHEMAS
 
@@ -65,7 +66,7 @@ def silver_stream(bronze_df: DataFrame) -> DataFrame:
     return M.silver(bronze_df.drop("processed_at"))
 
 
-def gold_stream(silver_df: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def gold_stream(silver_df: DataFrame) -> DataFrame:
     """T1+T2: watermarked tumbling-hour aggregation in append mode.
 
     A 1-hour tumbling ``window()`` ≡ the reference's ``date_trunc('hour')``
@@ -76,7 +77,7 @@ def gold_stream(silver_df: DataFrame, watermark: str = "1 hour") -> DataFrame:
     point append mode emits it exactly once.
     """
     return (
-        silver_df.withWatermark("ts", watermark)
+        silver_df.withWatermark("ts", "1 hour")
         .groupBy(
             F.col("user_id"),
             F.window(F.col("ts"), "1 hour").alias("_w"),
@@ -84,13 +85,12 @@ def gold_stream(silver_df: DataFrame, watermark: str = "1 hour") -> DataFrame:
         .agg(
             F.max("value").alias("max_value"),
             F.count(F.lit(1)).alias("n_events"),
-            F.sort_array(
-                F.collect_list(F.struct(F.col("event_type").alias("k"),
-                                        F.col("value").alias("v")))
-            ).alias("pairs"),
+            A.collect_sorted_pairs(F.col("event_type"), F.col("value")).alias(
+                "pairs"
+            ),
         )
-        .withColumn("event_types", F.transform("pairs", lambda p: p["k"]))
-        .withColumn("values", F.transform("pairs", lambda p: p["v"]))
+        .withColumn("event_types", A.pairs_keys(F.col("pairs")))
+        .withColumn("values", A.pairs_values(F.col("pairs")))
         .withColumn("hour_ts", F.col("_w.start"))
         .drop("pairs", "_w")
     )
@@ -101,11 +101,10 @@ def start_multi_sink(
     out_dir: str,
     trigger_secs: int = 10,
     gold_trigger_secs: int = 60,
-    fmt: str = "parquet",
 ) -> list[StreamingQuery]:
     """T3-T6: three concurrent queries off one parsed stream, each with its
     own checkpoint and processing-time trigger (10 s / 10 s / 60 s cadence
-    like the reference)."""
+    like the reference), each a parquet sink."""
     parsed = parse_stream(raw)
     b, s = bronze_stream(parsed), silver_stream(bronze_stream(parsed))
     g = gold_stream(silver_stream(bronze_stream(parsed)))
@@ -116,7 +115,7 @@ def start_multi_sink(
         ("gold", g, "append", gold_trigger_secs),
     ]:
         queries.append(
-            df.writeStream.format(fmt)
+            df.writeStream.format("parquet")
             .outputMode(mode)
             .option("path", f"{out_dir}/{name}")
             .option("checkpointLocation", f"{out_dir}/_chk/{name}")
@@ -189,14 +188,12 @@ def _run_concurrently(spark: SparkSession, calls: list[Callable[[], None]]) -> N
         future.result()
 
 
-def session_stream(
-    parsed: DataFrame, gap: str = "15 minutes", watermark: str = "1 hour"
-) -> DataFrame:
+def session_stream(parsed: DataFrame, gap: str = "15 minutes") -> DataFrame:
     """Streaming sessionization with dynamic-gap session windows.
 
     ``session_window`` merges consecutive events per user that arrive
-    < ``gap`` apart into one growing window; the watermark closes a
-    session once event time passes its end + watermark, at which point
+    < ``gap`` apart into one growing window; the 1-hour watermark closes a
+    session once event time passes its end + 1 hour, at which point
     append mode emits it exactly once. The streaming face of the batch
     ``sessionize_events`` query (which uses the lag > gap cumulative-sum
     idiom); absent from the reference (SURVEY.md §2.8: 'no
@@ -206,7 +203,7 @@ def session_stream(
     history.
     """
     return (
-        parsed.withWatermark("ts", watermark)
+        parsed.withWatermark("ts", "1 hour")
         .groupBy(F.session_window(F.col("ts"), gap).alias("_s"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -222,18 +219,16 @@ def session_stream(
     )
 
 
-def sliding_stream(
-    parsed: DataFrame,
-    size: str = "2 hours",
-    slide: str = "1 hour",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Sliding-window aggregation: each event lands in size/slide
-    overlapping windows (here 2). Append mode emits a window when the
-    watermark passes its end. Absent from the reference (tumbling only)."""
+def sliding_stream(parsed: DataFrame) -> DataFrame:
+    """Sliding-window aggregation: 2-hour windows sliding by 1 hour, so
+    each event lands in 2 overlapping windows. Append mode emits a window
+    when the 1-hour watermark passes its end. Absent from the reference
+    (tumbling only)."""
     return (
-        parsed.withWatermark("ts", watermark)
-        .groupBy(F.window(F.col("ts"), size, slide).alias("_w"), F.col("user_id"))
+        parsed.withWatermark("ts", "1 hour")
+        .groupBy(
+            F.window(F.col("ts"), "2 hours", "1 hour").alias("_w"), F.col("user_id")
+        )
         .agg(F.count(F.lit(1)).alias("n_events"), F.max("value").alias("max_value"))
         .select(
             "user_id",
@@ -245,18 +240,16 @@ def sliding_stream(
     )
 
 
-def stream_stream_conversion_join(
-    clicks: DataFrame, purchases: DataFrame, horizon: str = "1 hour"
-) -> DataFrame:
+def stream_stream_conversion_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """Stream-stream inner join with an event-time interval bound: each
-    purchase matches clicks by the same user within the preceding
-    ``horizon``. Both sides are watermarked so the state store can evict
-    rows that can no longer match (state is bounded by watermark +
-    interval, the canonical Structured Streaming interval-join recipe).
+    purchase matches clicks by the same user within the preceding hour.
+    Both sides are watermarked so the state store can evict rows that can
+    no longer match (state is bounded by watermark + interval, the
+    canonical Structured Streaming interval-join recipe).
     Absent from the reference (SURVEY.md §2.8: 'no stream-stream joins').
     """
     c = (
-        clicks.withWatermark("ts", horizon)
+        clicks.withWatermark("ts", "1 hour")
         .select(
             F.col("user_id"),
             F.col("ts").alias("click_ts"),
@@ -264,7 +257,7 @@ def stream_stream_conversion_join(
         )
     )
     p = (
-        purchases.withWatermark("ts", horizon)
+        purchases.withWatermark("ts", "1 hour")
         .select(
             F.col("user_id"),
             F.col("ts").alias("purchase_ts"),
@@ -277,7 +270,7 @@ def stream_stream_conversion_join(
         [
             c["user_id"] == p["user_id"],
             p["purchase_ts"] >= c["click_ts"],
-            p["purchase_ts"] <= c["click_ts"] + F.expr(f"INTERVAL {horizon}"),
+            p["purchase_ts"] <= c["click_ts"] + F.expr("INTERVAL 1 hour"),
         ],
         "inner",
     ).select(
@@ -295,14 +288,13 @@ def incremental_dedup_stream(
     corpus_sigs: DataFrame,
     out_path: str,
     checkpoint: str,
-    threshold: float = 0.2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ):
     """Continuous-ingestion dedup: screen each micro-batch of incoming
-    documents against a STATIC corpus signature table (built once by
+    ``(doc_id, text)`` documents against a STATIC corpus signature table
+    (built once by
     :func:`~project_bigdata_spark.operators.dedup.minhash_signatures`
-    and persisted) and append a per-doc novelty verdict to ``out_path``.
+    and persisted) and append a per-doc novelty verdict (a match is a
+    Jaccard of at least 0.2) to ``out_path``.
 
     Runs through ``foreachBatch`` so the BATCH incremental-dedup operator
     executes verbatim per micro-batch — the two-sided LSH banding needs a
@@ -318,17 +310,17 @@ def incremental_dedup_stream(
     from project_bigdata_spark.operators import dedup as DD
 
     def _screen(batch_df: DataFrame, batch_id: int) -> None:
-        sigs_new = DD.minhash_signatures(batch_df, id_col, text_col).persist()
-        pairs = DD.minhash_incremental_pairs(sigs_new, corpus_sigs, id_col)
+        sigs_new = DD.minhash_signatures(batch_df, "doc_id", "text").persist()
+        pairs = DD.minhash_incremental_pairs(sigs_new, corpus_sigs, "doc_id")
         ver = DD.jaccard_verify(
-            pairs, sigs_new.unionByName(corpus_sigs), id_col, threshold
+            pairs, sigs_new.unionByName(corpus_sigs), "doc_id", 0.2
         )
         m = ver.groupBy("id_a").agg(_F.count(_F.lit(1)).alias("n_matches"))
         out = (
-            batch_df.select(id_col)
-            .join(m.withColumnRenamed("id_a", id_col), on=id_col, how="left")
+            batch_df.select("doc_id")
+            .join(m.withColumnRenamed("id_a", "doc_id"), on="doc_id", how="left")
             .select(
-                _F.col(id_col),
+                _F.col("doc_id"),
                 _F.coalesce("n_matches", _F.lit(0))
                 .cast("int")
                 .alias("n_corpus_matches"),
@@ -350,7 +342,6 @@ def dedup_stream(
     parsed: DataFrame,
     key_cols: tuple[str, ...] = ("event_id",),
     watermark: str = "1 hour",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Exactly-once-per-key streaming dedup with BOUNDED state:
     ``dropDuplicatesWithinWatermark`` keeps one state row per key only
@@ -364,7 +355,7 @@ def dedup_stream(
     horizon are suppressed, later replays are not (by then the upstream
     retry window has passed). State size ~ keys per watermark window.
     """
-    return parsed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    return parsed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         list(key_cols)
     )
 
@@ -375,11 +366,9 @@ def bloom_screen_stream(
     bloom: DataFrame,
     out_path: str,
     checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ):
     """Continuous EXACT incremental dedup: screen each micro-batch of
-    incoming documents against a static corpus digest table, with the
+    incoming ``(doc_id, text)`` documents against a static corpus digest table, with the
     corpus's Bloom bitmap (built once by
     :func:`~project_bigdata_spark.operators.dedup.bloom_build` and
     persisted, like the MinHash signature table in
@@ -397,23 +386,23 @@ def bloom_screen_stream(
     from project_bigdata_spark.operators import dedup as DD
 
     def _screen(batch_df: DataFrame, batch_id: int) -> None:
-        digest = _F.md5(_F.col(text_col))
+        digest = _F.md5(_F.col("text"))
         probed = DD.bloom_probe(
-            batch_df.select(_F.col(id_col), digest.alias("digest")),
+            batch_df.select(_F.col("doc_id"), digest.alias("digest")),
             bloom,
             _F.col("digest"),
         )
         confirmed = (
             probed.filter(_F.col("bloom_hit"))
             .join(corpus_digests, on="digest", how="left_semi")
-            .select(id_col)
+            .select("doc_id")
             .withColumn("is_corpus_dup", _F.lit(True))
         )
         out = (
-            batch_df.select(id_col)
-            .join(confirmed, on=id_col, how="left")
+            batch_df.select("doc_id")
+            .join(confirmed, on="doc_id", how="left")
             .select(
-                _F.col(id_col),
+                _F.col("doc_id"),
                 _F.coalesce("is_corpus_dup", _F.lit(False)).alias(
                     "is_corpus_dup"
                 ),
@@ -434,12 +423,10 @@ def drift_monitor_stream(
     baseline_counts: DataFrame,
     out_path: str,
     checkpoint: str,
-    value_col: str = "value",
-    bin_width: float = 25.0,
 ):
-    """Streaming drift monitor: every micro-batch's value distribution is
-    PSI-scored against a static baseline histogram (the training
-    snapshot), and one (batch_id, n_rows, psi) row is appended to a
+    """Streaming drift monitor: every micro-batch's ``value`` distribution
+    (25-wide bins) is PSI-scored against a static baseline histogram (the
+    training snapshot), and one (batch_id, n_rows, psi) row is appended to a
     metrics table — the alarm wire for "serving data stopped looking
     like training data", evaluated continuously instead of at the next
     retrain.
@@ -458,7 +445,7 @@ def drift_monitor_stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         counts = (
             batch_df.select(
-                F.floor(F.col(value_col) / F.lit(bin_width))
+                F.floor(F.col("value") / F.lit(25.0))
                 .cast("bigint")
                 .alias("bin")
             )

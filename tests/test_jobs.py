@@ -15,6 +15,8 @@ def test_batch_job_all_layers(spark, tmp_path):
     assert 0 < counts["gold"] < 1000
     gold = spark.read.parquet(f"{out}/gold")
     assert {"user_id", "hour_ts", "max_value", "event_types"} <= set(gold.columns)
+    # partition columns materialized as Hive-style dirs
+    assert (tmp_path / "med" / "gold" / "year=2024" / "month=1").exists()
 
 
 def test_batch_job_incremental_layers(spark, tmp_path):

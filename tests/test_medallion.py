@@ -62,15 +62,6 @@ def test_gold_hourly_grain_and_arrays(spark):
     assert by_hour[(1, 11)].category == "Unhealthy for Sensitive Groups"
 
 
-def test_run_batch_medallion_observe_counts(spark, tmp_path):
-    counts = M.run_batch_medallion(_raw(spark), str(tmp_path / "out"))
-    assert counts == {"bronze": 5, "silver": 3, "gold": 2}
-    gold = spark.read.parquet(str(tmp_path / "out" / "gold"))
-    assert gold.count() == 2
-    # partition columns materialized as Hive-style dirs
-    assert (tmp_path / "out" / "gold" / "year=2024").exists()
-
-
 def test_salted_gold_matches_plain_gold(spark):
     """Two-stage salted aggregation is semantics-preserving vs the plain
     gold aggregate (operators/skew.py)."""

@@ -9,9 +9,9 @@ is the broad tripwire — any dtype drift in ANY table fails here first,
 naming the exact column, instead of surfacing as a cryptic
 DATATYPE_MISMATCH deep inside a query.
 
-A failure means: decide whether the new encoding needs a normalization
-branch in ``sources/registry.py`` (like ``normalize_event_ts``), then
-update the pin.
+A failure means: decide whether the new encoding needs its own read path
+in ``sources/registry.py`` (like the ``events.ts`` unit check in
+``declared_schema``), then update the pin.
 
 ``load_table`` reads with the schemas declared in ``registry.SCHEMAS``, so
 the post-load pins alone would pass by construction. The footer sweep
@@ -77,7 +77,7 @@ EXPECTED = {
     },
     "events": {
         # MUST load as plain timestamp whatever the parquet encoding —
-        # normalize_event_ts + RUNTIME_CONFS own this contract
+        # registry.declared_schema + RUNTIME_CONFS own this contract
         "event_id": "bigint",
         "ts": "timestamp",
         "user_id": "bigint",

@@ -250,20 +250,6 @@ def test_parquet_timestamp_encoding_matrix(spark, tmp_path):
     assert len(results["nanos"]) > 0
 
 
-def test_normalize_event_ts_ntz_branch(spark):
-    """Belt-and-braces: a caller-provided frame whose ``ts`` is already
-    TIMESTAMP_NTZ (read before our conf landed) is cast to ``timestamp``
-    value-preservingly (session tz pinned UTC)."""
-    ntz = spark.sql(
-        "SELECT TIMESTAMP_NTZ '2024-03-01 12:34:56.789' AS ts, 1 AS id"
-    )
-    assert dict(ntz.dtypes)["ts"] == "timestamp_ntz"
-    fixed = R.normalize_event_ts(ntz)
-    assert dict(fixed.dtypes)["ts"] == "timestamp"
-    out = fixed.select(F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSS")).collect()
-    assert out[0][0] == "2024-03-01 12:34:56.789"
-
-
 def test_python_datasource_partitions_and_determinism(spark):
     from project_bigdata_spark.sources import pysource
 

@@ -74,12 +74,10 @@ def plain_hourly(df, cap=None):
     """The unsalted twin of salted_hourly_gold's aggregate."""
     from pyspark.sql import functions as F
 
+    from project_bigdata_spark.functions import arrays as A
+
     hour = F.date_trunc("hour", F.col("ts")).alias("hour_ts")
-    pairs = F.sort_array(
-        F.collect_list(
-            F.struct(F.col("event_type").alias("k"), F.col("value").alias("v"))
-        )
-    )
+    pairs = A.collect_sorted_pairs(F.col("event_type"), F.col("value"))
     if cap is not None:
         pairs = F.slice(pairs, 1, cap)
     return (
@@ -89,8 +87,8 @@ def plain_hourly(df, cap=None):
             F.count(F.lit(1)).alias("n_events"),
             pairs.alias("pairs"),
         )
-        .withColumn("event_types", F.transform("pairs", lambda p: p["k"]))
-        .withColumn("values", F.transform("pairs", lambda p: p["v"]))
+        .withColumn("event_types", A.pairs_keys(F.col("pairs")))
+        .withColumn("values", A.pairs_values(F.col("pairs")))
         .drop("pairs")
     )
 

@@ -70,7 +70,8 @@ def main() -> None:
         "P11": "`plans/_norm.py:rnd` — sign-aware deterministic rounding pinned in every "
         "oracle query (the HALF_UP/banker's divergence is documented in `functions/aqi.py`)",
         "A2": "`streaming/pipeline.py:gold_stream` + watermark finalization test",
-        "A9": "`operators/medallion.py:run_batch_medallion` observe() counts (tested)",
+        "A9": "`jobs/batch.py:run` observe() counts per layer (`tests/test_jobs.py`) "
+        "+ catalog entry `observe_layer_counts`",
         "W8": "subsumed by Window.orderBy everywhere; standalone in `top_k_latest`",
         "F5": "`to_timestamp` handles ISO-8601 incl. Z (bronze P5 path)",
         "F12": "`functions/aqi.py:aqi_recommendation` + test",
